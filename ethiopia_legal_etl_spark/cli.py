@@ -8,7 +8,10 @@ process-level surface (SURVEY.md §3):
 re-expresses entry points 1-2 (`python scrape_pdf_links.py` +
 `python fetch_legal_docs.py` / `python "import requests.py"`): read the
 links hand-off file, skip already-ingested docs, fetch, extract, build
-document records, write JSONL docs + rejects.
+document records, write JSONL docs + rejects, and print the run's
+outcome counts as one JSON line:
+
+  {"docs": 3, "fetch/content-type": 1, "extract/empty": 1}
 
 The network/PDF stages use the production fetcher/extractor
 (ingest.default_fetcher/default_extractor); everything else is the same
@@ -18,6 +21,7 @@ offline-tested DataFrame graph.
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -47,12 +51,12 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     else:
         done = spark.createDataFrame([], "base_name: string")
 
-    docs, rejects = ingest_pipeline(
-        links, done, fetch_partitions=args.partitions
-    )
+    result = ingest_pipeline(links, done, fetch_partitions=args.partitions)
+    docs, rejects = result
     write_documents_json(docs, args.out)
     rejects.write.mode("overwrite").json(args.rejects)
     print(f"ingest complete: docs -> {args.out}, rejects -> {args.rejects}")
+    print(json.dumps(result.counts))
     return 0
 
 

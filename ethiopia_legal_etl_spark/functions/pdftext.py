@@ -21,10 +21,10 @@ subset those files need, from the public PDF 1.7 spec (ISO 32000-1):
 
 Not a general PDF library: no encryption, no LZW/ASCII filters, no
 predictors on content streams, no Type3 fonts — none of which the
-reference corpus uses. Scale note: runs inside the Arrow-batched
-extract_stage (mapInPandas), one document per row, so the cost model is
-identical to the injected-extractor path; nothing here touches the
-driver.
+reference corpus uses. Scale note: runs inside the ingest pipeline's
+Arrow-batched per-URL pass (mapInPandas), one document per row, so the
+cost model is identical to the injected-extractor path; nothing here
+touches the driver.
 """
 
 from __future__ import annotations
@@ -501,7 +501,7 @@ def _page_text(doc: _Doc, page: dict, fonts: dict[str, _FontMap]) -> str:
 
 def extract_pages(body: bytes) -> list[str]:
     """Extract text per page from raw PDF bytes (the Extractor
-    signature used by operators/ingest.py extract_stage).
+    signature used by operators/ingest.py).
 
     Raises ValueError if the bytes are not a parseable PDF (per-record
     error isolation upstream turns that into an `error` column, A-19).

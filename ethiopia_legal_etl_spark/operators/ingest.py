@@ -1,39 +1,39 @@
-"""The reference's ingest pipeline re-architected as one lazy DataFrame
-graph (SURVEY.md §3 entry points 1-3):
+"""The reference's ingest pipeline re-architected as one DataFrame graph
+(SURVEY.md §3 entry points 1-3):
 
-  links → anti-join(done) → fetch → content-type filter → extract
-        → empty filter (rejects routed, not deleted) → doc projection
+  links → anti-join(done) → one per-URL pass: fetch → content-type check
+        → extract → empty check → documents | rejects (routed, not deleted)
 
 The reference iterates URLs one at a time in a single thread
 (`fetch_legal_docs.py:32`, `import requests.py:120-121`); here the
-link set is a DataFrame and fetch/extract are Arrow-batched
-mapInPandas stages — parallelism is the partition count.
+link set is a DataFrame and that per-URL loop is an Arrow-batched
+mapInPandas stage — parallelism is the partition count.
+
+Fetch and extract run in the same task, once per URL, and the pass
+emits one outcome row per URL. PDF bodies never leave the Python
+worker, and the outcome rows are materialized once (localCheckpoint),
+so writing documents and rejects re-runs neither side effect.
 
 Network and PDF-codec access are injectable (fetcher/extractor
 callables) so the pipeline is offline-testable (FIXTURES.md §2.3) and
 codec-agnostic (pdfplumber vs PyMuPDF, both in the reference's
 requirements.txt, may be absent here — SURVEY.md §7 hard-part (a)).
-
-Fetch and extract are SEPARATE stages (repartitioned between) so
-CPU-heavy extraction stragglers don't hold HTTP connections open
-(SURVEY.md §4 physical-design note).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.functions.text import (
-    base_name_from_url,
-    is_pdf_content_type,
-)
+from ethiopia_legal_etl_spark.functions.text import base_name_from_url
 from ethiopia_legal_etl_spark.operators.etl import build_document_record
 
 FETCHED_SCHEMA = "url string, status int, content_type string, body binary, error string"
-EXTRACTED_SCHEMA = "url string, content string, error string"
+# one row per URL; stage is null for a document, else the reject's stage
+OUTCOME_SCHEMA = "url string, content string, stage string, error string"
+REJECT_STAGES = ("fetch/content-type", "extract/empty")
 
 # fetcher: url -> (status, content_type, body bytes); raises on error
 Fetcher = Callable[[str], tuple[int, str, bytes]]
@@ -43,9 +43,7 @@ Extractor = Callable[[bytes], list[str]]
 
 def default_fetcher(url: str) -> tuple[int, str, bytes]:
     """Production fetcher (requests, 60s timeout like
-    import requests.py:64). One Session per partition is created in
-    fetch_stage — connection reuse, the reference's only concurrency
-    trick (import requests.py:118), kept per-partition here."""
+    import requests.py:64)."""
     import requests  # deferred: executors only
 
     resp = requests.get(url, timeout=60)
@@ -88,28 +86,34 @@ def incremental_skip(links: DataFrame, done_base_names: DataFrame) -> DataFrame:
     return keyed.join(done_base_names, "base_name", "left_anti")
 
 
-def fetch_stage(links: DataFrame, fetcher: Fetcher | None = None) -> DataFrame:
-    """A-7: per-row HTTP fetch in mapInPandas; errors isolated per
-    record (A-19 — fetch_legal_docs.py:93-96) into an `error` column
-    instead of killing the job."""
-    import pandas as pd
+def _error(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
 
-    fetch = fetcher or default_fetcher
+
+def _fetch_one(fetch: Fetcher, url: str) -> tuple:
+    """A-7: (status, content_type, body, error) for one URL. A failed
+    fetch becomes an error string instead of killing the job (per-record
+    isolation, A-19 — fetch_legal_docs.py:93-96)."""
+    try:
+        status, ctype, body = fetch(url)
+    except Exception as exc:
+        return None, None, None, _error(exc)
+    return status, ctype, body, None
+
+
+def _map_urls(links: DataFrame, outcome: Callable[[str], tuple]) -> DataFrame:
+    """One OUTCOME_SCHEMA row per URL of ``links``: ``outcome(url)``,
+    run once per URL inside a mapInPandas task."""
+    import pandas as pd
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for url in pdf["url"]:
-                try:
-                    status, ctype, body = fetch(url)
-                    rows.append((url, status, ctype, body, None))
-                except Exception as exc:  # per-record isolation (A-19)
-                    rows.append((url, None, None, None, f"{type(exc).__name__}: {exc}"))
             yield pd.DataFrame(
-                rows, columns=["url", "status", "content_type", "body", "error"]
+                [outcome(url) for url in pdf["url"]],
+                columns=["url", "content", "stage", "error"],
             )
 
-    return links.select("url").mapInPandas(run, schema=FETCHED_SCHEMA)
+    return links.select("url").mapInPandas(run, schema=OUTCOME_SCHEMA)
 
 
 def polite_fetch_stage(
@@ -118,10 +122,11 @@ def polite_fetch_stage(
     min_interval_s: float = 0.0,
     n_partitions: int | None = None,
 ) -> DataFrame:
-    """Crawler-politeness variant of fetch_stage: URLs are
-    repartitioned BY HOST so each host's requests run inside one task
-    (strictly serial per host), with a minimum inter-request interval
-    enforced task-side. Different hosts still fetch in parallel.
+    """Crawler-politeness fetch: URLs are repartitioned BY HOST so each
+    host's requests run inside one task (strictly serial per host), with
+    a minimum inter-request interval enforced task-side. Different hosts
+    still fetch in parallel. Returns FETCHED_SCHEMA rows, with the same
+    per-record error isolation as the batch pipeline.
 
     Why this exists: the reference fetches serially from one process
     (fetch_legal_docs.py:32 loop) and is accidentally polite; naively
@@ -130,7 +135,7 @@ def polite_fetch_stage(
     Spark shape for per-key serialization — hash collisions may place
     several hosts in one task (still polite, just less parallel),
     never one host across several tasks (which would break the rate
-    contract). Same per-record error isolation as fetch_stage.
+    contract).
 
     The host repartition uses an EXPLICIT partition count
     (REPARTITION_BY_NUM): a plain repartition(col) is subject to AQE
@@ -158,13 +163,7 @@ def polite_fetch_stage(
                         if wait > 0:
                             time.sleep(wait)
                     last[host] = time.monotonic()
-                try:
-                    status, ctype, body = fetch(url)
-                    rows.append((url, status, ctype, body, None))
-                except Exception as exc:  # per-record isolation (A-19)
-                    rows.append(
-                        (url, None, None, None, f"{type(exc).__name__}: {exc}")
-                    )
+                rows.append((url, *_fetch_one(fetch, url)))
             yield pd.DataFrame(
                 rows, columns=["url", "status", "content_type", "body", "error"]
             )
@@ -179,40 +178,16 @@ def polite_fetch_stage(
     )
 
 
-def content_type_filter(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """A-8: keep responses whose Content-Type CONTAINS application/pdf
-    (substring, not equality — §2.C-5); everything else → rejects."""
-    ok_pred = F.col("error").isNull() & is_pdf_content_type(
-        F.coalesce(F.col("content_type"), F.lit(""))
-    )
-    ok = fetched.where(ok_pred)
-    rejects = fetched.where(~ok_pred | ok_pred.isNull())
-    return ok, rejects
+class IngestResult(tuple):
+    """``(docs, rejects)``, plus ``counts``: the outcome counts observed
+    during the single pass — ``docs`` and one entry per reject stage."""
 
+    counts: dict[str, int]
 
-def extract_stage(
-    fetched: DataFrame, extractor: Extractor | None = None
-) -> DataFrame:
-    """A-11: PDF → text. Batch-script semantics: drop EMPTY pages
-    before joining with \\n (fetch_legal_docs.py:62-64) — NOT the
-    mcp_server variant that keeps them (§2.C-3)."""
-    import pandas as pd
-
-    extract = extractor or default_extractor
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, body in zip(pdf["url"], pdf["body"]):
-                try:
-                    pages = extract(bytes(body))
-                    content = "\n".join(p for p in pages if p)  # drop empties
-                    rows.append((url, content, None))
-                except Exception as exc:
-                    rows.append((url, None, f"{type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(rows, columns=["url", "content", "error"])
-
-    return fetched.select("url", "body").mapInPandas(run, schema=EXTRACTED_SCHEMA)
+    def __new__(cls, docs: DataFrame, rejects: DataFrame, counts: dict[str, int]):
+        result = super().__new__(cls, (docs, rejects))
+        result.counts = counts
+        return result
 
 
 def ingest_pipeline(
@@ -222,44 +197,64 @@ def ingest_pipeline(
     extractor: Extractor | None = None,
     ingest_date: str | None = None,
     fetch_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> IngestResult:
     """Full A-pipeline; returns (documents, rejects).
 
+    Every URL left after the incremental skip is fetched and, if it is a
+    PDF, extracted exactly once: the per-URL pass runs eagerly here and
+    its outcome rows are localCheckpointed, so both returned DataFrames
+    read the materialized rows. Each URL lands in exactly one of them.
+
     rejects carries (url, stage, error) — the engine's replacement for
-    the reference's silent drop (§2.C-8).
+    the reference's silent drop (§2.C-8). stage is "fetch/content-type"
+    (network error, or "not pdf: <type>") or "extract/empty" (parse
+    error, or "empty document").
     """
+    fetch = fetcher or default_fetcher
+    extract = extractor or default_extractor
+
+    def outcome(url: str) -> tuple:
+        # the batch script's loop body (fetch_legal_docs.py:32-96)
+        _, ctype, body, error = _fetch_one(fetch, url)
+        # A-8: Content-Type CONTAINS application/pdf (substring, §2.C-5)
+        if error is None and "application/pdf" not in (ctype or ""):
+            error = f"not pdf: {ctype or ''}"
+        if error is not None:
+            return url, None, "fetch/content-type", error
+        try:
+            # A-11: drop EMPTY pages before the \n join
+            # (fetch_legal_docs.py:62-64), unlike the mcp variant (§2.C-3)
+            content = "\n".join(p for p in extract(bytes(body)) if p)
+        except Exception as exc:
+            return url, None, "extract/empty", _error(exc)
+        # A-12: SQL trim() semantics, which strip only U+0020: a text of
+        # tabs, newlines or NBSP is a document
+        if not content.strip(" "):
+            return url, None, "extract/empty", "empty document"
+        return url, content, None, None
+
     todo = incremental_skip(links, done_base_names)
     if fetch_partitions:
         # spread network/CPU work; the reference's loop is n=1
         todo = todo.repartition(fetch_partitions, "url")
 
-    fetched = fetch_stage(todo, fetcher)
-    pdf_ok, ct_rejects = content_type_filter(fetched)
-
-    extracted = extract_stage(pdf_ok, extractor)
-    nonempty = extracted.where(
-        F.col("error").isNull() & (F.trim(F.col("content")) != "")
+    stage = F.col("stage")
+    obs = Observation()
+    outcomes = (
+        _map_urls(todo, outcome)
+        .observe(
+            obs,
+            F.count(F.when(stage.isNull(), 1)).alias("docs"),
+            *(F.count(F.when(stage == s, 1)).alias(s) for s in REJECT_STAGES),
+        )
+        .localCheckpoint()
     )
-    ex_rejects = extracted.where(
-        F.col("error").isNotNull() | (F.trim(F.col("content")) == "")
-    )
-
     docs = build_document_record(
-        nonempty.withColumn("sourceURL", F.col("url")),
-        url_col="sourceURL",
-        content_col="content",
+        outcomes.where(stage.isNull()).withColumnRenamed("url", "sourceURL"),
         ingest_date=ingest_date,
     )
-    rejects = ct_rejects.select(
-        "url", F.lit("fetch/content-type").alias("stage"),
-        F.coalesce("error", F.concat(F.lit("not pdf: "), "content_type")).alias("error"),
-    ).unionByName(
-        ex_rejects.select(
-            "url", F.lit("extract/empty").alias("stage"),
-            F.coalesce("error", F.lit("empty document")).alias("error"),
-        )
-    )
-    return docs, rejects
+    rejects = outcomes.where(stage.isNotNull()).select("url", "stage", "error")
+    return IngestResult(docs, rejects, obs.get)
 
 
 def write_binary_files(df: DataFrame, out_dir: str,
@@ -288,7 +283,7 @@ def ingest_single(
     ingest_date: str | None = None,
 ) -> dict:
     """A-20 service parity: POST /ingest semantics (mcp_server.py:17-43)
-    — ONE request through the same DataFrame graph as the batch path.
+    — ONE request through a one-row DataFrame pass like the batch path's.
 
     Variant semantics preserved (§2.C-3 and mcp_server.py:17-43):
     - keeps empty pages as '' before the newline join
@@ -299,39 +294,28 @@ def ingest_single(
       record (mcp_server.py:24,30);
     - response record has NO year and NO tags fields (mcp_server.py:32-41).
     """
+    fetch = fetcher or default_fetcher
+    extract = extractor or default_extractor
+
+    def outcome(url: str) -> tuple:
+        _, _, body, error = _fetch_one(fetch, url)
+        if error is not None:
+            return url, None, "fetch", error
+        try:
+            return url, "\n".join(p or "" for p in extract(bytes(body))), None, None
+        except Exception as exc:
+            return url, None, "extract", _error(exc)
+
     links = spark.createDataFrame([(pdf_url,)], "url: string")
-    pdf_ok = fetch_stage(links, fetcher)  # no content-type filter: mcp parity
-
-    # mcp variant: keep empty pages (join with \n, no filter)
-    base_extract = extractor or default_extractor
-
-    def keep_empty(body: bytes) -> list[str]:
-        return [p or "" for p in base_extract(body)]
-
-    import pandas as pd
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for url, body in zip(pdf["url"], pdf["body"]):
-                try:
-                    rows.append((url, "\n".join(keep_empty(bytes(body))), None))
-                except Exception as exc:
-                    rows.append((url, None, f"{type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(rows, columns=["url", "content", "error"])
-
-    extracted = pdf_ok.where(F.col("error").isNull()).select(
-        "url", "body"
-    ).mapInPandas(run, schema=EXTRACTED_SCHEMA)
-    rows = extracted.collect()  # single-row path: collect IS the response
-    if not rows:
+    row = _map_urls(links, outcome).collect()[0]  # single row: collect IS the response
+    if row["stage"] == "fetch":
         return {"error": "Download failed"}
-    if rows[0]["error"] is not None:
-        return {"error": f"PDF parse failed: {rows[0]['error']}"}
+    if row["stage"] == "extract":
+        return {"error": f"PDF parse failed: {row['error']}"}
     doc_row = (
         build_document_record(
             spark.createDataFrame(
-                [(pdf_url, rows[0]["content"])], "sourceURL string, content string"
+                [(pdf_url, row["content"])], "sourceURL string, content string"
             ),
             ingest_date=ingest_date,
         )

@@ -9,9 +9,6 @@ from pyspark.sql import functions as F
 
 from ethiopia_legal_etl_spark.operators.etl import build_document_record
 from ethiopia_legal_etl_spark.operators.ingest import (
-    content_type_filter,
-    extract_stage,
-    fetch_stage,
     incremental_skip,
     ingest_pipeline,
 )
@@ -23,6 +20,8 @@ RESPONSES = {
     f"{BASE}/vol%2002.pdf": (200, "application/pdf;charset=binary", b"%PDF-GOOD-2"),
     f"{BASE}/notpdf.pdf": (200, "text/html", b"<html>nope</html>"),
     f"{BASE}/empty.pdf": (200, "application/pdf", b"%PDF-EMPTY"),
+    f"{BASE}/space.pdf": (200, "application/pdf", b"%PDF-SPACE"),
+    f"{BASE}/tab.pdf": (200, "application/pdf", b"%PDF-TAB"),
     f"{BASE}/boom.pdf": None,  # network error
 }
 
@@ -41,6 +40,10 @@ def fake_extractor(body: bytes):
         return ["no year in this one"]
     if b"EMPTY" in body:
         return ["", "", ""]
+    if b"SPACE" in body:
+        return [" "]  # only U+0020: empty, like SQL trim()
+    if b"TAB" in body:
+        return ["\t"]  # trim() keeps tabs: a document
     raise ValueError("parse failure")
 
 
@@ -58,30 +61,46 @@ def test_incremental_skip_keys_on_base_name(spark, links):
     assert f"{BASE}/vol%2002.pdf" in urls  # base 'vol_02' != 'vol01'
 
 
+def run_pipeline(links, fetcher=fake_fetcher, extractor=fake_extractor):
+    """(docs by url, rejects by url) of one ingest_pipeline pass."""
+    done = links.sparkSession.createDataFrame([], "base_name: string")
+    docs, rejects = ingest_pipeline(
+        links, done, fetcher=fetcher, extractor=extractor,
+        ingest_date="2025-08-15",
+    )
+    return (
+        {r["sourceURL"]: r for r in docs.collect()},
+        {r["url"]: r for r in rejects.collect()},
+    )
+
+
 def test_fetch_isolates_per_record_errors(spark, links):
-    fetched = fetch_stage(links, fake_fetcher)
-    rows = {r["url"]: r for r in fetched.collect()}
-    assert rows[f"{BASE}/boom.pdf"]["error"].startswith("ConnectionError")
-    assert rows[f"{BASE}/vol01.pdf"]["error"] is None
-    assert bytes(rows[f"{BASE}/vol01.pdf"]["body"]) == b"%PDF-GOOD-1"
+    # the extractor echoes the fetched body, so content shows the bytes
+    docs, rejects = run_pipeline(links, extractor=lambda body: [body.decode()])
+    assert rejects[f"{BASE}/boom.pdf"]["error"].startswith("ConnectionError")
+    assert rejects[f"{BASE}/boom.pdf"]["stage"] == "fetch/content-type"
+    assert f"{BASE}/vol01.pdf" not in rejects
+    assert docs[f"{BASE}/vol01.pdf"]["content"] == "%PDF-GOOD-1"
 
 
 def test_content_type_substring_filter(spark, links):
-    fetched = fetch_stage(links, fake_fetcher)
-    ok, rejects = content_type_filter(fetched)
-    ok_urls = {r["url"] for r in ok.collect()}
-    assert f"{BASE}/vol%2002.pdf" in ok_urls  # charset suffix accepted (§2.C-5)
-    assert f"{BASE}/notpdf.pdf" not in ok_urls
-    assert f"{BASE}/boom.pdf" not in ok_urls
+    docs, rejects = run_pipeline(links)
+    assert f"{BASE}/vol%2002.pdf" in docs  # charset suffix accepted (§2.C-5)
+    assert f"{BASE}/notpdf.pdf" not in docs
+    assert rejects[f"{BASE}/notpdf.pdf"]["error"] == "not pdf: text/html"
+    assert f"{BASE}/boom.pdf" not in docs
+
+    # a missing Content-Type counts as "", so it is not a PDF
+    untyped = spark.createDataFrame([(f"{BASE}/vol01.pdf",)], "url: string")
+    docs, rejects = run_pipeline(untyped, fetcher=lambda url: (200, None, b"%PDF-GOOD-1"))
+    assert not docs
+    assert rejects[f"{BASE}/vol01.pdf"]["error"] == "not pdf: "
 
 
 def test_extract_drops_empty_pages_and_joins_newline(spark, links):
-    fetched = fetch_stage(links, fake_fetcher)
-    ok, _ = content_type_filter(fetched)
-    extracted = extract_stage(ok, fake_extractor)
-    rows = {r["url"]: r for r in extracted.collect()}
+    docs, _ = run_pipeline(links)
     # batch semantics: empty page removed BEFORE join (§2.C-3)
-    assert rows[f"{BASE}/vol01.pdf"]["content"] == "ፍርድ ቤት ውሳኔ 2015\nገጽ ሁለት"
+    assert docs[f"{BASE}/vol01.pdf"]["content"] == "ፍርድ ቤት ውሳኔ 2015\nገጽ ሁለት"
 
 
 def test_full_pipeline_documents_and_rejects(spark, links):
@@ -91,7 +110,7 @@ def test_full_pipeline_documents_and_rejects(spark, links):
         ingest_date="2025-08-15",
     )
     doc_rows = {r["title"]: r for r in docs.collect()}
-    assert set(doc_rows) == {"vol01", "vol 02"}  # %20 → _ → ' ' chain
+    assert set(doc_rows) == {"vol01", "vol 02", "tab"}  # %20 → _ → ' ' chain
     v1 = doc_rows["vol01"]
     assert v1["year"] == "2015"
     assert v1["category"] == "CassationDecision"
@@ -101,8 +120,13 @@ def test_full_pipeline_documents_and_rejects(spark, links):
     assert doc_rows["vol 02"]["year"] == ""  # '' sentinel, not null
 
     rej = {r["url"]: r for r in rejects.collect()}
-    assert set(rej) == {f"{BASE}/notpdf.pdf", f"{BASE}/boom.pdf", f"{BASE}/empty.pdf"}
+    assert set(rej) == {
+        f"{BASE}/notpdf.pdf", f"{BASE}/boom.pdf", f"{BASE}/empty.pdf", f"{BASE}/space.pdf"
+    }
     assert rej[f"{BASE}/empty.pdf"]["stage"] == "extract/empty"
+    assert rej[f"{BASE}/space.pdf"]["stage"] == "extract/empty"
+    assert rej[f"{BASE}/space.pdf"]["error"] == "empty document"
+    assert doc_rows["tab"]["content"] == "\t"
 
 
 def test_binary_sink_writes_per_row_files(spark, tmp_path):

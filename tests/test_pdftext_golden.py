@@ -63,27 +63,24 @@ def test_extract_pages_rejects_non_pdf():
 
 @needs_fixtures
 def test_default_extractor_real_bytes_through_spark(spark):
-    """A-11 end-to-end with NO injected fake: binary rows of the real
-    reference PDFs through extract_stage (mapInPandas) using
+    """A-11 end-to-end with NO injected fake extractor: the real
+    reference PDFs through ingest_pipeline's mapInPandas pass using
     default_extractor, then the A-13 year regex on the real content."""
-    from ethiopia_legal_etl_spark.functions.text import extract_year
-    from ethiopia_legal_etl_spark.operators.ingest import extract_stage
+    from ethiopia_legal_etl_spark.operators.ingest import ingest_pipeline
 
-    from pyspark.sql import functions as F
-
-    rows = [
-        (f"https://example.test/{os.path.basename(p)}", open(p, "rb").read())
+    bodies = {
+        f"https://example.test/{os.path.basename(p)}": open(p, "rb").read()
         for p in (VOL01, VOL02)
-    ]
-    fetched = spark.createDataFrame(rows, "url string, body binary")
-    docs = extract_stage(fetched)  # default extractor: pure-Python path
-    got = {
-        r["url"]: r
-        for r in docs.withColumn("year", extract_year(F.col("content"))).collect()
     }
+    links = spark.createDataFrame([(u,) for u in bodies], "url: string")
+    done = spark.createDataFrame([], "base_name: string")
+    docs, rejects = ingest_pipeline(  # default extractor: pure-Python path
+        links, done, fetcher=lambda url: (200, "application/pdf", bodies[url])
+    )
+    assert rejects.count() == 0
+    got = {r["sourceURL"]: r for r in docs.collect()}
     assert len(got) == 2
     for r in got.values():
-        assert r["error"] is None
         assert r["content"] and ETHIOPIC.search(r["content"])
         # A-13: year is the FIRST in-range (1950-2099) match within the
         # first 1000 chars, or '' — never null, never out-of-range
