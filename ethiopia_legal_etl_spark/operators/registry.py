@@ -69,322 +69,29 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return wrap
 
 
-# The driver's CORRECTNESS harness checks the FIRST 50 registry entries
-# (observed: CORRECTNESS_r01/r02 cover registration-order indices 0-49).
-# Order the registry so those 50 include >=1 representative per
-# SURVEY.md §2 row — reference-parity ETL, every relational class,
-# dedup/similarity/text/multimodal/pipeline, streaming batch twins, and
-# the UDF surface — instead of whatever import order happened to yield.
-# The remaining ~100 queries keep registration order and are covered by
-# tools/check_oracle.py (full 150-query replica; see COVERAGE.md).
+# DRIVER_WINDOW: the 50 entries the driver's correctness harness audits.
+# The harness checks the FIRST 50 registry entries, and all_queries()
+# returns these names first, so this tuple is that window. It holds at
+# least one representative per SURVEY.md §2 row (reference-parity ETL,
+# every relational class, dedup/similarity/text/multimodal/pipeline,
+# streaming batch twins, the UDF surface). Entries rotated out of the
+# window stay oracle-gated by tests/test_full_registry_gate.py; the
+# rotation history lives in COVERAGE.md and git.
 DRIVER_WINDOW: tuple[str, ...] = (
-    # §2.A reference parity
-    # r9 rotation (VERDICT r8 #1): doc_year_extract and
-    # doc_resource_routing (driver-green r1-r8) rotate out — §2.A
-    # keeps five in-window reps and the year regex stays audited via
-    # sql_udf_year_extract; see the full r9 note before the window's
-    # final block.
-    # r10 rotation (VERDICT r9 #1, raised throughput: 12 out / 12 in).
-    # OUT: doc_empty_filter_rejects (green r1-r9; §2.A keeps four
-    # in-window reps and the empty-filter semantics stay under the
-    # full-registry gate), rollup_lineitem_flags, map_ops_user_stats,
-    # embedding_near_dup_cosine, multimodal_video_frame_sample,
-    # corpus_curation_pipeline, dedup_paragraph_exact,
-    # corpus_vocab_oov (classes keep q1/scalar_json_events/
-    # similarity_ivf_by_label(in)/4 multimodal reps/
-    # corpus_quality_curation+warc pipelines/3+3 dedup reps/
-    # text_quality_model_score), model_auc_exact, aqp_sampled_revenue,
-    # host_rank_fixed_point, stream_stream_interval_join (classes keep
-    # retrieval_rank_metrics+stats_chi2/heavy_hitters_mg/
-    # graph_triangle_count(in)/stream_session_window+stream_dedup_twin).
-    # All rotated-out names stay oracle-gated by
-    # tests/test_full_registry_gate.py on every pytest run.
     "doc_record_projection",
     "incremental_skip_docs",
     "log_tail_events",
-    # r12 rotation (VERDICT r11 #2, 12 out / 12 in; all rotated-out
-    # names stay oracle-gated by tests/test_full_registry_gate.py on
-    # every pytest run). OUT: html_link_extraction (green r1-r11;
-    # §2.A keeps three in-window reps and A-2/A-3 semantics stay
-    # full-registry-gated), dedup_ngram_jaccard (green r3-r11; dedup
-    # keeps minhash_lsh/simhash_band/cluster_components and the ngram
-    # class gets contamination_ngram_overlap IN),
-    # text_quality_model_score (green r5-r11; text keeps
-    # corpus_quality_curation/bm25/pii_scrub/KN/winnowing),
-    # multimodal_audio_features + multimodal_mp3_sideinfo (green
-    # r6/r7-r11; multimodal keeps audio_compressed + fake_embed),
-    # heavy_hitters_mg (green r7-r11; approximate-answer class gets
-    # aqp_stratified_revenue IN), stream_dedup_twin (green r5-r11;
-    # streaming keeps stream_session_window + stream_drift_psi_twin),
-    # and the five r9-batch entries green r9-r11:
-    # fuzzy_vocab_jaro_winkler (strings keep fuzzy_vocab_damerau),
-    # retrieval_rank_metrics (retrieval keeps retrieval_bm25_topk),
-    # retention_kaplan_meier + experiment_welch_effect (stats keep
-    # stats_chi2_independence + cuped + wilson;
-    # experiment_proportion_ztest IN), attribution_linear_credit
-    # (event sequences keep markov_next_event_accuracy;
-    # event_transition_matrix IN). IN: the registry's published r12
-    # candidate list verbatim — see the end of the window; all 12
-    # replica-re-verified at sf0.01 at r12 open (12/12, 0 raw-repr
-    # warnings).
-    # relational: agg / join / window / set / scalar classes
-    # r5 rotation (VERDICT r4 #5): q3_shipping_priority,
-    # join_full_nation_balance, theta_nation_pairs, q18_large_orders,
-    # text_term_frequency and text_lang_id_heuristic — all stable
-    # since r1 and each §2 row keeps another in-window representative
-    # — rotate OUT for six entries the driver has never checked
-    # (added at the end of the window below). Rotated-out names stay
-    # oracle-gated by tests/test_full_registry_gate.py on every run.
-    # r7 rotation (VERDICT r6 #4): q5_region_revenue,
-    # sql_q6_forecast_revenue, window_lag_lead_delta,
-    # text_tfidf_top_terms, similarity_cosine_topk and
-    # stream_tumbling_window — all driver-green for multiple rounds
-    # with their §2 classes keeping another in-window representative
-    # (q1 for agg, window_range_7day_frame for windows,
-    # text_quality_model_score/text_unicode_nfc for text,
-    # embedding_near_dup_cosine for embeddings,
-    # stream_session_window/stream_dedup_twin for streaming) — rotate
-    # OUT for the six strongest never-driver-sampled entries (below).
-    # Rotated-out names stay oracle-gated by
-    # tests/test_full_registry_gate.py on every pytest run.
-    # r8 rotation (VERDICT r7 #2 + #4): join_left_order_counts,
-    # asof_error_prev_purchase, topk_orders_by_price,
-    # scalar_date_orders, array_ops_doc_tokens and
-    # predicates_null_in_like — all driver-green since r1 with their
-    # §2 classes keeping another in-window representative
-    # (interval_join_error_purchase for joins, window_range for
-    # ordered windows, scalar_string_part/scalar_json_events for
-    # scalars, map_ops_user_stats for array/map) — rotate OUT, along
-    # with dedup_simhash_band (4 straight rounds of rows-only
-    # `no_oracle`, zero driver-visible signal; the rows-only class
-    # keeps CI-gate + property coverage). IN: the seven strongest
-    # never-driver-sampled oracle-checked entries, listed at the end
-    # of the window. Rotated-out names stay oracle-gated by
-    # tests/test_full_registry_gate.py on every pytest run.
     "q1_pricing_summary",
     "interval_join_error_purchase",
     "window_range_7day_frame",
-    # r9: scalar_string_part rotates out (green r1-r8; scalar class
-    # keeps scalar_json_events in-window, string fns are exercised by
-    # the strdist pair rotating in).
     "scalar_json_events",
-    # dedup / similarity / text / multimodal / pipeline
-    # r9: dedup_exact_hash rotates out (green r1-r8; the dedup class
-    # keeps ngram_jaccard, paragraph_exact, cluster_jaccard and
-    # substring_fraction in-window).
-    # r4: swapped dedup_minhash_lsh (rows-only, which the driver can
-    # only record as "ran") for the oracle-checked real-decode proof;
-    # dedup_simhash_band keeps the rows-only path represented and
-    # minhash-LSH stays covered by the full-registry CI gate + recall
-    # property tests.
-    # r5 (late): swapped multimodal_decode_real / multimodal_binary_meta
-    # (driver-checked green in r4; binary_meta stable since r1) for the
-    # two NEW real compressed-codec entries so the driver audits them
-    # directly — multimodal_decode_audio_compressed is the strongest
-    # decode oracle in the registry (DuckDB recomputes the decoded PCM
-    # values in SQL) and multimodal_video_frame_sample exercises the
-    # full container-parse -> frame-sample -> JPEG-decode chain. The
-    # rotated-out names stay oracle-gated by the full-registry CI gate.
     "multimodal_decode_audio_compressed",
-    # r5 (final): pipeline_training_corpus (driver-checked green since
-    # r1) swapped for the round's flagship composition so the harness
-    # audits it directly; the composed-pipeline family keeps
-    # corpus_curation_pipeline in-window, and the rotated-out name
-    # stays under the full-registry CI gate.
     "warc_to_text_pipeline",
-    # streaming batch twins + UDF surface
-    # r11 rotation (VERDICT r10 #3, 12 out / 12 in; all rotated-out
-    # names stay oracle-gated by tests/test_full_registry_gate.py on
-    # every pytest run). OUT: arrow_token_count (green r1-r10; UDF
-    # surface keeps sql_udf_year_extract), warc_ingest_extract +
-    # pack_sequences_offsets (green r5-r10; warc keeps
-    # warc_to_text_pipeline, corpus ops keep corpus_quality_curation),
-    # multimodal_decode_mpeg1 (green r6-r10; multimodal keeps
-    # audio_compressed/audio_features/mp3_sideinfo/fake_embed),
-    # dedup_cluster_jaccard (green r7-r10; the cluster-fixpoint class
-    # keeps dedup_cluster_components), and the r8 batch's six
-    # three-round-green entries drift_ks_two_sample (drift class gets
-    # stream_drift_psi_twin IN), ewma_user_value (ordered folds keep
-    # changepoint_cusum + twap_event_type IN), sessionize_gap30_events
-    # (stream_session_window stays), features_target_encode_loo
-    # (experiment_cuped_adjust IN), stats_corr_exact_moments
-    # (stats_chi2_independence stays + median_ci/wilson IN),
-    # funnel_view_click_purchase (markov_next_event_accuracy IN), plus
-    # dedup_substring_fraction (dedup keeps ngram_jaccard/minhash_lsh/
-    # simhash_band/cluster_components — and it stays on the SECONDARY
-    # bench). IN: the registry's published r11 candidate list — see
-    # the end of the window.
     "stream_session_window",
     "sql_udf_year_extract",
-    # r5 rotation IN: never driver-checked before (replica-pass only
-    # until now) — keeps the externally-audited sample moving
-    # r9: text_unicode_nfc rotates out (green r5-r8; text class keeps
-    # text_quality_model_score + corpus_vocab_oov, and the NFC plan
-    # shape stays pinned by test_plans.py::test_nfc_single_arrow_eval).
-    # r6 rotation (VERDICT r5 #5): semi_customers_with_orders,
-    # window_rank_orders, set_except_custkeys, agg_collect_concat,
-    # scalar_math_lineitem, pagination_keyset_orders — all driver-green
-    # since r1/r2 with their §2 rows keeping another in-window or
-    # replica-gated representative — rotate OUT for six entries the
-    # driver has never sampled, all newly type-safe after the r6
-    # HUGEINT oracle casts. Rotated-out names stay oracle-gated by
-    # tests/test_full_registry_gate.py on every pytest run.
-    # r9: multimodal_decode_png and multimodal_image_resize rotate out
-    # (green r6-r8; multimodal keeps audio_compressed,
-    # video_frame_sample, mpeg1, audio_features and mp3_sideinfo —
-    # five in-window reps).
-    # r6 flagship: the from-scratch MPEG-1 Audio Layer I decoder
-    # (ISO 11172-3; VERDICT r5 #7) — value-exact oracle, raw-double
-    # parity, no rounding policy. scalar_subquery_above_avg
-    # (driver-green since r1) rotates out to make room.
     "corpus_quality_curation",
-    # r7 rotation IN (VERDICT r6 #4): the six strongest entries the
-    # driver has never sampled — the first oracle-checked ITERATIVE op
-    # (recursive-CTE-checked connected components), bit-exact integer
-    # PageRank, exact rank-sum AUC, AQP with exact HT error bars, the
-    # oracle-checked Misra-Gries sketch, and the stream-stream
-    # interval join batch twin.
-    # r7 flagship: MP3 (Layer III) frame-syntax + scalefactor decode
-    # with a formula-recomputing oracle (functions/mp3.py; VERDICT r6
-    # #5). agg_distinct_customers (driver-green r1-r6) rotates out —
-    # q1/rollup keep aggregates represented and the approx-distinct
-    # sketch family stays under the full-registry gate.
-    # r8 rotation IN (VERDICT r7 #4): the strongest entries the driver
-    # has never sampled — exact two-sample KS drift, the bit-identical
-    # EWMA ordered fold, gap-based sessionization, leave-one-out
-    # target encoding, exact-moment correlation, the ordered-sequence
-    # funnel (with the r8 empty-stage NULL guard) and the Lee-et-al
-    # ExactSubstr dedup accounting (secondary-bench heavyweight, now
-    # also driver-audited for correctness).
-    # r9 rotation IN (VERDICT r8 #1): the seven strongest of the 27
-    # oracle-checked entries that landed after the r8 window froze and
-    # were never driver-sampled (all replica-verified green at sf0.01
-    # by the r8 judge and re-verified this round). OUT (above):
-    # doc_year_extract, doc_resource_routing, scalar_string_part,
-    # dedup_exact_hash, text_unicode_nfc, multimodal_decode_png,
-    # multimodal_image_resize — all driver-green for >=3 consecutive
-    # rounds with their §2 classes keeping in-window representatives;
-    # rotated-out names stay oracle-gated by
-    # tests/test_full_registry_gate.py on every pytest run.
     "fuzzy_vocab_damerau",
     "stats_chi2_independence",
-    # r10 rotation IN (VERDICT r9 #1: raise throughput to 12): the
-    # five r9 rows-only→oracle conversions lead (their new oracles
-    # deserve the external signal), then seven strong never-sampled
-    # class representatives. winnowing_fingerprints' fp columns were
-    # stringified for the driver canonicalizer (scalar-cells-only) and
-    # similarity_ivf_by_label's ranks canonicalized at 6dp (ADVICE
-    # r9) before entering the window; both re-verified at sf0.01.
-    # r13 rotation (VERDICT r12 #1, 12 out / 12 in; all rotated-out
-    # names stay oracle-gated by tests/test_full_registry_gate.py on
-    # every pytest run). OUT: the entire r10 batch, each driver-green
-    # three consecutive rounds (r10-r12) with its §2 class keeping an
-    # in-window representative — dedup_minhash_lsh, dedup_simhash_band,
-    # dedup_cluster_components (near-dup keeps dedup_semantic_keep +
-    # contamination_ngram_overlap, and url_canonical_dedup comes IN),
-    # similarity_ivf_by_label (similarity keeps embedding_mutual_nn),
-    # multimodal_fake_embed (multimodal keeps audio_compressed and
-    # multimodal_decode_jpeg comes IN), retrieval_bm25_topk +
-    # winnowing_fingerprints + lm_kneser_ney_bigrams + text_pii_scrub
-    # (text keeps corpus_quality_curation + contamination overlap +
-    # corpus_stratified_sample, and privacy_k_anonymity covers the
-    # privacy class IN), graph_triangle_count (graph keeps
-    # graph_kcore_hosts), scd2_merge_emulation (merge/ETL keeps
-    # incremental_skip_docs + snapshot_diff_reconcile),
-    # changepoint_cusum_events (anomaly keeps anomaly_rolling_zscore).
-    # IN: the registry's published r13 candidate list verbatim — see
-    # the end of the window; all 12 replica-verified at sf0.01 at r13
-    # open (12/12, 0 raw-repr warnings) and the two r12 conversions
-    # additionally re-verified at sf0.1 (VERDICT r12 #3).
-    # r11 rotation IN (VERDICT r10 #3): the registry's published r11
-    # candidate list verbatim — the remaining never-driver-sampled
-    # oracle-checked entries from the r8 batch plus the strongest
-    # class representatives (leakage audit, CUPED, TWAP, order-stat
-    # median CI, Markov accuracy, Wilson CI — freshly measure-hygiened
-    # this round per ADVICE r10 — Theil-Sen, silhouette, PSI stream
-    # twin, seasonal-naive backtest, quota apportionment, snapshot
-    # diff). All replica-verified at sf0.01 before entering.
-    # r14 rotation (VERDICT r13 #2, 12 out / 12 in; all rotated-out
-    # names stay oracle-gated by tests/test_full_registry_gate.py on
-    # every pytest run). OUT: the entire r11 batch, each driver-green
-    # three consecutive rounds (r11-r13) with its §2 class keeping an
-    # in-window representative — split_leakage_audit +
-    # sample_quota_apportion (leakage/sampling keep
-    # contamination_ngram_overlap + corpus_stratified_sample, and
-    # dsir_importance_select comes IN), experiment_cuped_adjust +
-    # proportion_wilson_ci (experiments keep
-    # experiment_proportion_ztest), twap_event_type (time-weighted
-    # folds keep anomaly_rolling_zscore + timeseries_gapfill_locf;
-    # rotated out WITH its r14 degenerate-clock fix regression-tested
-    # — tests/test_degenerate_stats.py::
-    # test_twap_null_on_same_microsecond_burst — and its unchanged
-    # clean-data oracle re-verified at sf0.01 AND sf0.1 this round),
-    # median_ci_order_stats (order stats keep approx_percentile_price),
-    # markov_next_event_accuracy (event sequences keep
-    # event_transition_matrix), trend_theil_sen_slope (robust trend;
-    # anomaly_rolling_zscore stays), embedding_silhouette_labels
-    # (embeddings keep embedding_mutual_nn; embedding_int8_quantize
-    # comes IN), stream_drift_psi_twin (streaming keeps
-    # stream_session_window + stream_sliding_window;
-    # stream_static_enrich comes IN), forecast_seasonal_naive_eval
-    # (model eval gets model_ece_calibration IN),
-    # snapshot_diff_reconcile (ETL keeps incremental_skip_docs).
-    # IN: the registry's published r14 candidate list verbatim — see
-    # the end of the window; all 12 replica-verified at sf0.01 at r14
-    # open (12/12, 0 raw-repr warnings).
-    # r12 rotation IN (VERDICT r11 #2): the registry's published r12
-    # candidate list verbatim — every name verified against the
-    # registry at r11 close, never driver-sampled, and replica-
-    # re-verified at sf0.01 at r12 open (12/12 passed, 0 raw-repr
-    # warnings). Strongest class representatives: proportion z-test,
-    # padding-waste accounting, winsorization, rolling z-score
-    # anomaly, Gini concentration, stratified AQP with error bars,
-    # semantic near-dup keep (norm-rewritten r11 — deserves the
-    # external signal), mutual-NN embedding pairs, k-core graph
-    # decomposition, event transition matrix, n-gram contamination
-    # overlap, stratified corpus sampling.
-    # r15 rotation (VERDICT r14 #9, 12 out / 12 in; all rotated-out
-    # names stay oracle-gated by tests/test_full_registry_gate.py on
-    # every pytest run). OUT: the entire r12 batch, each driver-green
-    # three consecutive rounds (r12-r14) with its §2 class keeping an
-    # in-window representative or an IN replacement —
-    # experiment_proportion_ztest (stats/experiments keep
-    # stats_chi2_independence, and stats_aggregates comes IN),
-    # batch_padding_waste (token/batch accounting keeps
-    # text_bpe_token_count; applyinpandas_user_gap_stats comes IN for
-    # grouped per-user stats), features_winsorize_events (feature
-    # transforms keep embedding_int8_quantize; text_repetition_filter
-    # comes IN for per-row text features), anomaly_rolling_zscore
-    # (ordered time-series folds keep timeseries_gapfill_locf +
-    # hypertable_rollup; window_ntile_percent_rank comes IN for
-    # ranking windows), gini_revenue_concentration (concentration/
-    # order-stats keep approx_percentile_price),
-    # aqp_stratified_revenue (approximate-answer class keeps
-    # approx_percentile_price), dedup_semantic_keep (near-dup keeps
-    # dedup_chunk_boilerplate + url_canonical_dedup, and
-    # dedup_incremental_snapshot comes IN), embedding_mutual_nn
-    # (embeddings keep embedding_int8_quantize;
-    # embedding_random_projection comes IN), graph_kcore_hosts
-    # (iterative/graph stays covered by the full-registry gate and the
-    # secondary bench's dedup_cluster_jaccard fixpoint, the r8
-    # precedent for a class leaving the window), event_transition_matrix
-    # (event sequences keep funnel_signup_purchase_7d +
-    # stream_static_enrich), contamination_ngram_overlap (n-gram
-    # contamination keeps text_bpe_token_count + html_main_text; the
-    # ngram-overlap oracle stays full-registry-gated),
-    # corpus_stratified_sample (sampling/curation keep
-    # corpus_quality_curation + dsir_importance_select).
-    # r13 rotation IN (VERDICT r12 #1): the registry's published r13
-    # candidate list verbatim — the two r12 rows-only→oracle
-    # conversions lead (approx_percentile_price additionally margin-
-    # gated by tests/test_percentile_margin.py, re-verified at sf0.1;
-    # source_roundtrip_formats re-verified at sf0.1), then strong
-    # never-sampled class representatives: the value-exact JPEG decode
-    # oracle, RFC 9309 robots gate, RFC 3986 URL canonicalization
-    # dedup, LOCF gap-fill (headline bench entry, first driver audit),
-    # TPC-H Q9 profit, 7-day conversion funnel, weekly retention
-    # cohorts, the sliding-window stream twin, k-anonymity, and the
-    # hypertable rollup.
     "approx_percentile_price",
     "source_roundtrip_formats",
     "multimodal_decode_jpeg",
@@ -397,23 +104,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "stream_sliding_window",
     "privacy_k_anonymity",
     "hypertable_rollup",
-    # r14 rotation IN (VERDICT r13 #2): the registry's published r14
-    # candidate list verbatim — every name was pre-published and
-    # name-verified at r13 close, never driver-sampled, and
-    # replica-verified at sf0.01 at r14 open (12/12 passed, 0
-    # raw-repr warnings). Led by the worst r12 A/B reading and the
-    # scale-path operators the window has never audited:
-    # q10_returned_revenue (headline bench entry), q7_nation_volume
-    # (6-table join), skew_salted_aggregate (explicit salting path),
-    # bloom_pruned_join (runtime bloom-filter pruning),
-    # window_ignore_nulls_last_purchase (IGNORE NULLS frames),
-    # html_main_text (boilerplate-stripping extraction),
-    # text_bpe_token_count (BPE token accounting),
-    # dedup_chunk_boilerplate (chunk-grain near-dup),
-    # embedding_int8_quantize (quantized similarity),
-    # dsir_importance_select (importance-weighted selection),
-    # stream_static_enrich (stream-static join twin),
-    # model_ece_calibration (calibration bins).
     "q10_returned_revenue",
     "q7_nation_volume",
     "skew_salted_aggregate",
@@ -426,23 +116,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "dsir_importance_select",
     "stream_static_enrich",
     "model_ece_calibration",
-    # r15 rotation IN (VERDICT r14 #9): the registry's published r15
-    # candidate list verbatim — every name was pre-published and
-    # name-verified at r14 close, never driver-sampled, and
-    # replica-verified at sf0.01 at r15 open (12/12 passed, 0
-    # raw-repr warnings). Led by the entries that earned an external
-    # signal in r14: stats_aggregates (carries the r13 zero-variance
-    # corr fix + the r14 pairwise-complete-under-NULLs fix),
-    # try_arithmetic_orders (the try_* semantics family),
-    # q8_market_share (8-table join; r14 micro-respelled headline
-    # bench member), q2_min_cost_supplier (correlated subquery),
-    # q21_sole_return_supplier (exists/not-exists anti-join; headline
-    # bench member), recursive_monthly_spine (recursive CTE),
-    # pivot_status_by_priority (pivot), window_ntile_percent_rank
-    # (ranking windows), applyinpandas_user_gap_stats (grouped-map
-    # Pandas UDF), text_repetition_filter (Gopher repetition gate),
-    # embedding_random_projection (JL projection),
-    # dedup_incremental_snapshot (incremental dedup).
     "stats_aggregates",
     "try_arithmetic_orders",
     "q8_market_share",
@@ -455,21 +128,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "text_repetition_filter",
     "embedding_random_projection",
     "dedup_incremental_snapshot",
-    # r16 rotation candidates — every name below verified against the
-    # registry at r15 close (94 oracle-checked entries have never been
-    # driver-sampled after this round's window). Led by the entries
-    # that earned an external signal this round:
-    # q11_important_parts + q17_small_quantity_loss (carry the r15
-    # money-micro respell — measured wins, deserve driver audit),
-    # cooccurrence_pmi_bigrams + sketch_kmv_cooccurrence (carry the
-    # r15 cache-scoping change), then strong never-sampled class
-    # representatives: q16_supplier_part_counts (count-distinct
-    # aggregate + NOT IN anti-join), q12_late_shipment_priority
-    # (join-residual interval predicate), multimodal_decode_mpeg1_l2
-    # (MPEG-1 Layer II decode), stats_skew_kurtosis (higher-moment
-    # stats), asof_merge_asof_pandas (cogrouped-pandas as-of merge),
-    # sql_grouping_sets (grouping sets), stream_quality_twin
-    # (streaming quality twin), text_unigram_logprob (LM scoring).
 )
 
 

@@ -110,21 +110,14 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # --- determinism / correctness ---
-        .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS) which Spark's reader
-        # rejects; read as long ns and convert in sources.tables
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # --- adaptive execution: the 100 TB survival kit ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # --- UTC timestamps, ns-parquet as long (converted in
+        # sources.tables), AQE, Arrow: the confs every query needs ---
+        .config(map=RUNTIME_CONFS)
         # --- shuffle sizing ---
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # keep scan splits bounded so partitions fit executor memory
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # --- python boundary: always Arrow-vectorized ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # --- python boundary: Arrow batch size ---
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- broadcast threshold: small dims broadcast automatically ---
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")

@@ -93,6 +93,15 @@ def test_bench_names_exist_in_registry():
     assert len(names) >= 10  # the list moved? gate must not go vacuous
     missing = [n for n in names if n not in qs]
     assert not missing, f"scale_probe codec entries not in registry: {missing}"
+    # the default sweep runs registry entries by name on the replicas
+    assert len(sp.SWEEP) >= 4
+    missing = [n for n in sp.SWEEP if n not in qs]
+    assert not missing, f"scale_probe sweep names not in registry: {missing}"
+    # PROBES drives the parser: every key must parse as its --flag
+    parser = sp.parser()
+    for key in sp.PROBES:
+        args = parser.parse_args([f"--{key}"])
+        assert getattr(args, key.replace("-", "_")) is True, key
 
 
 def test_ab_only_rejects_unknown_names_before_spawning():
@@ -113,6 +122,49 @@ def test_ab_only_rejects_unknown_names_before_spawning():
     assert p.returncode != 0
     assert "not benched" in (p.stderr + p.stdout)
     assert time.monotonic() - t0 < 3.0
+
+
+def test_worker_protocol_times_runs_and_reports_errors(sf_dir):
+    """`bench.py --worker TREE SF_DIR` is both sides of --ab: READY
+    once warm, `T <seconds>` per timed RUN (write-only, or
+    build+write with `build`), `E <type>` for a failing query without
+    dying, clean exit on EXIT."""
+    import subprocess
+
+    p = subprocess.run(
+        [sys.executable, str(Path(bench.__file__)), "--worker",
+         str(Path(bench.__file__).parent), sf_dir],
+        input="RUN q1_pricing_summary\nRUN q1_pricing_summary build\n"
+              "RUN not_a_query\nEXIT\n",
+        capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    lines = p.stdout.split("\n")
+    times = [ln for ln in lines if ln.startswith("T ")]
+    assert len(times) == 2, p.stdout
+    assert all(float(ln.split()[1]) > 0 for ln in times)
+    assert len([ln for ln in lines if ln.startswith("E ")]) == 1, p.stdout
+
+
+def test_ab_worker_failure_reports_its_cause(tmp_path, sf_dir):
+    """A ref tree without the package must fail the A/B fast and say
+    why (the worker's returncode and stderr tail), not hang or report
+    a bare 'died before READY'."""
+    import os
+    import subprocess
+    import time
+
+    t0 = time.monotonic()
+    p = subprocess.run(
+        [sys.executable, str(Path(bench.__file__)), "--ab", str(tmp_path),
+         "--only", "q1_pricing_summary"],
+        capture_output=True, text=True, timeout=120,
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
+    )
+    assert p.returncode != 0
+    out = p.stdout + p.stderr
+    assert "No module named 'ethiopia_legal_etl_spark'" in out, out[-2000:]
+    assert time.monotonic() - t0 < 60
 
 
 def test_fallback_core_always_fits():

@@ -1,12 +1,25 @@
-"""Generate PLANS.md: physical-plan evidence for the headline queries
-(pushed filters, pruned read schemas, join strategies, codegen) so the
-scale claims are inspectable without running anything.
+"""Plan evidence, two ways.
+
+Without --out: generate PLANS.md, physical-plan summaries for the
+showcase queries at sf0.01 (pushed filters, pruned read schemas, join
+strategies, codegen) so the scale claims are inspectable without
+running anything.
+
+With --out DIR: write the full `.explain('formatted')` of each query
+(default: bench.py's HEADLINE + SECONDARY) at sf0.1 to
+DIR/<query>_<TAG>.txt — an optimization round's before/after evidence
+(spark_optimization_guide.md §1: capture plan shape — Exchange count,
+join strategy, PushedFilters/ReadSchema, codegen spans, Python-eval
+nodes — before touching anything).
 
 Usage: python tools/dump_plans.py > PLANS.md
+       python tools/dump_plans.py --out plans/rN TAG [query ...]
+         TAG = "before" | "after"
 """
 
 from __future__ import annotations
 
+import argparse
 import re
 import sys
 from pathlib import Path
@@ -18,6 +31,7 @@ from ethiopia_legal_etl_spark.plans.explain import formatted_plan  # noqa: E402
 from ethiopia_legal_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
+BENCH_SF_DIR = str(Path(SF_DIR).with_name("sf0.1"))  # bench.py's default
 
 SHOWCASE = [
     "q1_pricing_summary",
@@ -200,7 +214,31 @@ def summarize(plan: str) -> list[str]:
     return out
 
 
+def dump_round(out_dir: Path, tag: str, names: list[str]) -> None:
+    """Write `<query>_<tag>.txt` full plans at sf0.1 into `out_dir`."""
+    from bench import HEADLINE, SECONDARY
+
+    out_dir.mkdir(parents=True, exist_ok=True)
+    spark = get_spark(app_name="plan-dump")
+    qs = all_queries()
+    for name in names or HEADLINE + SECONDARY:
+        try:
+            plan = formatted_plan(qs[name].builder(spark, BENCH_SF_DIR))
+        except Exception as e:  # eager builders that fail mid-dump
+            plan = f"PLAN DUMP FAILED: {type(e).__name__}: {e}"
+        (out_dir / f"{name}_{tag}.txt").write_text(plan)
+        print(f"wrote {name}_{tag}.txt", flush=True)
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--out", type=Path)
+    ap.add_argument("tag", nargs="?", default="before")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.out:
+        dump_round(args.out, args.tag, args.queries)
+        return
     spark = get_spark(app_name="plans-dump")
     qs = all_queries()
     print("# PLANS — physical-plan evidence (generated by tools/dump_plans.py)")

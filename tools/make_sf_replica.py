@@ -9,17 +9,24 @@ so join cardinalities scale like a real bigger database instead of
 degenerating. Fixed-size dims (nation, region) are copied verbatim —
 exactly how TPC-H itself scales.
 
+`replicate_sf` is the repo's one table replicator (tools/scale_probe.py
+runs registry queries on its output); `write_copies` is the
+union-of-copies writer under it, which scale_probe also uses for its
+probe-specific copies (token prefixes, 97-aligned id shifts).
+
 Usage: python tools/make_sf_replica.py OUT_DIR [--factor 10] [--src /root/testdata/sf0.1]
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from ethiopia_legal_etl_spark.session import get_spark  # noqa: E402
@@ -48,38 +55,58 @@ DOMAIN_OWNER = {
 VERBATIM = ("nation", "region")
 
 
+def union_copies(base: DataFrame, factor: int, copy) -> DataFrame:
+    """Union of `factor` copies of `base`; copy i is `copy(base, i)`."""
+    return functools.reduce(
+        DataFrame.unionByName, (copy(base, i) for i in range(factor))
+    )
+
+
+def write_copies(
+    base: DataFrame, factor: int, copy, path: str, n_files: int | None = None
+) -> None:
+    """Write `union_copies(base, factor, copy)` to parquet at `path` as
+    `n_files` files (default max(8, 2×factor)), so scans of the copy
+    parallelize like a real table's."""
+    union_copies(base, factor, copy).repartition(
+        n_files or max(8, factor * 2)
+    ).write.mode("overwrite").parquet(path)
+
+
+def replicate_sf(
+    spark, src: str, out_dir: str, factor: int, tables=None
+) -> str:
+    """Key-consistent `factor`-fold copy of the `tables` (default: all)
+    of sf dir `src` into `out_dir`; returns `out_dir`."""
+    tables = tables or (*VERBATIM, *SHIFTS)
+    domains = {dom for t in tables for dom in SHIFTS.get(t, {}).values()}
+    offsets = {
+        dom: spark.read.parquet(f"{src}/{t}.parquet").agg(F.max(c)).first()[0] + 1
+        for dom, (t, c) in DOMAIN_OWNER.items()
+        if dom in domains
+    }
+    for t in tables:
+        base = spark.read.parquet(f"{src}/{t}.parquet")
+        path = f"{out_dir}/{t}.parquet"
+        if t in VERBATIM:
+            base.write.mode("overwrite").parquet(path)
+            continue
+        cols = SHIFTS[t]
+        write_copies(base, factor, lambda df, i: df.withColumns(
+            {c: F.col(c) + F.lit(i * offsets[dom]) for c, dom in cols.items()}
+        ), path)
+    return out_dir
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("out_dir")
     ap.add_argument("--factor", type=int, default=10)
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     args = ap.parse_args()
-
     spark = get_spark(app_name="make-sf-replica")
-    offsets = {
-        dom: spark.read.parquet(f"{args.src}/{t}.parquet").agg(F.max(c)).first()[0] + 1
-        for dom, (t, c) in DOMAIN_OWNER.items()
-    }
-    for t in VERBATIM:
-        spark.read.parquet(f"{args.src}/{t}.parquet").write.mode("overwrite").parquet(
-            f"{args.out_dir}/{t}.parquet"
-        )
-    for t, cols in SHIFTS.items():
-        base = spark.read.parquet(f"{args.src}/{t}.parquet")
-        parts = []
-        for i in range(args.factor):
-            p = base
-            for c, dom in cols.items():
-                p = p.withColumn(c, F.col(c) + F.lit(i * offsets[dom]))
-            parts.append(p)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        n_files = max(8, args.factor * 2)
-        out.repartition(n_files).write.mode("overwrite").parquet(
-            f"{args.out_dir}/{t}.parquet"
-        )
-        print(f"{t}: x{args.factor} -> {args.out_dir}/{t}.parquet")
+    replicate_sf(spark, args.src, args.out_dir, args.factor)
+    print(f"x{args.factor} of {args.src} -> {args.out_dir}")
 
 
 if __name__ == "__main__":

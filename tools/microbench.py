@@ -1,9 +1,9 @@
 """Quick per-query timing for optimization iteration (guide §1: measure
-first). Times builder+noop-write for the named queries N times in ONE
-SparkSession and prints a JSON line of per-query run vectors + medians.
-NOT the frozen bench methodology (bench.py is); this is the inner-loop
-tool — same noop sink, same job labeling, but built for fast
-single-query iteration.
+first). Times the named queries N times in ONE SparkSession with
+bench.run_query and prints a JSON line of per-query run vectors +
+medians. NOT the frozen bench methodology (bench.py is); this is the
+inner-loop tool — same timing function, same noop sink, built for
+fast single-query iteration.
 
 Usage: python tools/microbench.py [--runs N] [--build] query [query ...]
   --build: time builder+write (the SECONDARY methodology) instead of
@@ -12,54 +12,32 @@ Usage: python tools/microbench.py [--runs N] [--build] query [query ...]
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import sys
-import time
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import os  # noqa: E402
-
-from ethiopia_legal_etl_spark.operators.registry import all_queries  # noqa: E402
-from ethiopia_legal_etl_spark.session import get_spark  # noqa: E402
+from bench import open_session, run_query  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    runs = 4
-    include_build = False
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--runs":
-            runs = int(args[i + 1])
-            i += 2
-        elif args[i] == "--build":
-            include_build = True
-            i += 1
-        else:
-            names.append(args[i])
-            i += 1
-    spark = get_spark(app_name="r14-microbench")
-    qs = all_queries()
-    spark.read.parquet(f"{SF_DIR}/region.parquet").count()  # warm-up
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--runs", type=int, default=4)
+    ap.add_argument("--build", action="store_true")
+    ap.add_argument("names", nargs="+")
+    args = ap.parse_args()
+    spark = open_session("microbench", SF_DIR)
     out: dict[str, dict] = {}
-    for name in names:
-        vec: list[float] = []
-        for r in range(runs):
-            spark.sparkContext.setJobDescription(f"micro:{name}:{r}")
-            if include_build:
-                t0 = time.perf_counter()
-                df = qs[name].builder(spark, SF_DIR)
-            else:
-                df = qs[name].builder(spark, SF_DIR)
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            vec.append(round(time.perf_counter() - t0, 3))
+    for name in args.names:
+        vec = [
+            round(run_query(spark, name, SF_DIR, args.build), 3)
+            for _ in range(args.runs)
+        ]
         steady = sorted(vec[1:]) or vec
         out[name] = {"runs": vec, "median": steady[len(steady) // 2]}
         print(f"{name}: {vec} median={steady[len(steady) // 2]}", file=sys.stderr)
