@@ -28,12 +28,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
     TPC-H Q1 pricing summary: scan → pushed filter → hash aggregate —
-    exercises the whole-stage-codegen relational core.
+    exercises the whole-stage-codegen relational core. The registry
+    builder applies the engine's session confs itself.
     """
-    from ethiopia_legal_etl_spark.operators.relational import q1_pricing_summary
-    from ethiopia_legal_etl_spark.session import ensure_session_confs
-
-    return q1_pricing_summary(ensure_session_confs(spark), SMOKE_SF_DIR)
+    return all_queries()["q1_pricing_summary"].builder(spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -621,7 +621,19 @@ def connected_components(
                 "invariant is broken"
             )
         if new_sum == prev_sum:
-            break
+            # An observed metric is an accumulator: under speculative
+            # execution a duplicate task attempt could perturb it, and a
+            # stale equal sum would stop the loop before the fixpoint.
+            # Confirm the first equal reading with one exact aggregate
+            # over the checkpointed labels (one extra job at
+            # convergence, none per round); keep iterating if it
+            # disagrees.
+            exact = labels.agg(
+                F.sum(F.col("component").cast("decimal(38,0)"))
+            ).first()[0]
+            if exact == new_sum:
+                break
+            new_sum = exact
         prev_sum = new_sum
     if rounds_out is not None:
         rounds_out.append(rounds)

@@ -23,6 +23,8 @@ just normalized-hash-equal — verified by check_oracle's strict check):
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -132,47 +134,15 @@ DRIVER_WINDOW: tuple[str, ...] = (
 
 
 def all_queries() -> dict[str, Query]:
-    """Import every operator module (side effect: registration) and
-    return the merged registry, DRIVER_WINDOW entries first."""
-    from ethiopia_legal_etl_spark.operators import (  # noqa: F401
-        anomaly,
-        aqp,
-        basket,
-        concentration,
-        corpusops,
-        dedup,
-        drift,
-        etl,
-        features,
-        kll,
-        kmv,
-        modeleval,
-        multimodal,
-        pipeline,
-        profiling,
-        quality,
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
-        relational6,
-        relational7,
-        relational8,
-        relational9,
-        relational10,
-        relational11,
-        relational12,
-        relational13,
-        relational14,
-        selection,
-        similarity,
-        textguard,
-        textstats,
-        unigram,
-        webarchive,
-    )
-    from ethiopia_legal_etl_spark.streaming import windows  # noqa: F401
+    """Import every module under operators/ and streaming/ (side effect:
+    registration) and return the merged registry, DRIVER_WINDOW entries
+    first."""
+    import ethiopia_legal_etl_spark.operators as operators
+    import ethiopia_legal_etl_spark.streaming as streaming
+
+    for pkg in (operators, streaming):
+        for mod in pkgutil.iter_modules(pkg.__path__, f"{pkg.__name__}."):
+            importlib.import_module(mod.name)
 
     missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
     assert not missing, f"DRIVER_WINDOW names not registered: {missing}"

@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
+    TimestampNTZType,
 )
 
 # --- Layer A: the reference's canonical document record ---------------
@@ -77,6 +77,8 @@ FETCH_RESPONSE_SCHEMA = StructType(
 )
 
 # --- Layer B: driver synthetic tables (TESTDATA.md / FIXTURES.md §1) ----
+# The tables store tz-naive parquet timestamps, which Spark reads as
+# TIMESTAMP_NTZ (tests/test_sources.py checks load_table against this).
 TESTDATA_SCHEMAS: dict[str, StructType] = {
     "region": StructType(
         [
@@ -124,7 +126,7 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
             StructField("o_custkey", LongType()),
             StructField("o_orderstatus", StringType()),
             StructField("o_totalprice", DoubleType()),
-            StructField("o_orderdate", TimestampType()),
+            StructField("o_orderdate", TimestampNTZType()),
             StructField("o_orderpriority", StringType()),
         ]
     ),
@@ -140,13 +142,13 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
             StructField("l_tax", DoubleType()),
             StructField("l_returnflag", StringType()),
             StructField("l_linestatus", StringType()),
-            StructField("l_shipdate", TimestampType()),
+            StructField("l_shipdate", TimestampNTZType()),
         ]
     ),
     "events": StructType(
         [
             StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
+            StructField("ts", TimestampNTZType()),
             StructField("user_id", LongType()),
             StructField("event_type", StringType()),
             StructField("value", DoubleType()),

@@ -5,7 +5,7 @@ instead of a Py4J stack trace. On a cluster with the jars present the
 same calls work unchanged.
 
 MERGE INTO-style upserts without these formats are emulated with the
-semi/anti-join + union pattern — see relational3.scd2_merge_emulation.
+semi/anti-join + union pattern — see joins.scd2_merge_emulation.
 """
 
 from __future__ import annotations

@@ -590,7 +590,7 @@ def streaming_user_state_tws(events_stream: DataFrame) -> DataFrame:
 
 def streaming_sessionize_gap(events_stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """True-stream twin of sessionize_gap30_events (operators/
-    relational14.py): per-user row-level session-ID assignment via
+    analytics.py): per-user row-level session-ID assignment via
     applyInPandasWithState. State per user is (last event-time in µs,
     current session seq) — O(1) per key regardless of history, the
     100 TB contract. Each micro-batch's rows are sorted (ts, event_id)

@@ -47,9 +47,7 @@ def test_chi2_cramers_v_null_on_one_bin_table(spark, const_dir):
 
 
 def test_builtin_corr_null_on_zero_variance(spark, const_dir):
-    from ethiopia_legal_etl_spark.operators.relational3 import (
-        stats_aggregates,
-    )
+    from ethiopia_legal_etl_spark.operators.aggregates import stats_aggregates
 
     rows = stats_aggregates(spark, const_dir).collect()
     assert len(rows) == 1
@@ -63,9 +61,7 @@ def test_builtin_corr_null_on_zero_variance(spark, const_dir):
 def test_exact_moments_corr_null_on_zero_variance_and_single_row(
     spark, const_dir, tmp_path
 ):
-    from ethiopia_legal_etl_spark.operators.relational14 import (
-        stats_corr_exact_moments,
-    )
+    from ethiopia_legal_etl_spark.operators.aggregates import stats_corr_exact_moments
 
     rows = stats_corr_exact_moments(spark, const_dir).collect()
     assert rows[0]["corr_qty_price"] is None
@@ -143,9 +139,7 @@ def test_cuped_null_on_empty_pre_period(spark, tmp_path):
     x, so pooled var(x) = 0 and theta = cov/var was an ANSI
     DIVIDE_BY_ZERO. CUPED without pre-period signal is undefined ->
     theta/mean_y_cuped/rho2 NULL; mean_y must still read out."""
-    from ethiopia_legal_etl_spark.operators.relational14 import (
-        experiment_cuped_adjust,
-    )
+    from ethiopia_legal_etl_spark.operators.aggregates import experiment_cuped_adjust
 
     d = str(tmp_path / "allpost")
     spark.createDataFrame(
@@ -201,9 +195,7 @@ def test_corr_pairwise_complete_under_nulls(spark, tmp_path):
     set; pin against the exact Pearson r of the complete pairs."""
     import math
 
-    from ethiopia_legal_etl_spark.operators.relational3 import (
-        stats_aggregates,
-    )
+    from ethiopia_legal_etl_spark.operators.aggregates import stats_aggregates
 
     d = str(tmp_path / "nulled")
     rows = []

@@ -15,11 +15,17 @@ from __future__ import annotations
 import importlib.util
 from pathlib import Path
 
-_SPEC = importlib.util.spec_from_file_location(
-    "check_oracle", Path(__file__).resolve().parent.parent / "tools" / "check_oracle.py"
-)
-check_oracle = importlib.util.module_from_spec(_SPEC)
-_SPEC.loader.exec_module(check_oracle)
+
+def _load_tool(name: str):
+    spec = importlib.util.spec_from_file_location(
+        name, Path(__file__).resolve().parent.parent / "tools" / f"{name}.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+check_oracle = _load_tool("check_oracle")
 
 
 def test_checker_rejects_driver_unsafe_oracle_types():
@@ -115,3 +121,20 @@ def test_full_registry_matches_oracles(spark, sf_dir):
     # the replica does. Lock that in — a new entry that only passes
     # via normalization (int-vs-float, -0.0) must be fixed, not shipped.
     assert warns == 0, f"{warns} entries rely on normalization (raw reprs differ)"
+
+
+def test_full_registry_matches_oracles_on_nulls_mirror(spark, sf_dir, tmp_path):
+    """The same gate over tools/nulls_mirror.py's copy of the tables:
+    ~10% NULLs in nullable non-key columns, truncated JSON, short and
+    non-finite embeddings, non-finite measures. Every divergence this
+    mirror has caught was a null-semantics difference between the
+    engines (see the mirror's docstring); running it on every pytest
+    run keeps the fixes from regressing silently."""
+    nulls_mirror = _load_tool("nulls_mirror")
+    nulls_mirror.build(str(tmp_path), src=sf_dir)
+
+    failures, warns = check_oracle.run(
+        str(tmp_path), [], spark=spark, count_warns=True
+    )
+    assert failures == 0, f"{failures} registry entries diverged on the nulls mirror"
+    assert warns == 0, f"{warns} entries rely on normalization on the nulls mirror"

@@ -53,9 +53,7 @@ def test_event_pattern_funnels_semantics(spark, tmp_path):
     break a funnel, cross-day sequences never join."""
     import datetime as dt
 
-    from ethiopia_legal_etl_spark.operators.relational12 import (
-        event_pattern_funnels,
-    )
+    from ethiopia_legal_etl_spark.operators.analytics import event_pattern_funnels
 
     base = dt.datetime(2026, 1, 5, 8, 0, 0)
     rows = []

@@ -138,7 +138,7 @@ def test_micro_to_double_matches_decimal_cast(spark):
 
 
 def test_q1_partition_count_invariant(spark, sf_dir):
-    from ethiopia_legal_etl_spark.operators.relational import q1_pricing_summary
+    from ethiopia_legal_etl_spark.operators.tpch import q1_pricing_summary
 
     base = [
         tuple(r)

@@ -27,7 +27,7 @@ from pathlib import Path
 import duckdb
 
 # Must match the literal accuracy passed to F.approx_percentile in
-# operators/relational2.py::approx_percentile_price — asserted below
+# operators/aggregates.py::approx_percentile_price — asserted below
 # against the source so the two can't drift apart.
 ACCURACY = 1_000_000
 
@@ -47,7 +47,7 @@ def _sf_dirs() -> list[Path]:
 def test_accuracy_constant_matches_source():
     src = (
         Path(__file__).parent.parent
-        / "ethiopia_legal_etl_spark/operators/relational2.py"
+        / "ethiopia_legal_etl_spark/operators/aggregates.py"
     ).read_text()
     m = re.search(
         r'F\.approx_percentile\("o_totalprice", 0\.5, (\d+)\)', src

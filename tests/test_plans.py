@@ -4,12 +4,12 @@ global sort, and equi-joins never degrade to cartesian products."""
 
 from __future__ import annotations
 
-from ethiopia_legal_etl_spark.operators.relational import (
+from ethiopia_legal_etl_spark.operators.analytics import topk_orders_by_price
+from ethiopia_legal_etl_spark.operators.joins import semi_customers_with_orders
+from ethiopia_legal_etl_spark.operators.tpch import (
     q1_pricing_summary,
     q3_shipping_priority,
     q5_region_revenue,
-    semi_customers_with_orders,
-    topk_orders_by_price,
 )
 from ethiopia_legal_etl_spark.plans.explain import (
     assert_in_plan,
@@ -242,7 +242,7 @@ def test_q21_semi_anti_no_cartesian(spark, sf_dir):
     """Q21 shape: EXISTS -> LeftSemi, NOT EXISTS -> LeftAnti, and the
     non-equi suppkey inequality stays a join residual (never a BNLJ —
     the orderkey equi-key carries the join)."""
-    from ethiopia_legal_etl_spark.operators.relational4 import q21_sole_return_supplier
+    from ethiopia_legal_etl_spark.operators.tpch import q21_sole_return_supplier
 
     plan = formatted_plan(q21_sole_return_supplier(spark, sf_dir))
     assert "LeftSemi" in plan
@@ -254,7 +254,7 @@ def test_q21_semi_anti_no_cartesian(spark, sf_dir):
 def test_q19_part_filters_pushed(spark, sf_dir):
     """Q19's disjunctive predicate: Catalyst extracts brand/size
     conjuncts toward the part scan as pushed filters."""
-    from ethiopia_legal_etl_spark.operators.relational4 import q19_disjunctive_revenue
+    from ethiopia_legal_etl_spark.operators.tpch import q19_disjunctive_revenue
 
     plan = formatted_plan(q19_disjunctive_revenue(spark, sf_dir))
     assert "PushedFilters" in plan
@@ -266,7 +266,7 @@ def test_bloom_runtime_filter_injection(spark, sf_dir):
     side is too big to broadcast (forced here via thresholds), Spark
     injects a runtime Bloom filter — bloom_filter_agg on the creation
     side, might_contain() applied at the lineitem scan."""
-    from ethiopia_legal_etl_spark.operators.relational4 import bloom_pruned_join
+    from ethiopia_legal_etl_spark.operators.tpch import bloom_pruned_join
 
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -295,7 +295,7 @@ def test_bloom_runtime_filter_injection(spark, sf_dir):
 def test_range_frame_window_partitioned(spark, sf_dir):
     """The 7-day RANGE frame runs per-customer — the plan must show a
     partitioned Window (no single-partition global window warning)."""
-    from ethiopia_legal_etl_spark.operators.relational4 import window_range_7day_frame
+    from ethiopia_legal_etl_spark.operators.analytics import window_range_7day_frame
 
     plan = formatted_plan(window_range_7day_frame(spark, sf_dir))
     assert "Window" in plan
@@ -381,9 +381,7 @@ def test_shuffled_hash_join_strategy_available(spark, sf_dir):
 def test_keyset_pagination_filter_pushed(spark, sf_dir):
     """Keyset pagination's literal boundary predicate reaches the scan
     (the whole point vs OFFSET: no prefix re-read at depth)."""
-    from ethiopia_legal_etl_spark.operators.relational8 import (
-        pagination_keyset_orders,
-    )
+    from ethiopia_legal_etl_spark.operators.analytics import pagination_keyset_orders
 
     plan = formatted_plan(pagination_keyset_orders(spark, sf_dir))
     assert "PushedFilters" in plan

@@ -80,7 +80,7 @@ def test_extract_links_udtf_agrees_with_sql_spelling(spark, sf_dir):
     """The UDTF and the pure-SQL html_link_extraction operator extract
     the same URL set from the same synthetic pages."""
     from ethiopia_legal_etl_spark.functions.udtfs import ExtractLinks
-    from ethiopia_legal_etl_spark.operators.relational3 import html_link_extraction
+    from ethiopia_legal_etl_spark.operators.sql_surface import html_link_extraction
     from ethiopia_legal_etl_spark.sources.tables import load_table
 
     spark.udtf.register("extract_links", ExtractLinks)

@@ -6,11 +6,11 @@ the semantics the hash compare can't see.
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational10 import (
+from ethiopia_legal_etl_spark.operators.aggregates import (
     collation_ci_priority_counts,
     df_groupingsets_region_nation,
-    try_arithmetic_orders,
 )
+from ethiopia_legal_etl_spark.operators.sql_surface import try_arithmetic_orders
 from ethiopia_legal_etl_spark.sources.tables import load_table
 
 

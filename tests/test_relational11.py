@@ -6,7 +6,7 @@ Q20). Value correctness is the oracle's job (tools/check_oracle.py).
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational11 import (
+from ethiopia_legal_etl_spark.operators.tpch import (
     q2_min_cost_supplier,
     q9_product_profit,
     q11_important_parts,

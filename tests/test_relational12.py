@@ -7,7 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational12 import (
+from ethiopia_legal_etl_spark.operators.analytics import (
     event_transition_matrix,
     funnel_signup_purchase_7d,
     retention_cohort_weekly,

@@ -8,8 +8,8 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational13 import (
-    bit_cube_flags,
+from ethiopia_legal_etl_spark.operators.aggregates import bit_cube_flags
+from ethiopia_legal_etl_spark.operators.sql_surface import (
     map_hof_event_profile,
     scalar_date_funcs2,
     scalar_string_funcs2,

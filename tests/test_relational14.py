@@ -6,11 +6,9 @@ oracle's job (tools/check_oracle.py + the full-registry gate).
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational14 import (
-    ewma_user_value,
-    pivot_unpivot_orders,
-    recursive_cte_walk,
-)
+from ethiopia_legal_etl_spark.operators.aggregates import pivot_unpivot_orders
+from ethiopia_legal_etl_spark.operators.analytics import ewma_user_value
+from ethiopia_legal_etl_spark.operators.sql_surface import recursive_cte_walk
 
 
 def test_recursive_walk_shape_and_step_function(spark, sf_dir):
@@ -72,9 +70,7 @@ def test_funnel_ordering_constraint_enforced(spark, tmp_path):
     as converted; a properly ordered user passes all three stages."""
     import pyspark.sql.functions as F
 
-    from ethiopia_legal_etl_spark.operators.relational14 import (
-        funnel_view_click_purchase,
-    )
+    from ethiopia_legal_etl_spark.operators.analytics import funnel_view_click_purchase
 
     rows = [
         # user 1: view < click < purchase  -> reaches stage 3
@@ -106,9 +102,7 @@ def test_sessionize_gap_boundary_semantics(spark, tmp_path):
     1 s starts a new one. First event of each user opens session 1."""
     import pyspark.sql.functions as F
 
-    from ethiopia_legal_etl_spark.operators.relational14 import (
-        sessionize_gap30_events,
-    )
+    from ethiopia_legal_etl_spark.operators.analytics import sessionize_gap30_events
 
     rows = [
         (1, 1, "2024-01-01 00:00:00", "view", 1.0, "{}"),
@@ -132,9 +126,7 @@ def test_sessionize_gap_boundary_semantics(spark, tmp_path):
 def test_corr_exact_moments_matches_python(spark, sf_dir):
     import math
 
-    from ethiopia_legal_etl_spark.operators.relational14 import (
-        stats_corr_exact_moments,
-    )
+    from ethiopia_legal_etl_spark.operators.aggregates import stats_corr_exact_moments
 
     got = {
         r["l_returnflag"]: (r["n_rows"], r["corr_qty_price"])
@@ -170,9 +162,7 @@ def test_attribution_conserves_total_purchase_value(spark, sf_dir):
     total purchase value in millicents, to the last integer."""
     from pyspark.sql import functions as F
 
-    from ethiopia_legal_etl_spark.operators.relational14 import (
-        attribution_linear_credit,
-    )
+    from ethiopia_legal_etl_spark.operators.analytics import attribution_linear_credit
     from ethiopia_legal_etl_spark.sources.tables import load_table
 
     rows = attribution_linear_credit(spark, sf_dir).collect()
@@ -197,9 +187,7 @@ def test_cuped_reduces_to_plain_mean_when_theta_applied_to_pooled(spark, sf_dir)
     means equals the weighted average of the raw means (the adjustment
     is mean-preserving because sum_g n_g*(mean_g(x) - mean(x)) = 0),
     and rho2 is in [0, 1]."""
-    from ethiopia_legal_etl_spark.operators.relational14 import (
-        experiment_cuped_adjust,
-    )
+    from ethiopia_legal_etl_spark.operators.aggregates import experiment_cuped_adjust
 
     rows = experiment_cuped_adjust(spark, sf_dir).collect()
     n = sum(r["n_users"] for r in rows)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational2 import (
+from ethiopia_legal_etl_spark.operators.aggregates import (
     argmax_customer_per_nation,
     pivot_status_by_priority,
     sample_lineitem_fraction,

@@ -9,11 +9,11 @@ import math
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational7 import (
+from ethiopia_legal_etl_spark.operators.aggregates import (
     heavy_hitters_cms,
     stratified_sample_orders,
-    timeseries_gapfill_locf,
 )
+from ethiopia_legal_etl_spark.operators.analytics import timeseries_gapfill_locf
 from ethiopia_legal_etl_spark.sources.tables import load_table
 
 
@@ -88,7 +88,7 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir):
     stats = {
         (r["layout"], r["col"]): (r["files_total"], r["files_hit"])
         for r in __import__(
-            "ethiopia_legal_etl_spark.operators.relational7", fromlist=["x"]
+            "ethiopia_legal_etl_spark.operators.sql_surface", fromlist=["x"]
         ).zorder_pruning_stats(spark, sf_dir).collect()
     }
     # hash layout: every file spans the whole domain, nothing prunes
@@ -106,7 +106,7 @@ def test_wave8_shapes(spark, sf_dir):
     """Wave 8 smoke in pytest (values are oracle-gated): recursion depth
     equals the calendar span, transpose flips 5 regions x 3 metrics,
     scripting returns the last SELECT, arrow path equals the SQL twin."""
-    from ethiopia_legal_etl_spark.operators import relational8 as r8
+    from ethiopia_legal_etl_spark.operators import sql_surface as r8
 
     spine = r8.recursive_monthly_spine(spark, sf_dir)
     assert spine.count() == 80  # 1995-01 .. 2001-08 inclusive
@@ -156,7 +156,7 @@ def test_heavy_hitters_cms_high_ndv_guard(spark):
     distinct value to the driver."""
     import pytest
 
-    from ethiopia_legal_etl_spark.operators.relational7 import _heavy_hitters_cms
+    from ethiopia_legal_etl_spark.operators.aggregates import _heavy_hitters_cms
 
     wide = spark.range(1000).selectExpr("CAST(id AS STRING) AS k")
     with pytest.raises(ValueError, match="exceeds the driver-probe bound"):
@@ -168,9 +168,7 @@ class TestMisraGries:
         from hypothesis import given, settings
         from hypothesis import strategies as hst
 
-        from ethiopia_legal_etl_spark.operators.relational7 import (
-            mg_summary_stream,
-        )
+        from ethiopia_legal_etl_spark.operators.aggregates import mg_summary_stream
 
         @settings(max_examples=200, deadline=None)
         @given(
@@ -197,7 +195,7 @@ class TestMisraGries:
         import random
         from collections import Counter
 
-        from ethiopia_legal_etl_spark.operators.relational7 import (
+        from ethiopia_legal_etl_spark.operators.aggregates import (
             mg_merge,
             mg_summary_stream,
         )
@@ -222,9 +220,7 @@ class TestMisraGries:
             assert c <= true[item]
 
     def test_registry_entry_exact_heavy_set(self, spark, sf_dir):
-        from ethiopia_legal_etl_spark.operators.relational7 import (
-            heavy_hitters_mg,
-        )
+        from ethiopia_legal_etl_spark.operators.aggregates import heavy_hitters_mg
 
         rows = {
             r["event_type"]: r["n_events"]

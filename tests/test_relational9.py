@@ -6,7 +6,7 @@ each operator distinct from its plain-join sibling.
 
 from pyspark.sql import functions as F
 
-from ethiopia_legal_etl_spark.operators.relational9 import (
+from ethiopia_legal_etl_spark.operators.joins import (
     asof_merge_cogrouped,
     join_nullsafe_eq,
     union_by_name_evolution,

@@ -191,3 +191,33 @@ def test_legalfeed_writer_overwrite_and_append_modes(spark, sf_dir, tmp_path):
         f"{out}/part-*.jsonl"
     )
     assert back.count() == 25
+
+
+def test_load_table_matches_declared_schemas(spark, sf_dir):
+    """Every testdata scale loads with the column names and Spark types
+    that schemas.TESTDATA_SCHEMAS declares (nullability aside). The
+    session carries only ensure_session_confs, as an externally built
+    session does, so the check covers what load_table reads on its own.
+    This is the guard a switch to explicit read schemas needs."""
+    from pathlib import Path
+
+    from ethiopia_legal_etl_spark.schemas import TESTDATA_SCHEMAS
+    from ethiopia_legal_etl_spark.session import ensure_session_confs
+    from ethiopia_legal_etl_spark.sources.tables import load_table
+
+    session = spark.newSession()
+    for key, _ in spark.sparkContext.getConf().getAll():
+        if key.startswith("spark.sql.") and session.conf.isModifiable(key):
+            session.conf.unset(key)
+    session = ensure_session_confs(session)
+
+    sf_dirs = sorted(p for p in Path(sf_dir).parent.glob("sf*") if p.is_dir())
+    assert sf_dirs
+    drift = {}
+    for d in sf_dirs:
+        for name, declared in TESTDATA_SCHEMAS.items():
+            got = [(f.name, f.dataType) for f in load_table(session, str(d), name).schema]
+            want = [(f.name, f.dataType) for f in declared]
+            if got != want:
+                drift[f"{d.name}/{name}"] = {"loaded": got, "declared": want}
+    assert not drift, drift

@@ -110,9 +110,7 @@ def test_matches_reference_dense_alphabet(spark, cases):
 def test_dl_le_lev_on_vocab(spark, sf_dir):
     """DL <= Levenshtein everywhere, and the registry entry's pruning
     guards are supersets of dl <= 2 (|len diff| <= 2, lev <= 2*dl)."""
-    from ethiopia_legal_etl_spark.operators.relational7 import (
-        fuzzy_vocab_damerau,
-    )
+    from ethiopia_legal_etl_spark.operators.joins import fuzzy_vocab_damerau
 
     rows = fuzzy_vocab_damerau(spark, sf_dir).collect()
     assert rows, "vocab should contain near-duplicate token pairs"

@@ -258,7 +258,7 @@ def gapfill_probe(spark, scratch: str):
     IGNORE NULLS window) shuffles the 36.5M-row spine for the join AND
     again for the window; the segment-explode plan (lead() + one
     explode of per-observation (day,value) runs,
-    operators/relational7.py) never joins and shuffles the 3M observed
+    operators/analytics.py) never joins and shuffles the 3M observed
     rows once. Same output rows, verified."""
     from pyspark.sql import Window
 
