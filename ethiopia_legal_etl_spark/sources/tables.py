@@ -13,28 +13,66 @@ matters when the 'file listing' is 100 TB of objects.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
 
-from ethiopia_legal_etl_spark.schemas import PDF_LINKS_SCHEMA, TABLE_NAMES
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ethiopia_legal_etl_spark.schemas import (
+    PDF_LINKS_SCHEMA,
+    TABLE_NAMES,
+    TESTDATA_SCHEMAS,
+)
+
+
+def _stores_nanos(path: str, column: str) -> bool:
+    """True when ``column`` of the parquet file (or, for a directory, its
+    first data file) is INT64 TIMESTAMP(NANOS). Reads one footer on the
+    driver; launches no Spark job."""
+    if os.path.isdir(path):
+        parts = sorted(
+            f for f in os.listdir(path) if not f.startswith(("_", "."))
+        )
+        if not parts:
+            return False
+        path = os.path.join(path, parts[0])
+    schema = pq.read_metadata(path).schema
+    col = schema.column(schema.names.index(column))
+    return (
+        col.physical_type == "INT64"
+        and json.loads(col.logical_type.to_json()).get("timeUnit") == "nanoseconds"
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver synthetic table from ``{sf_dir}/{name}.parquet``.
+    """Load one driver synthetic table from ``{sf_dir}/{name}.parquet``
+    with its declared schema, ``schemas.TESTDATA_SCHEMAS[name]``.
 
-    Parquet carries its own schema; the vectorized reader + column
-    pruning + predicate pushdown all engage automatically on this path.
+    Declaring the schema skips Spark's footer-inference job, so a load
+    schedules no Spark job; the vectorized reader, column pruning and
+    predicate pushdown engage as before.
 
-    events.ts is TIMESTAMP(NANOS), which Spark reads as long (via
-    spark.sql.legacy.parquet.nanosAsLong); convert to TimestampType
-    (µs, floor) here so every consumer sees a real timestamp. DuckDB
-    keeps ns — queries must never emit raw ts (see operators/etl.py).
+    ``events.ts`` is the one column whose read depends on how the file
+    stores it, so its footer is checked on the driver first. INT64
+    microseconds and INT96 read as the declared ``TIMESTAMP_NTZ``.
+    INT64 nanoseconds cannot be read as a timestamp: it is read as a
+    long (``spark.sql.legacy.parquet.nanosAsLong``) and converted to
+    ``TIMESTAMP`` by exact integer division to µs (a double division
+    rounds up near 1e18 ns). DuckDB keeps ns, so queries must never emit
+    raw ts (see operators/etl.py).
     """
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
-
-        df = df.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-    return df
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    schema = TESTDATA_SCHEMAS[name]
+    if name == "events" and _stores_nanos(path, "ts"):
+        schema = StructType(
+            [StructField("ts", LongType()) if f.name == "ts" else f for f in schema]
+        )
+        df = spark.read.schema(schema).parquet(path)
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -54,9 +92,7 @@ def read_pdf_links(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.schema(PDF_LINKS_SCHEMA).json(path)
     # A bare-array file yields all-null urls under the object schema;
     # detect cheaply and reparse from text.
-    if df.limit(1).count() == 0 or df.where("url IS NOT NULL").limit(1).count() == 0:
-        from pyspark.sql import functions as F
-
+    if df.where("url IS NOT NULL").limit(1).count() == 0:
         raw = spark.read.text(path, wholetext=True)
         df = (
             raw.select(

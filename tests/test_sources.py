@@ -193,31 +193,156 @@ def test_legalfeed_writer_overwrite_and_append_modes(spark, sf_dir, tmp_path):
     assert back.count() == 25
 
 
-def test_load_table_matches_declared_schemas(spark, sf_dir):
-    """Every testdata scale loads with the column names and Spark types
-    that schemas.TESTDATA_SCHEMAS declares (nullability aside). The
-    session carries only ensure_session_confs, as an externally built
-    session does, so the check covers what load_table reads on its own.
-    This is the guard a switch to explicit read schemas needs."""
-    from pathlib import Path
-
-    from ethiopia_legal_etl_spark.schemas import TESTDATA_SCHEMAS
+def _vanilla_session(spark):
+    """A session whose modifiable ``spark.sql.*`` confs are unset and then
+    ``ensure_session_confs``-ed, as an externally built session is."""
     from ethiopia_legal_etl_spark.session import ensure_session_confs
-    from ethiopia_legal_etl_spark.sources.tables import load_table
 
     session = spark.newSession()
     for key, _ in spark.sparkContext.getConf().getAll():
         if key.startswith("spark.sql.") and session.conf.isModifiable(key):
             session.conf.unset(key)
-    session = ensure_session_confs(session)
+    return ensure_session_confs(session)
+
+
+def test_load_table_matches_declared_schemas(spark, sf_dir):
+    """Every testdata scale's files carry the column names and Spark types
+    that schemas.TESTDATA_SCHEMAS declares (nullability aside), as Spark's
+    own footer inference reads them; and load_table returns them. The
+    session carries only ensure_session_confs, so the check covers what
+    load_table reads on its own. load_table reads with the declaration, so
+    this inference comparison is what catches a declaration that drifts
+    from the files."""
+    from pathlib import Path
+
+    from ethiopia_legal_etl_spark.schemas import TESTDATA_SCHEMAS
+    from ethiopia_legal_etl_spark.sources.tables import load_table
+
+    session = _vanilla_session(spark)
+
+    def names_and_types(schema):
+        return [(f.name, f.dataType) for f in schema]
 
     sf_dirs = sorted(p for p in Path(sf_dir).parent.glob("sf*") if p.is_dir())
     assert sf_dirs
     drift = {}
     for d in sf_dirs:
         for name, declared in TESTDATA_SCHEMAS.items():
-            got = [(f.name, f.dataType) for f in load_table(session, str(d), name).schema]
-            want = [(f.name, f.dataType) for f in declared]
-            if got != want:
-                drift[f"{d.name}/{name}"] = {"loaded": got, "declared": want}
+            want = names_and_types(declared)
+            inferred = names_and_types(session.read.parquet(f"{d}/{name}.parquet").schema)
+            loaded = names_and_types(load_table(session, str(d), name).schema)
+            if inferred != want or loaded != want:
+                drift[f"{d.name}/{name}"] = {
+                    "inferred": inferred, "loaded": loaded, "declared": want,
+                }
     assert not drift, drift
+
+
+def test_load_table_runs_no_spark_job(spark, sf_dir):
+    """A declared-schema read schedules no footer-inference job: loading
+    every table adds no job to the status store."""
+    from ethiopia_legal_etl_spark.schemas import TABLE_NAMES
+    from ethiopia_legal_etl_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    group = "test_load_table_runs_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        for name in TABLE_NAMES:
+            load_table(spark, sf_dir, name)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def _events_in_four_layouts(spark, tmp_path):
+    """One events table written as pyarrow timestamp[ns] and timestamp[us],
+    a DuckDB COPY and a Spark-written (INT96) directory; returns
+    {layout: path of the sf dir} and the ns values in event_id order."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    ns = [1_000_000_000_000_000_999, 1_600_000_000_123_456_789, 1_700_000_000_000_001_000]
+    table = pa.table({
+        "event_id": pa.array([1, 2, 3], pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns")),
+        "user_id": pa.array([7, 8, 9], pa.int64()),
+        "event_type": ["view", "click", "purchase"],
+        "value": [1.5, None, 3.0],
+        "props": ['{"a": 1}', None, "{}"],
+    })
+    dirs = {k: tmp_path / k for k in ("ns", "us", "duckdb", "int96")}
+    for d in dirs.values():
+        d.mkdir()
+    pq.write_table(table, dirs["ns"] / "events.parquet")
+    us = table.set_column(1, "ts", table.column("ts").cast(pa.timestamp("us"), safe=False))
+    pq.write_table(us, dirs["us"] / "events.parquet")
+    duckdb.from_arrow(us).write_parquet(str(dirs["duckdb"] / "events.parquet"))
+    prior = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        (
+            spark.read.parquet(str(dirs["us"] / "events.parquet"))
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .coalesce(1)
+            .write.parquet(str(dirs["int96"] / "events.parquet"))
+        )
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prior)
+    return {k: str(d) for k, d in dirs.items()}, ns
+
+
+def test_load_table_reads_every_events_ts_layout(spark, tmp_path):
+    """events.ts loads to the same values as an inferring read whether the
+    file stores INT64 ns, INT64 µs (pyarrow or DuckDB) or INT96; ns comes
+    out as TIMESTAMP truncated to µs, the others as the declared
+    TIMESTAMP_NTZ. The ...999 ns value is one a double division by 1000
+    rounds up to the next µs."""
+    import glob
+    from datetime import datetime, timedelta
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from ethiopia_legal_etl_spark.sources.tables import load_table
+
+    session = _vanilla_session(spark)
+    dirs, ns = _events_in_four_layouts(session, tmp_path)
+    int96_part = glob.glob(f"{dirs['int96']}/events.parquet/part-*")[0]
+    md = pq.read_metadata(int96_part).schema
+    assert md.column(md.names.index("ts")).physical_type == "INT96"
+
+    def ts_strings(df):  # formatted in the UTC session zone, not the host's
+        ts = F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        return [r[0] for r in df.orderBy("event_id").select(ts).collect()]
+
+    epoch = datetime(1970, 1, 1)
+    floored = [
+        (epoch + timedelta(microseconds=v // 1000)).strftime("%Y-%m-%d %H:%M:%S.%f")
+        for v in ns
+    ]
+    for layout, d in dirs.items():
+        inferred = session.read.parquet(f"{d}/events.parquet")
+        if dict(inferred.dtypes)["ts"] == "bigint":
+            inferred = inferred.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        loaded = load_table(session, d, "events")
+        assert ts_strings(loaded) == ts_strings(inferred), layout
+        want_type = "timestamp" if layout == "ns" else "timestamp_ntz"
+        assert dict(loaded.dtypes)["ts"] == want_type, layout
+        assert ts_strings(loaded) == floored, layout
+
+
+def test_read_pdf_links_without_urls_yields_no_rows(spark, tmp_path):
+    """An empty links file and JSONL lines lacking ``url`` both fall to the
+    bare-array reparse and yield no rows."""
+    empty = tmp_path / "empty.json"
+    empty.write_text("")
+    no_url = tmp_path / "no_url.jsonl"
+    no_url.write_text('{"link": "https://x/a.pdf"}\n{"n": 2}\n')
+    for p in (empty, no_url):
+        df = read_pdf_links(spark, str(p))
+        assert df.columns == ["url"]
+        assert df.collect() == [], p.name
