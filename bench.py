@@ -7,9 +7,9 @@ Each query is forced end-to-end with the noop sink (full compute, no
 driver collect overhead). One warm-up run of a trivial count first so
 JVM/codegen startup isn't billed to the first query.
 
-Self-attribution (VERDICT r10 #2 — this VM's neighbor contention has
-repeatedly masqueraded as code regressions, costing judge-side
-worktree A/Bs to settle):
+Self-attribution (neighbor contention on a shared VM can masquerade
+as a code regression, so every run carries its own contention
+readings):
 - every RUN records its /proc/stat CPU-steal delta and the 1-min
   loadavg at run end (detail line: "steal_pct" / "load1" aligned with
   "detail_runs"; summary line: max/mean steal over all runs), so a
@@ -73,7 +73,7 @@ HEADLINE = [
 # NOT part of the frozen headline total — the 27-query set predates
 # them and stays comparable across rounds — but timed and reported
 # each round so perf regressions in the mapInPandas codec/archive
-# operators are visible (VERDICT r5 #8). r6 is their baseline.
+# operators are visible. r6 is their baseline.
 SECONDARY = [
     "warc_to_text_pipeline",
     "multimodal_decode_audio_compressed",
@@ -85,7 +85,7 @@ SECONDARY = [
     # r6 (late): EM train + Viterbi encode in one entry — the
     # mapInPandas E-step/encode heavyweight (operators/unigram.py)
     "unigram_encode_tokens",
-    # r7 (VERDICT r6 #7): the two most expensive r6-late shapes with no
+    # r7: the two most expensive r6-late shapes with no
     # round-over-round tracking — distributed EM over the word table,
     # and the iterative min-label fixpoint closure. r7 is their baseline.
     "unigram_train_vocab",
@@ -161,11 +161,11 @@ def main() -> None:
     # steal/load vectors — for a human or the repo's own round notes),
     # THEN the compact summary as the FINAL stdout line: the driver
     # keeps only the last ~2000 bytes of stdout, so everything the
-    # cross-round comparison needs must fit in that one last line
-    # (VERDICT r5 #3). Per-run steal vectors live HERE, never in the
-    # summary: putting them in the summary line pushed it past 4 KB in
-    # r11 and the driver's tail cut off the headline value
-    # (VERDICT r11 #1) — build_summary() enforces the byte budget.
+    # cross-round comparison needs must fit in that one last line.
+    # Per-run steal vectors live HERE, never in the summary: putting
+    # them in the summary line pushed it past 4 KB in r11 and the
+    # driver's tail cut off the headline value — build_summary()
+    # enforces the byte budget.
     print(
         json.dumps(
             {
@@ -174,7 +174,7 @@ def main() -> None:
                 # full per-query per-run steal vectors — this IS the
                 # r11 "steal_pct_runs" attribution, relocated out of
                 # the summary line; the >0.5%-filtered duplicate that
-                # briefly sat beside it was dropped (ADVICE r12 #4)
+                # briefly sat beside it was dropped
                 "steal_pct": run_steal,
                 "load1": run_load1,
             }
@@ -216,9 +216,7 @@ def run_query(
     distributed EM), so they must be timed build+write.
 
     The builder is registry entry `name` over `sf_dir` unless `build`,
-    a zero-argument callable, is given. A `build` that returns None is
-    an eager driver-side step with nothing to write and is timed as
-    build only.
+    a zero-argument callable returning a DataFrame, is given.
     """
     if build is None:
         from ethiopia_legal_etl_spark.operators.registry import all_queries
@@ -229,14 +227,13 @@ def run_query(
     df = build()
     if not include_build:
         t0 = time.perf_counter()
-    if df is not None:
-        df.write.format("noop").mode("overwrite").save()
+    df.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
 
 
 # Hard budget for the final stdout line. The driver records only the
 # last ~2000 bytes of stdout; BENCH_r11.json came back "parsed": null
-# because the summary line grew past 4 KB (VERDICT r11 #1). r10's line
+# because the summary line grew past 4 KB. r10's line
 # was 1462 bytes, so 1800 leaves headroom for timing-digit drift while
 # still fitting the 2000-byte tail. tests/test_bench_contract.py
 # builds a worst-case summary and asserts this budget.
@@ -276,7 +273,7 @@ def build_summary(
             ],
             # r2 and earlier reported best-of-3; emitted alongside
             # so cross-round diffs don't read the r3 methodology
-            # change as a perf change (ADVICE r3)
+            # change as a perf change
             "value_min_of_runs": round(
                 sum(min_timings[n] for n in HEADLINE), 3
             ),
@@ -291,7 +288,7 @@ def build_summary(
             "load_avg_start": [round(x, 2) for x in load_start],
             "load_avg_end": [round(x, 2) for x in load_end],
             # steal aggregates only — the per-run vectors are in the
-            # detail line (VERDICT r11 #1); a nonzero max still flags
+            # detail line; a nonzero max still flags
             # an episodic contention burst from this line alone
             "steal_pct_max": max(flat_steal) if flat_steal else 0.0,
             "steal_pct_mean": round(
@@ -424,7 +421,7 @@ def main_ab(ref_dir: str, only: list[str] | None = None) -> None:
         # as BrokenPipeError on write or an empty readline — return
         # None so the query is recorded as failed on THIS side instead
         # of aborting the whole A/B with an uncaught exception and an
-        # orphaned surviving JVM (ADVICE r11 #1).
+        # orphaned surviving JVM.
         w = workers[side]
         try:
             w.stdin.write(f"RUN {name}{' build' if build else ''}\n")
@@ -435,7 +432,7 @@ def main_ab(ref_dir: str, only: list[str] | None = None) -> None:
         # a worker dying mid-write can emit a bare "T" with no number,
         # or a garbled token ("T 1.2x" from an interleaved/partial
         # write) — parse inside the guard so malformed output is a
-        # per-side failure, not an A/B-aborting ValueError (ADVICE r12)
+        # per-side failure, not an A/B-aborting ValueError
         if len(out) >= 2 and out[0] == "T":
             try:
                 return float(out[1])
@@ -450,7 +447,7 @@ def main_ab(ref_dir: str, only: list[str] | None = None) -> None:
             build = name in SECONDARY
             runs: dict[str, list[float]] = {"cur": [], "ref": []}
             # which side returned None, so a cur-side failure isn't
-            # misattributed to the ref tree (ADVICE r11 #2)
+            # misattributed to the ref tree
             failed: set[str] = set()
             for side in ("cur", "ref"):  # warm-up: codegen/JIT, dropped
                 if run_one(side, name, build) is None:
@@ -482,7 +479,7 @@ def main_ab(ref_dir: str, only: list[str] | None = None) -> None:
     finally:
         # EXIT/kill both workers even when the query loop raises — the
         # spawn-phase guard alone left them running on mid-benchmark
-        # failures (ADVICE r11 #1)
+        # failures
         for w in workers.values():
             try:
                 w.stdin.write("EXIT\n")
@@ -493,10 +490,9 @@ def main_ab(ref_dir: str, only: list[str] | None = None) -> None:
     summary = build_ab_summary(result, steals, ref_dir, sf_dir, only)
     print(json.dumps(summary))
     if only:
-        # VERDICT r13 #4: a --only re-measurement is the evidence that
-        # closes a perf watch, so it must ALWAYS land on disk (the q5
-        # 1.088 reading existed only as ROUND13.md prose). Round number
-        # inferred from the driver's banked BENCH_r{N}.json series.
+        # A --only re-measurement is the evidence that closes a perf
+        # watch, so it must ALWAYS land on disk, not only in prose.
+        # Round number inferred from the banked BENCH_r{N}.json series.
         path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
             f"AB_r{_current_round()}_only_{_only_slug(only)}.json",
@@ -541,7 +537,7 @@ def build_ab_summary(
 ) -> dict:
     """The --ab stdout object — judge-consumed evidence (preserved as
     AB_r{N}_vs_r{M}.json), so its shape is frozen by
-    tests/test_bench_contract.py (VERDICT r12 #4). Every per-query
+    tests/test_bench_contract.py. Every per-query
     value carries EITHER {cur, ref, ratio, runs_cur, runs_ref} or
     {error} with per-side attribution; the headline 'value' is null
     (never 0.0) when no headline member produced a ratio."""

@@ -118,7 +118,7 @@ def _walk(body: bytes, meta: dict, frames: list[bytes], depth: int = 0) -> None:
         elif cid == b"avih":
             if len(data) < 56:
                 # struct.error would escape the pipeline's
-                # except-ValueError isolation (ADVICE r5)
+                # except-ValueError isolation
                 raise ValueError("short avih chunk")
             vals = struct.unpack("<14I", data[:56])
             meta.update(

@@ -21,7 +21,7 @@ verified behavior and — unlike a row filter — preserves row topology
 (sessionization, counts, and window frames keep every event; only the
 measure is marked unavailable).
 
-SCOPE BOUNDARY (ADVICE r10/r11 — the complete census of
+SCOPE BOUNDARY (the complete census of
 `events.value` consumers that intentionally DON'T clean, and why each
 is acceptable; everything else cleans or was fixed):
 
@@ -44,7 +44,7 @@ CIs, ECDFs, folds feeding estimates) must clean: the silent-bias
 class (non-finite sorts greatest on both engines, so `value >= t`
 quietly counts failed readings as successes) was fixed in
 proportion_wilson_ci / drift_ks_two_sample / ewma_user_value
-(ADVICE r10) and join_nullsafe_eq's grade counts (r11 census).
+ and join_nullsafe_eq's grade counts (r11 census).
 """
 
 from __future__ import annotations
@@ -72,7 +72,7 @@ def clean_measures(df: DataFrame, *cols: str) -> DataFrame:
 # yourself: `FROM {EVENTS_FINITE_BARE} e`); EVENTS_FINITE_SQL is
 # pre-aliased back to `events` so oracles swap it in for the bare
 # table name (`FROM events` -> `FROM {EVENTS_FINITE_SQL}`). Every
-# clean_measures oracle INTERPOLATES one of these (ADVICE r10: no
+# clean_measures oracle INTERPOLATES one of these (no
 # hand-inlined copies, so the hygiene expression has a single source
 # of truth on the oracle side too).
 # isfinite(NULL) is NULL, so NULLs stay NULL through the CASE.

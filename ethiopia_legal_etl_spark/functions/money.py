@@ -19,7 +19,7 @@ safe, which this is by construction):
   HALF_UP rounding (round half away from zero), the rounding both
   Spark and DuckDB use for double→decimal casts.
 
-  DOMAIN (r15, ADVICE r14): the identity with the decimal cast is
+  DOMAIN: the identity with the decimal cast is
   property-pinned on the domain the engine actually uses — exact-2dp
   money doubles at money magnitudes — NOT claimed for every finite
   double:
@@ -30,7 +30,7 @@ safe, which this is by construction):
     of magnitude below.
   * ties: for values whose shortest decimal repr runs PAST the target
     scale (x.xx5 and its ulp neighborhood) the two paths can genuinely
-    disagree — the r15 directed fuzz (ADVICE r14) found live
+    disagree — the r15 directed fuzz found live
     counterexamples in both directions (37478.825 floors low on the
     float path; nextafter(56720.035, 0) rounds high), now pinned in
     tests/test_money_micro.py. Such values are NOT exact-2dp doubles,

@@ -1,5 +1,5 @@
 """Dependency-free MPEG-1 Audio Layer III (MP3) frame-syntax codec
-(ISO/IEC 11172-3 §2.4.1.7 / §2.4.2.7): the VERDICT r6 #5 step.
+(ISO/IEC 11172-3 §2.4.1.7 / §2.4.2.7).
 
 What IS here — every Layer III stage that has an in-container exact
 ground truth, implemented from the public spec with a mirror encoder

@@ -1,6 +1,6 @@
 """Dependency-free MPEG-1 Audio Layer I frame codec (ISO/IEC 11172-3).
 
-Closes the perceptual-codec gap left by the MP3 stub (VERDICT r5 #7):
+Closes the perceptual-codec gap left by the MP3 stub:
 full MP3 (Layer III) decode has no in-container-constructible exact
 ground truth (Huffman + hybrid filterbank + encoder-dependent
 reservoir), but Layer I — the same standard, the same frame/header

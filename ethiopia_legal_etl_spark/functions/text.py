@@ -199,8 +199,8 @@ def canonicalize_url(url: str) -> str:
         # malformed port ('http://h:7x/'): don't crash URL-level dedup
         # on crawl-frontier noise — but still normalize the host part
         # (lowercase + IPv6 re-bracket) so 'HTTP://Host:7x/' and
-        # 'http://host:7x/' share one dedup key (r6 ADVICE: the old
-        # verbatim-authority fallback split them)
+        # 'http://host:7x/' share one dedup key (a
+        # verbatim-authority fallback would split them)
         _, _, port_text = hostport.rpartition(":")
         hostport = f"{host}:{port_text}"
     else:

@@ -1,6 +1,6 @@
 """Transport-corruption model: deterministic mid-stream payload cuts.
 
-Corruption axis 9 (VERDICT r10 #4): at 100 TB, binary media arrives
+Corruption axis 9: at 100 TB, binary media arrives
 from an object store, and a failed GET / partial multipart upload
 hands the decoder bytes cut mid-stream as routinely as a failed fetch
 hands the text pipeline a NULL. Axes 1-8 plant corruption in the

@@ -271,7 +271,7 @@ def percentile_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "approx_percentile_price",
-    # rows-only -> ORACLE-CHECKED (r12, VERDICT r11 #3): the GK sketch
+    # ORACLE-CHECKED: the GK sketch
     # (Greenwald-Khanna, SIGMOD 2001) retains EVERY sample while
     # n_group <= ~accuracy/2, so at accuracy=1e6 the estimate IS the
     # exact rank-ceil(p*n) element at all test scales (verified
@@ -293,7 +293,7 @@ def percentile_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     "instead of a full sort). Oracle-checked since r12: exact at "
     "n_group <= ~accuracy/2 (all test SFs), approximate beyond — see "
     "the register() comment for the convertibility argument. Margin "
-    "(VERDICT r12 #3): max per-group count at sf0.1 is 50,189 orders "
+    ": max per-group count at sf0.1 is 50,189 orders "
     "('P'), ~10x under the accuracy/2 = 500,000 exactness bound; the "
     "bound is crossed near sf~0.7 (orders/3 groups), so an SF bump "
     "past that would hash-mismatch — "
@@ -418,8 +418,8 @@ def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stddev/var/covar need no guard: their n==1/n==0 paths return
     # NaN/NULL without dividing.
     #
-    # PAIRWISE-complete stddev factors (r14 optimization round's
-    # nulls-mirror close gate, inherited from the r13 respell): corr
+    # PAIRWISE-complete stddev factors (the nulls mirror checks
+    # this): corr
     # is defined over rows where BOTH columns are non-null, and
     # covar_pop already aggregates exactly those rows — but a bare
     # stddev_pop(x) also counts rows where the OTHER column is NULL,

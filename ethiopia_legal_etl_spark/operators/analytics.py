@@ -749,7 +749,7 @@ def event_pattern_funnels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shape shared with anomaly_rolling_zscore.",
 )
 def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # failed readings -> NULL at the scan (ADVICE r10): an un-cleaned
+    # failed readings -> NULL at the scan: an un-cleaned
     # NaN would otherwise flow arithmetic-poison through the rest of
     # the user's fold. The fold's NULL semantics (a NULL observation
     # NULLs the accumulator from that step on — the ewma is marked
@@ -868,7 +868,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversion is 1.0 at stage 1 by definition, NULL when the prior
     # stage is empty (0/0 must NOT read as 100% conversion, and a
     # blanket coalesce would also have masked the divide-by-zero NULL
-    # divergence vs the oracle — ADVICE r7)
+    # divergence vs the oracle)
     w = Window.orderBy("stage")
     prev = F.lag("n_users", 1, None).over(w)
     return stages.select(

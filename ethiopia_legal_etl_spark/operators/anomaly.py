@@ -19,7 +19,7 @@ partitionings; z² is additionally emitted as one division of the two
 exactly-agreed integers. Magnitude audit: with |v| ≤ B and window
 n ≤ 10, |s| ≤ 10B, |v·n − s| ≤ 20B, so the largest term
 (v·n−s)²·(n−1) ≤ 3600·B² — below 2⁶³ for B ≤ 5·10⁷ (values up to
-$500k in cents). The bound is ENFORCED, not assumed (r6 ADVICE):
+$500k in cents). The bound is ENFORCED, not assumed:
 any |v| > _V_BOUND raises at runtime rather than letting Spark
 silently wrap int64 where DuckDB would raise — keeping the
 "bit-reproducible" claim honest on arbitrary inputs.
@@ -451,8 +451,8 @@ def retention_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never on raw events; at 100 TB with long histories pass "
     "trailing_days (e.g. 90): the series is clipped to the last N "
     "days per type BEFORE the pair join, bounding it at N^2/2 pairs "
-    "per type regardless of history length (measured in SCALING.md, "
-    "VERDICT r8 #5; the registry entry keeps the full series so the "
+    "per type regardless of history length (measured in SCALING.md; "
+    "the registry entry keeps the full series so the "
     "oracle stays parameter-free).",
 )
 def trend_theil_sen_slope(

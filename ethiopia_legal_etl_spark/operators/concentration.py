@@ -81,7 +81,7 @@ _BENFORD = {d: round(math.log10(1 + 1 / d), 12) for d in range(1, 10)}
     "quantization is FLOOR(x*100 + 0.5) on BOTH engines — an explicit "
     "half-up round, because a bare int cast truncates in Spark but "
     "rounds in DuckDB, and only cents-quantized inputs hide that "
-    "divergence (r6 ADVICE). Single scan + 9-row aggregate.",
+    "divergence. Single scan + 9-row aggregate.",
 )
 def stats_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -157,9 +157,9 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # global-sort: Gini needs one total ranking by construction; it runs
     # over the customer-grain AGGREGATE (not raw orders). At 100 TB the
-    # scale path is a range-partitioned sort + per-partition offsets
-    # (see SCALING.md); the single-partition window is the exact-oracle
-    # form at gate scales.
+    # scale path is a range-partitioned sort + per-partition offsets;
+    # the single-partition window is the exact-oracle form at gate
+    # scales.
     w = Window.orderBy("rev", "o_custkey")
     ranked = cust.select(
         "rev", F.row_number().over(w).cast("long").alias("i")

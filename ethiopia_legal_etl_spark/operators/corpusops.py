@@ -93,7 +93,7 @@ def dedup_paragraph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def paragraph_dedup(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Core of dedup_paragraph_exact over any (doc_id, text) frame —
-    separated so tools/scale_probe.py can drive replicated corpora.
+    separated so the corpus pipelines and tests can run it on any frame.
     `carry` names per-doc columns to thread through the regroup (rides
     the grouping key — functionally dependent on doc_id — instead of
     costing a second join against the input)."""
@@ -303,10 +303,10 @@ def chunk_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "through once. Float policy: the c*ln(c) term sum is an ORDERED "
     "FOLD over count-of-counts (regroup by the integer count value, "
     "then fold in c-order — reassociation-free in both engines and "
-    "bounded at sqrt(2n) terms/doc; VERDICT r7 #3), the entropy gate "
+    "bounded at sqrt(2n) terms/doc), the entropy gate "
     "compares h ROUNDED to 4dp in both engines (an unrounded "
     "comparison could flip for a doc whose h sits within an ulp of "
-    "2.0 — ADVICE r4); the reported average sums "
+    "2.0); the reported average sums "
     "per-doc entropies ROUNDED to 4dp as exact DECIMALs "
     "(order-independent), then divides by the count — no "
     "float-accumulation divergence.",
@@ -331,7 +331,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # count-of-counts regroup + ordered fold (VERDICT r7 #3): the sum
+    # count-of-counts regroup + ordered fold: the sum
     # of c*ln(c) terms must not be a float SUM (its value would depend
     # on partial-aggregation grouping, hence on the caller's
     # shuffle-partition count). Grouping by the INTEGER count value c
@@ -419,9 +419,9 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "instead of one division+ln per token — fewer irrational ops, "
     "less float divergence (ROUND 4dp per the registry float "
     "policy; the gate compares the ROUNDED value in both engines so "
-    "an ulp-of-2.0 doc cannot flip between them — ADVICE r4). The "
+    "an ulp-of-2.0 doc cannot flip between them). The "
     "term sum itself is an ORDERED FOLD over count-of-counts "
-    "(VERDICT r7 #3): regrouping by the integer count value c makes "
+    ": regrouping by the integer count value c makes "
     "the fold list sqrt(2n)-bounded while the (doc,token) and "
     "(doc,c) aggregations stay map-side partial — the sum no longer "
     "depends on partial-aggregation grouping or the caller's "
@@ -437,7 +437,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # count-of-counts regroup + ordered fold (VERDICT r7 #3): see
+    # count-of-counts regroup + ordered fold: see
     # corpus_curation_pipeline — removes the last
     # grouping-order-dependent float SUM while keeping the big
     # (doc,token) aggregation map-side partial; the folded list is
@@ -542,7 +542,7 @@ def corpus_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------
 # BPE tokenizer TRAINING (merge learning) — the sentencepiece/GPT-2
-# formulation that scales IN BOTH AXES (VERDICT r4 #1):
+# formulation that scales IN BOTH AXES:
 #   corpus axis: the corpus is touched exactly once — ONE shuffle
 #     builds the (word, freq) table, whose size follows Heaps' law
 #     (~n^0.5, not n) and is further bounded by min_freq/max_words;
@@ -732,7 +732,7 @@ register(
 
 _BPE_COMPILE_THRESHOLD = 64  # merges; above this, regex-chain codegen
 # would blow up (one sequential regex pass per merge), so the encode
-# switches to the broadcast-merge-table vectorized path (VERDICT r4 #1)
+# switches to the broadcast-merge-table vectorized path
 
 
 def _bpe_word_len(word: str, ranks: dict, cache: dict) -> int:
@@ -1081,7 +1081,7 @@ register(
     "broadcast read by an Arrow-vectorized pandas UDF running the "
     "lowest-rank-first merge loop with a distinct-word cache — the "
     "map-only, no-codegen-blowup shape a 32k-merge vocab needs "
-    "(VERDICT r4 #1). Reports per-doc token count under the trained "
+    ". Reports per-doc token count under the trained "
     "tokenizer vs the untrained character baseline."
     " Rows-only verdict (r12): NOT convertible — same trained-merge "
     "dependency and per-word merge loop as bpe_encode_ids. Ground "
@@ -1141,7 +1141,7 @@ def text_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UDF extraction dedups the (now textually identical) expression
     # into one ArrowEvalPython evaluation — pinned by
     # test_plans.py::test_nfc_single_arrow_eval, so a plan-extraction
-    # change can never silently normalize the corpus 3x (VERDICT r4).
+    # change can never silently normalize the corpus 3x.
     normed = aug.withColumn("norm_text", nfc("raw"))
     return normed.select(
         "doc_id",
@@ -1350,7 +1350,7 @@ def span_corruption_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "each batch's padding overhead measured as n*max_len - sum(len) — "
     "the throughput metric that justifies length bucketing over "
     "random batching in a training data loader. All integers; the "
-    "fraction is one IEEE division. Scale shape (VERDICT r8 #2, the "
+    "fraction is one IEEE division. Scale shape (the "
     "pack_token_sequences prefix-offset pattern): the global rank is "
     "DECOMPOSED as prefix(count of shorter docs) + rank within the "
     "doc's own length. The prefix runs over the per-length COUNT "

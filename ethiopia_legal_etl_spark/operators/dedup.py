@@ -96,11 +96,10 @@ def banded_jaccard_pairs(
 ) -> DataFrame:
     """The reusable pipeline behind dedup_ngram_jaccard: deterministic
     md5-MinHash banding over (doc_id, text) -> equi-join candidates ->
-    exact-Jaccard verify. Also driven by tools/scale_probe.py at
-    growing corpus sizes against the all-pairs baseline.
+    exact-Jaccard verify.
 
     materialize=True localCheckpoints the token table and the band
-    table so each is computed ONCE (r15 optimization round): the band
+    table so each is computed ONCE: the band
     self-join otherwise evaluates the md5+minhash signature pass once
     PER SIDE (broadcast build sides get no ReusedExchange), and the
     verify stage re-tokenizes the corpus twice more — 4 corpus passes
@@ -199,9 +198,10 @@ def jaccard_verify(
 def allpairs_jaccard_blocked(
     docs: DataFrame, block_col: str, threshold: float = 0.5
 ) -> DataFrame:
-    """The pre-round-3 shape, kept ONLY as the scale-probe baseline:
-    all pairs within a block (n²/|blocks| candidates — the thing
-    banding exists to avoid)."""
+    """Exact Jaccard over all pairs within a block (n²/|blocks|
+    candidates — the cost banding exists to avoid): the exact truth
+    that the banded and MinHash-LSH recall tests in
+    tests/test_dedup_similarity.py measure against."""
     d = docs.select(
         "doc_id", block_col, F.array_distinct(F.split("text", " ")).alias("toks")
     )
@@ -302,8 +302,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "approxSimilarityJoin threshold 0.4 on exact Jaccard DISTANCE), "
     "re-expressed with the deterministic md5-rotation MinHash so the "
     "candidate generation is engine-portable and the whole pipeline "
-    "is oracle-checked (VERDICT r8 #3: the LSH family's last "
-    "rows-only slot). Tokenizer semantics mirror ml.feature.Tokenizer "
+    "is oracle-checked. Tokenizer semantics mirror ml.feature.Tokenizer "
     "(lowercase, split on whitespace runs). Candidates come from an "
     "equi-join on (band, sig) — O(bucket collisions) at 100 TB, "
     "never all-pairs — then the exact token-set distance verifies "
@@ -509,24 +508,24 @@ def connected_components(
       several without any error. The skewed jump join only runs on
       graphs deep enough to need it — where the alternative was a
       wrong answer, and where AQE skew-join splitting applies at
-      cluster scale. Probed: tools/scale_probe.py --fixpoint (planted
-      worst-case chains; rounds-bound and per-round rate pinned in
-      SCALING.md §fixpoint).
+      cluster scale. The rounds bound on a chain deeper than max_iter
+      is pinned by test_connected_components_deep_chain_pointer_jump
+      (per-round rates on planted chains: SCALING.md §fixpoint).
     - `localCheckpoint` truncates lineage every round so plan depth
       stays O(1) instead of O(iterations). Cluster posture (SCALING.md
       r10): checkpointed blocks are executor-local and lineage-free —
       at 1000 executors, reliable `checkpoint()` of the (small,
       edge-list-sized) frontier every few rounds survives executor loss
 
-    rounds_out: probe hook — when a list is passed, the number of
+    rounds_out: test hook — when a list is passed, the number of
     executed rounds (including the final no-change verify round) is
     appended.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    # Materialize the edge list ONCE before fanning it out (r14
-    # optimization round): a/b/self_loop reference `edges` four times,
+    # Materialize the edge list ONCE before fanning it out:
+    # a/b/self_loop reference `edges` four times,
     # and without this checkpoint each union branch re-evaluated the
     # whole upstream candidate-generation pipeline — measured 1.6-2.7 s
     # of dedup_cluster_jaccard's ~3.6 s at sf0.1 was the banded-MinHash
@@ -546,7 +545,7 @@ def connected_components(
     )
     adj = a.union(b).union(self_loop).distinct().localCheckpoint()
 
-    # Monotone change detection (r14 optimization round): because adj
+    # Monotone change detection: because adj
     # carries a self-loop for every node, the per-round propagated min
     # ALREADY includes the node's own start-of-round label, so
     # new(v) <= old(v) elementwise and the old merged-join-with-least
@@ -555,14 +554,14 @@ def connected_components(
     # strictly decreasing while any label moves and constant exactly at
     # the fixpoint.
     #
-    # r15 optimization round (VERDICT r14 #1): the sum rides the
+    # The sum rides the
     # checkpoint job as an OBSERVED METRIC instead of a separate
     # scalar-agg job — `observe()` plants a CollectMetrics node that
     # accumulates while the eager localCheckpoint materializes the
     # round's labels, so the per-round job budget drops from
     # {join+agg+checkpoint, sum} (two actions) to ONE action per round
     # (round count and labels are unchanged — pinned by the deep-chain
-    # test and scale_probe --fixpoint).
+    # test).
     def checkpoint_with_sum(df: DataFrame):
         obs = Observation()
         ck = df.observe(
@@ -609,7 +608,7 @@ def connected_components(
             )
         labels, new_sum = checkpoint_with_sum(shortcut)
         if prev_sum is not None and new_sum is not None and new_sum > prev_sum:
-            # Monotonicity precondition guard (ADVICE r14): the
+            # Monotonicity precondition guard: the
             # equal-sum fixpoint test is only sound because the
             # self-loop in adj forces new(v) <= old(v) elementwise. A
             # future edit that drops the self-loop or changes the
@@ -672,7 +671,7 @@ def connected_components(
     "connected components (iterative min-label propagation) → one "
     "keeper per cluster. The iterative-algorithm class: per-round "
     "join+agg, lineage truncated via localCheckpoint, O(diameter) "
-    "rounds. r9 (VERDICT r8 #6a): rows-only → ORACLE-CHECKED — with "
+    "rounds. ORACLE-CHECKED — with "
     "the SimHash signatures now re-derivable from the FNV-1a spec in "
     "DuckDB (dedup_simhash_band's oracle), the whole chain gains an "
     "independent fixpoint check: the oracle rebuilds the edge set "
@@ -829,7 +828,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
             out[i] = sig - (1 << 64) if sig >= (1 << 63) else sig  # wrap to signed
         return pd.Series(out)
 
-    # asNondeterministic (r14 optimization round, guide §4.4): the
+    # asNondeterministic: the
     # band join's inferred isnotnull(simhash) filter was pushed BELOW
     # the projection that computes the UDF, so Catalyst evaluated the
     # signature TWICE per side (two ArrowEvalPython nodes per scan,
@@ -856,8 +855,8 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     "UDF — Arrow batches, numpy bit-twiddling), banded into 4×16-bit "
     "keys, candidates = equi-join on any band, verified by Hamming "
     "distance ≤ 3. Equi-join banding is what scales: the shuffle key "
-    "is the band value, never a pairwise comparison. r9 (VERDICT r8 "
-    "#6a): converted rows-only → ORACLE-CHECKED — FNV-1a is a "
+    "is the band value, never a pairwise comparison. ORACLE-CHECKED "
+    "— FNV-1a is a "
     "published, byte-deterministic hash (Fowler/Noll/Vo; IETF "
     "draft-eastlake-fnv), so DuckDB re-derives every signature from "
     "the spec via a HUGEINT mod-2^64 byte fold, then mirrors the "
@@ -949,7 +948,7 @@ def dedup_simhash_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     "duplicated). Plan: windows via transform(sequence)+slice inside "
     "codegen (no Python), then every shuffle carries the 8-byte "
     "xxhash64 DIGEST of the window, never the 8-token string "
-    "(VERDICT r7 #5; the dedup_exact_hash pattern) — the count "
+    "(the dedup_exact_hash pattern) — the count "
     "groupBy and the join back are both keyed on the digest, so at "
     "100 TB the gram shuffle is ~8 bytes/row + doc_id instead of "
     "~50-100 bytes of token text. A digest collision would merge two "
@@ -965,13 +964,12 @@ def dedup_simhash_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is an SMJ whose hot key is split at runtime by the AQE skew "
     "join (skewedJoin probed in SCALING.md on a planted-skew "
     "corpus) — no static salting needed, and the per-doc accounting "
-    "is untouched by the split. Volume-probed r13 (SCALING.md "
+    "is untouched by the split. Volume-measured (SCALING.md "
     "§substr-volume): end-to-end ~0.17-0.22 MB/s/core of raw text at "
     "the 10-40x-doc-length plateau, linear in grams -> size scan "
-    "partitions at ~2-8 MB of text for 10-35 s tasks. The probe also "
-    "caught (and r13 fixed) an interpreted-HOF quadratic: the token "
-    "array must be aliased BEFORE the per-gram lambda or split() "
-    "re-evaluates per gram.",
+    "partitions at ~2-8 MB of text for 10-35 s tasks. The token array "
+    "is aliased BEFORE the per-gram lambda, or split() re-evaluates "
+    "per gram (an interpreted-HOF quadratic).",
 )
 def dedup_substring_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -980,7 +978,7 @@ def dedup_substring_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lambda: higher-order functions evaluate interpreted, so an
     # expression referenced inside the lambda re-evaluates PER ELEMENT
     # — with `F.split(text)` inline that made gram-gen O(tokens^2) per
-    # doc (the r13 --substr-volume probe read 14.5x wall for 4x bytes
+    # doc (measured 14.5x wall for 4x bytes
     # at 40x doc length; aliased, the lambda reads an attribute and
     # the same point is ~linear, 3.4x faster already at 10x). The
     # extra projection collapses into the scan stage; plan shape,

@@ -43,7 +43,7 @@ from ethiopia_legal_etl_spark.sources.tables import load_table
       -- ECDF is over OBSERVED values: null AND non-finite
       -- measurements are excluded explicitly (engines also disagree
       -- on null sort placement, and both sort NaN greatest — a NaN
-      -- reading would silently become the top ECDF step; ADVICE r10)
+      -- reading would silently become the top ECDF step)
       SELECT event_type, value,
              CASE WHEN event_id % 2 = 0 THEN 'a' ELSE 'b' END AS side
       FROM {EVENTS_FINITE_SQL} WHERE value IS NOT NULL
@@ -98,7 +98,7 @@ def drift_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # failed readings (NULL or non-finite) are not ECDF observations:
     # both engines sort NaN greatest, so an un-cleaned NaN would
     # silently become the top step on BOTH sides — consistent but
-    # biased (ADVICE r10). clean_measures -> NULL -> the NOT NULL
+    # biased. clean_measures -> NULL -> the NOT NULL
     # filter drops it, matching the oracle's isfinite REPLACE.
     ev = clean_measures(load_table(spark, sf_dir, "events"), "value")
     tagged = ev.where(F.col("value").isNotNull()).select(
@@ -231,7 +231,7 @@ def drift_psi_decile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL values are EXCLUDED, mirroring drift_ks_two_sample: without
     # the filter FLOOR(NULL - lo ...) is NULL and the NULL-skipping
     # least()/LEAST of both engines lands every missing measurement in
-    # bin 9, inflating the top decile on both sides (ADVICE r7)
+    # bin 9, inflating the top decile on both sides
     binned = (
         ev.where(F.col("value").isNotNull())
         .join(bounds, "event_type")
@@ -608,7 +608,7 @@ def changepoint_cusum_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregate, |event_type| output rows, nothing else.",
 )
 def proportion_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # failed readings out (ADVICE r10): NaN/Inf pass `value IS NOT
+    # failed readings out: NaN/Inf pass `value IS NOT
     # NULL` and both engines treat them as >= 250 (NaN/Inf sort
     # greatest), silently counting failed readings as successes —
     # consistent cross-engine but biased. clean_measures -> NULL ->

@@ -61,7 +61,7 @@ from ethiopia_legal_etl_spark.sources.tables import load_table
     "broadcasts it), zero data-sized windows.",
 )
 def features_winsorize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL measurements are EXCLUDED (ADVICE r7): both engines'
+    # NULL measurements are EXCLUDED: both engines'
     # NULL-skipping least/greatest would otherwise fabricate
     # value_wins = p05 for a missing value. The percentile bounds are
     # NULL-skipping in both engines already, so only the row set
@@ -184,7 +184,7 @@ def features_histogram_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = ev.groupBy("event_type").agg(
         F.min("value").alias("lo"), F.max("value").alias("hi")
     )
-    # NULLs excluded, mirroring drift_psi_decile_bins (ADVICE r7):
+    # NULLs excluded, mirroring drift_psi_decile_bins:
     # the NULL-skipping least() would otherwise drop every NULL value
     # into bin 9
     binned = (

@@ -291,8 +291,8 @@ def agreement_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ECE/Brier are ONE final IEEE division each and MCE is a MAX "
     "over per-bin single divisions of agreed integers — raw-double "
     "identical cross-engine, no rounding policy needed. NULL "
-    "n_chars/lang rows are excluded (the ADVICE r7 NULL-binning "
-    "discipline). Plan: one map-side-combined aggregate to 10 bin "
+    "n_chars/lang rows are excluded (no NULL bin is "
+    "fabricated). Plan: one map-side-combined aggregate to 10 bin "
     "rows, then a 10-row aggregate — no window, no join; at 100 TB "
     "this is a single streaming pass.",
 )

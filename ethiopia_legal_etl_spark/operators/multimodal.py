@@ -122,8 +122,8 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "remaining scope has narrowed every round: WAV/BMP (r4), JPEG/PNG/"
     "MJPEG-AVI/G.711/IMA (r5), MPEG-1 audio Layer I+II (r6), and MP3 "
     "Layer III frame syntax + reservoir + scalefactors (r7, "
-    "multimodal_mp3_sideinfo) are all REAL decoders now. FINAL scope "
-    "(r8, VERDICT r7 #7): the two remaining decodes — MP3 spectral "
+    "multimodal_mp3_sideinfo) are all REAL decoders now. FINAL scope: "
+    "the two remaining decodes — MP3 spectral "
     "Huffman (ISO 11172-3 Table B.7, ~2000 entries) and H.264 — stay "
     "stubbed PERMANENTLY as a measured rejection, not a TODO: the "
     "container has no ground truth (no compliance bitstream, no "
@@ -190,8 +190,8 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="vectorized pandas-UDF feature extractor: binary payload → "
     "8-dim fake embedding (deterministic; stands in for a real "
-    "image/audio encoder), then norm stats per media type. r9 "
-    "(VERDICT r8 #6a): rows-only → ORACLE-CHECKED — the 'fake' "
+    "image/audio encoder), then norm stats per media type. "
+    "ORACLE-CHECKED — the 'fake' "
     "featurizer was deterministic by design (8-bucket byte histogram, "
     "normalized), so DuckDB recomputes every embedding from the "
     "payload bytes (low-nibble bucketing over hex(encode(text))), "
@@ -401,8 +401,8 @@ def synth_flat_jpeg(i: int) -> bytes:
 
 
 def _media_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared input pipeline for the synth-media entries (ADVICE r14:
-    multimodal_decode_real used to re-implement this inline, so a
+    """Shared input pipeline for the synth-media entries
+    (multimodal_decode_real used to re-implement this inline, so a
     partitioning/filtering change here could silently diverge from
     the fused path — now both consume the same helper).
 
@@ -440,7 +440,7 @@ def synth_media_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _synth_media_fn(frac: float):
     """The WAV/BMP synth batch generator behind synth_media_real,
     exposed so multimodal_decode_real can FUSE it with its decode
-    stage in one mapInPandas (r14 optimization round, guide §4.1)."""
+    stage in one mapInPandas."""
     import pandas as pd
 
     from ethiopia_legal_etl_spark.functions.media import synth_bmp, synth_wav
@@ -522,7 +522,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # same input pipeline + synth generator as synth_media_real
-    # (shared helpers; ADVICE r14); decode is fused below
+    # (shared helpers); decode is fused below
     docs = _media_doc_ids(spark, sf_dir)
     synth = _synth_media_fn(trunc_fraction(spark))
 
@@ -554,7 +554,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
@@ -668,7 +668,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
@@ -731,7 +731,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decode mapInPandas; IMA blocks "
     "are self-contained (header restates predictor), so a 100 TB "
     "audio corpus decodes block-parallel with no cross-block state. "
-    "Partition sizing (r12 --codec-volume probe, 3 runs): decode "
+    "Partition sizing (measured, 3 runs): decode "
     "runs at ~1-2 MB/s/core of compressed payload with a ~0.3-0.5 s "
     "per-stage floor, so target 16-32 MB of payload per partition "
     "(10-35 s tasks) via maxPartitionBytes or the post-scan "
@@ -804,7 +804,7 @@ def multimodal_decode_audio_compressed(
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
@@ -909,7 +909,7 @@ def multimodal_video_frame_sample(
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
@@ -1011,7 +1011,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
@@ -1113,7 +1113,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): payloads
+    # ONE fused mapInPandas stage: payloads
     # built and decoded in the same Python worker — no Arrow round
     # trip of the PNG bytes (guide §4.1).
     return docs.mapInPandas(
@@ -1212,7 +1212,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): payloads
+    # ONE fused mapInPandas stage: payloads
     # built and decoded in the same Python worker — no Arrow round
     # trip of the WAV bytes (guide §4.1).
     return docs.mapInPandas(
@@ -1336,7 +1336,7 @@ def multimodal_decode_mpeg1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
@@ -1496,7 +1496,7 @@ def multimodal_decode_mpeg1_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
@@ -1591,8 +1591,8 @@ def multimodal_decode_mpeg1_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id, gr
     """,
     doc="REAL MPEG-1 Audio Layer III (MP3) frame-syntax decode "
-    "(ISO/IEC 11172-3 §2.4.1.7/§2.4.2.7; functions/mp3.py — VERDICT "
-    "r6 #5): per doc the executor synthesizes a genuine mono Layer "
+    "(ISO/IEC 11172-3 §2.4.1.7/§2.4.2.7; functions/mp3.py): per doc "
+    "the executor synthesizes a genuine mono Layer "
     "III frame from formula-derived side-info fields and "
     "scalefactors, bit-packs it through the real header + 17-byte "
     "side-info + main-data syntax, re-parses, and emits every "
@@ -1664,7 +1664,7 @@ def multimodal_mp3_sideinfo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    # ONE fused mapInPandas stage (r14 optimization round): the
+    # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
     # boundary (guide §4.1; the warc_to_text r6 precedent — fusion

@@ -306,8 +306,8 @@ def expectations_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     # NULL balance stays NULL (skipped by the distinct count) rather
-    # than falling through the CASE into 'high' — the ADVICE r7
-    # no-fabrication discipline
+    # than falling through the CASE into 'high': no value is
+    # fabricated for a missing reading
     sens = (
         F.when(F.col("c_acctbal").isNull(), F.lit(None))
         .when(F.col("c_acctbal") < 0, "neg")

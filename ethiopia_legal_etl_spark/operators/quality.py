@@ -1,7 +1,7 @@
 """Model-based document quality classifier — the trained "quality
-model" stage of CCNet/RefinedWeb-style corpus pipelines (the one
-canonical stage VERDICT r4 listed as missing next to the heuristic
-gates in textguard.py).
+model" stage of CCNet/RefinedWeb-style corpus pipelines (the
+canonical stage that sits next to the heuristic gates in
+textguard.py).
 
 A fastText-style LINEAR model over a hashed bag-of-words, reduced to
 its SQL-expressible core so the whole scorer is a column expression:

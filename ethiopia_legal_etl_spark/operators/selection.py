@@ -444,7 +444,7 @@ def embedding_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # failed-encoder rows (NULL / wrong-dim / non-finite) out — same
     # set as emb_ok(), via the basic guard + reusable norm column
-    # (EMB_DIM policy; VERDICT r10 #1). Both the full and the
+    # (EMB_DIM policy). Both the full and the
     # truncated cosine reuse precomputed norms: full `nrm` doubles as
     # the finiteness guard; `n16` over the prefix slice is finite
     # whenever nrm is, so it carries no guard duty.
@@ -558,9 +558,8 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pq_query(spark: SparkSession, emb: DataFrame, books) -> DataFrame:
     """The query path given trained codebooks: ADC shortlist + exact
-    re-rank.  Split from the registry entry so a deployment (and the
-    scale probe) can train once on a bounded sample and query many
-    times."""
+    re-rank.  Split from the registry entry so a deployment can train
+    once on a bounded sample and query many times."""
     adc = pq_adc_scores(spark, emb, books)
     w = Window.partitionBy("q_id").orderBy("adc_raw", "vec_id")
     shortlist = (

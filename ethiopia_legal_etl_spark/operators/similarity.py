@@ -50,7 +50,7 @@ def emb_ok(col: str = "embedding") -> Column:
     """Failed-encoder guard: NULL, wrong-dimension, or non-finite
     (NaN/Inf or NULL coordinate) embeddings out.
 
-    Element-level NULLs count as corrupt (ADVICE r10): the lambda
+    Element-level NULLs count as corrupt: the lambda
     tests `x IS NULL` FIRST, so `exists` always returns a definite
     boolean (TRUE OR NULL = TRUE) — no engine divergence between
     Spark's NULL-propagating `exists` and DuckDB's `list_filter`
@@ -59,7 +59,7 @@ def emb_ok(col: str = "embedding") -> Column:
     COST: the per-element scan is a higher-order-function conjunct.
     When the guard is applied to a DataFrame that feeds BOTH sides of
     a join, the HOF is duplicated into both subplans and measurably
-    slows small scans (VERDICT r10 #1: 1.6x on similarity_cosine_topk).
+    slows small scans (1.6x on similarity_cosine_topk).
     Entries whose only use of finiteness is a downstream cosine fold
     should use emb_ok_basic() + a post-score `~isnan(cos)` filter
     instead; keep THIS guard where clean rows are load-bearing before
@@ -81,8 +81,9 @@ def emb_ok_basic(col: str = "embedding") -> Column:
     cosine — NaN (Inf/Inf, NaN/x, x+NaN are all NaN), so filtering
     `~isnan(cos)` BEFORE any rank/threshold step excludes exactly the
     pairs a full pre-filter would never have formed. Equivalent output
-    to emb_ok() for pure pair-scoring entries (proof sketch in
-    ROUND11.md), at ~zero plan cost (VERDICT r10 #1)."""
+    to emb_ok() for pure pair-scoring entries (a row the full guard
+    drops has a NULL or non-finite norm, so its cosine is NULL or NaN
+    and the post-score filter drops it), at ~zero plan cost."""
     c = F.col(col)
     return c.isNotNull() & (F.size(c) == EMB_DIM)
 
@@ -95,14 +96,14 @@ def norm_finite(col: str = "nrm") -> Column:
     makes it NULL — so `nrm IS NOT NULL AND nrm < Inf` (NaN sorts
     GREATEST in Spark, so NaN < Inf is false) excludes exactly the
     rows emb_ok() would — PRECONDITION: float32-sourced coordinates
-    (|x| ≤ ~3.4e38, so the square-sum ≤ ~7e78 stays finite; ADVICE
-    r11 #4). For a future double-typed embeddings column the
+    (|x| ≤ ~3.4e38, so the square-sum ≤ ~7e78 stays finite). For a
+    future double-typed embeddings column the
     equivalence breaks at |x| > ~1.3e154, where a FINITE coordinate
     squares to +Inf and with_norm drops a row emb_ok() would keep.
     The norm column is then REUSED as the cosine
     denominator, so pair scoring is one dot fold instead of three
-    (dot + both norms) — the guard costs less than zero (VERDICT r10
-    #1: measured 1.37x faster than the r9 exists-guard code in an
+    (dot + both norms) — the guard costs less than zero (measured
+    1.37x faster than the r9 exists-guard code in an
     interleaved same-process A/B at sf0.1, identical output)."""
     c = F.col(col)
     return c.isNotNull() & (c < F.lit(float("inf")))
@@ -126,7 +127,7 @@ def with_norm(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
 
 
 # the oracle-side twin of emb_ok (DuckDB), interpolated into oracle
-# SQL strings (ADVICE r10: interpolate, don't hand-inline, so an
+# SQL strings (interpolate, don't hand-inline, so an
 # EMB_DIM change cannot desync the engines). `x IS NULL` first so
 # DuckDB's NULL-dropping list_filter keeps the element (TRUE), mirroring
 # Spark's definite-boolean exists.
@@ -152,7 +153,7 @@ def reorder_barrier(df: DataFrame) -> DataFrame:
     rows must be physically gone before the UDF can ever see them —
     only a lineage break guarantees that ordering.
 
-    Cluster posture (SCALING.md, ADVICE r9): with
+    Cluster posture (SCALING.md): with
     `spark.ethiopia_legal_etl.reliableBarriers=true` AND a checkpoint
     dir configured (`sc.setCheckpointDir`), the barrier writes a
     RELIABLE checkpoint — fault-tolerant storage, survives executor
@@ -249,7 +250,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "guard's finiteness conjunct lives on a precomputed L2-norm "
     "column (norm_finite) that doubles as the cosine denominator, so "
     "pair scoring is ONE dot fold instead of three and the corpus "
-    "scan carries no per-element exists() conjunct — VERDICT r10 #1: "
+    "scan carries no per-element exists() conjunct — "
     "this is 1.37x FASTER than the r9 exists-guard code (interleaved "
     "same-process A/B at sf0.1, bit-identical output).",
 )
@@ -305,8 +306,8 @@ def resplit_oversized_cells(
     broadcasts it when small.
 
     strict=True is ORACLE-PARITY mode: instead of silently splitting
-    (which narrows the pair set vs a whole-cell SQL oracle — r6 ADVICE
-    on dedup_semantic_keep), any cell over the bound fails the job
+    (which narrows the pair set vs a whole-cell SQL oracle, as on
+    dedup_semantic_keep), any cell over the bound fails the job
     loudly at runtime. Callers whose registered SQL oracle spans whole
     cells use strict=True so implementation and oracle provably
     coincide; scale callers without an exact-oracle contract keep the
@@ -357,7 +358,7 @@ def resplit_oversized_cells(
 def embedding_near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL / wrong-dim out via emb_ok_basic, NaN/Inf/element-NULL via
     # the norm filter inside with_norm — same rows as emb_ok(), with
-    # the norm reused as the cosine denominator (VERDICT r10 #1).
+    # the norm reused as the cosine denominator.
     d = with_norm(
         load_table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") < 300)
@@ -571,7 +572,7 @@ def similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="IVF-style ANN: per-label centroids (one agg), probe the nearest "
     "nprobe=2 centroids per query, exact cosine within probed cells. "
     "At 100 TB the corpus is written partitioned by label so probing "
-    "prunes partitions at the scan. r9 (VERDICT r8 #6a): rows-only → "
+    "prunes partitions at the scan. "
     "ORACLE-CHECKED — the pipeline was deterministic all along (no "
     "RNG, no learned model: mean centroids, cosine probe, exact "
     "verify, deterministic tie-breaks); the one cross-engine float "
@@ -583,7 +584,7 @@ def similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivf_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     # failed-encoder rows (NULL / wrong-dim / non-finite) out — same
     # set as emb_ok(), via the basic guard + reusable norm column
-    # (EMB_DIM policy; VERDICT r10 #1). Pre-join filtering is
+    # (EMB_DIM policy). Pre-join filtering is
     # load-bearing: the centroid MEANS must see only healthy rows.
     emb = with_norm(
         load_table(spark, sf_dir, "embeddings").where(emb_ok_basic())
@@ -625,7 +626,7 @@ def similarity_ivf_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c_cos"),
         )
     )
-    # r10 (ADVICE): rank on ROUND(cos, 6) on BOTH sides — Spark's
+    # Rank on ROUND(cos, 6) on BOTH sides — Spark's
     # dot/(sqrt(na)*sqrt(nb)) vs DuckDB's LIST_COSINE_SIMILARITY can
     # differ in the last ULP, and an unrounded rank would let a
     # near-tie at the nprobe / rank-10 boundary flip between engines.
@@ -987,7 +988,7 @@ def read_probed_cells(
 def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # failed-encoder rows (NULL / wrong-dim / non-finite) out — same
     # set as emb_ok(), via the cheap basic guard + the reusable norm
-    # column (EMB_DIM policy; VERDICT r10 #1). Pre-join filtering is
+    # column (EMB_DIM policy). Pre-join filtering is
     # load-bearing here: n_vecs counts and the strict cell-size check
     # must see only healthy rows.
     d = with_norm(
@@ -1071,7 +1072,7 @@ def embedding_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # NULL / wrong-dim out via emb_ok_basic, NaN/Inf/element-NULL via
     # the norm filter — same rows as emb_ok(), norm reused as the
-    # cosine denominator (EMB_DIM policy; VERDICT r10 #1).
+    # cosine denominator (EMB_DIM policy).
     d = with_norm(
         load_table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") < 600)
@@ -1196,8 +1197,8 @@ def embedding_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def retrieval_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL / wrong-dim out via emb_ok_basic, NaN/Inf/element-NULL via
     # the norm filter — same rows as emb_ok(), norm reused as the
-    # denominator of BOTH cosine stages (EMB_DIM policy; VERDICT r10
-    # #1): rel against the pool here, and the shortlist sim matrix
+    # denominator of BOTH cosine stages (EMB_DIM policy): rel against
+    # the pool here, and the shortlist sim matrix
     # below (short carries nrm through).
     d = with_norm(
         load_table(spark, sf_dir, "embeddings")

@@ -531,7 +531,7 @@ def scalar_bitwise_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_roundtrip_formats",
-    # rows-only -> ORACLE-CHECKED (r12, VERDICT r11 #3): the scratch
+    # ORACLE-CHECKED: the scratch
     # files themselves are invisible to DuckDB, but the entry's OUTPUT
     # is per-format row-count reconciliation — and the oracle can
     # recompute the expected count from the source table externally.

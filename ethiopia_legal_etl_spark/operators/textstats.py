@@ -439,8 +439,8 @@ def cooccurrence_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda w: w != "")
     dd = docs.select(toks.alias("toks")).where(F.size("toks") >= 2)
-    # localCheckpoint, not cache (r15 cache-scoping sweep, VERDICT r14
-    # #5): Spark's CacheManager matches plans, so a cached table left
+    # localCheckpoint, not cache: Spark's CacheManager matches plans,
+    # so a cached table left
     # behind is silently REUSED by the next identically-built run — a
     # cross-run intermediate in any repeated-run harness (the unigram
     # r14 finding). Checkpointed blocks die with the DataFrame ref and

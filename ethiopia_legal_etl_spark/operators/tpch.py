@@ -115,7 +115,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sums are then bounded by rows-per-scan-partition (~60x margin at
     # 1 GB splits) — and level 2 re-aggregates the tiny 4x|partitions|
     # table in DECIMAL(38,0). The extra exchange carries ≤ 4 rows per
-    # upstream partition (OPTIMIZATION_r14.md).
+    # upstream partition.
     li = load_table(spark, sf_dir, "lineitem")
     mq = money_micro(F.col("l_quantity"))
     mp = money_micro(F.col("l_extendedprice"))
@@ -299,7 +299,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem_q6")
-    # Deliberately KEPT on decimal sums (r14 optimization round): the
+    # Deliberately KEPT on decimal sums: the
     # long-micro two-level respell (functions/money.py) was tried here
     # and measured SLOWER in the interleaved A/B (1.16-1.29x) — the
     # shipdate+discount+quantity filters are selective enough that the
@@ -425,7 +425,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("p_size").between(1, 35)
         & F.col("l_quantity").between(20, 30)
     )
-    # Deliberately KEPT on decimal sums (r14 optimization round): the
+    # Deliberately KEPT on decimal sums: the
     # long-micro two-level respell (functions/money.py) was tried here
     # and measured SLOWER in the interleaved A/B (1.18-1.23x) — the
     # disjunctive brand/size/quantity bands are selective enough that
@@ -880,7 +880,7 @@ def q17_small_quantity_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same exact-sum double the decimal cast did, so the 0.2*avg
     # threshold compares identically. Measured at sf0.1 (two
     # interleaved cur-vs-ref microbench rounds): 0.82/0.81 s ->
-    # 0.43/0.42 s medians (OPTIMIZATION_r15.md).
+    # 0.43/0.42 s medians.
     per_part = li.groupBy(F.col("l_partkey").alias("avg_partkey")).agg(
         (
             micro_to_double(F.sum(money_micro(F.col("l_quantity"))), 100)
@@ -1157,8 +1157,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vocab-bounded rows), and both sides of the comparison convert
     # through the SAME exact-rational-to-double rounding the decimal
     # formulation used. Measured at sf0.1 (two interleaved cur-vs-ref
-    # microbench rounds): 0.80/0.59 s -> 0.57/0.53 s medians
-    # (OPTIMIZATION_r15.md).
+    # microbench rounds): 0.80/0.59 s -> 0.57/0.53 s medians.
     v = (
         li.join(F.broadcast(supplier), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(nation), F.col("n_nationkey") == F.col("s_nationkey"))

@@ -203,16 +203,14 @@ def _seed_pieces(
         .groupBy("piece", "len")
         .agg(F.sum("freq").alias("weight"))
     )
-    # ONE collect for both slices (r14 optimization round): the char
-    # slice and the top-K multi slice share the substring-aggregate
-    # subtree, so unioning them lets AQE reuse the (piece, len)
-    # exchange — the double explode over the word table runs once
-    # instead of once per slice (guide §2.4 share one exchange).
-    # BOUNDS unchanged: chars = |alphabet| rows (Unicode-bounded,
+    # ONE collect for both slices: the char slice and the top-K multi
+    # slice share the substring-aggregate subtree, so unioning them
+    # lets AQE reuse the (piece, len) exchange — the double explode
+    # over the word table runs once instead of once per slice.
+    # BOUNDS: chars = |alphabet| rows (Unicode-bounded,
     # corpus-size-independent), multi <= seed_size rows
     # (TakeOrderedAndProject — the only top-K that reaches the
-    # driver); probe-measured flat at 10x corpus, SCALING.md "EM
-    # collect bounds".
+    # driver).
     chars_df = subs.where(F.col("len") == 1).select("piece", "weight")
     multi_df = (
         subs.where(F.col("len") > 1)
@@ -245,28 +243,16 @@ def unigram_train_table(
     n_iters: int = 2,
     min_freq: int = 1,
     max_words: int | None = None,
-    stats: dict | None = None,
 ) -> list[tuple[str, int]]:
     """Train the unigram vocabulary; returns [(piece, micro_count)]
     sorted by (micro_count desc, piece asc), len <= vocab_size (+
     however many single chars exist). Spark-job budget: 2 seed jobs +
-    n_iters E-step aggregates, independent of corpus size.
-
-    `stats` (optional dict, filled in place) records per-EM-round wall
-    seconds and driver-collected row counts — the scale_probe
-    --emvocab instrumentation that proves the collect bounds hold at
-    10x vocab / 10x corpus without guessing."""
-    import time as _time
-
+    n_iters E-step aggregates, independent of corpus size. Every
+    driver collect is vocabulary-bounded (<= alphabet + seed_size
+    rows), never corpus-bounded."""
     sc = spark.sparkContext
     wf = _word_freq_df(spark, sf_dir, min_freq, max_words).cache()
-    t0 = _time.perf_counter()
     seed = _seed_pieces(wf, max_piece_len, seed_size)
-    if stats is not None:
-        stats["seed_sec"] = round(_time.perf_counter() - t0, 3)
-        stats["seed_rows"] = len(seed)
-        stats["alphabet"] = sum(1 for p, _ in seed if len(p) == 1)
-        stats["em_rounds"] = []
     if not seed:  # empty / pruned-to-nothing corpus: empty vocabulary
         wf.unpersist(blocking=False)
         return []
@@ -275,7 +261,6 @@ def unigram_train_table(
 
     counts: dict[str, int] = {}
     for _ in range(n_iters):
-        t_round = _time.perf_counter()
         bc = sc.broadcast((logp, max_piece_len))
 
         def estep(batches):
@@ -306,20 +291,11 @@ def unigram_train_table(
         # the E-step only emits pieces already in the broadcast model
         # (word_expected_counts walks the model lattice), so the
         # per-round collect is VOCAB-bounded, never corpus-bounded
-        # (probe-measured flat at 10x corpus, SCALING.md "EM collect
-        # bounds")
         counts = {r["piece"]: int(r["micro"]) for r in agg.collect()}
         logp = _normalize_logp(counts)
-        if stats is not None:
-            stats["em_rounds"].append(
-                {
-                    "sec": round(_time.perf_counter() - t_round, 3),
-                    "collect_rows": len(counts),
-                }
-            )
 
-    # Drop the word-table cache now that EM is done (r14 optimization
-    # round): Spark's CacheManager matches by logical plan, so a cache
+    # Drop the word-table cache now that EM is done: Spark's
+    # CacheManager matches by logical plan, so a cache
     # left behind would be REUSED by the next identically-built run —
     # a persisted cross-run intermediate the bench must not carry
     # (every invocation computes from the parquet inputs). Intra-run
@@ -390,11 +366,9 @@ def unigram_encode_tokens(
         # iterator form (guide §4.5): the distinct-word Viterbi cache
         # lives once per TASK and amortizes across every Arrow batch in
         # the partition, instead of resetting every ~10k rows
-        # (r14 optimization round; the docstring's "per-batch cache"
-        # upgraded to per-task)
         lp, mpl = bc.value
         cache: dict[str, int] = {}
-        # ADVICE r14: the per-task cache is otherwise unbounded — on a
+        # The per-task cache is otherwise unbounded — on a
         # partition with very high word cardinality it would grow for
         # the task's lifetime (a Python-worker RSS regression at 100 TB
         # scale). 2M entries ≈ low hundreds of MB worst case; clearing

@@ -645,29 +645,24 @@ def sitemap_url_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identical graph; the real-HTML edge extraction path is "
     "html_link_extraction.",
 )
-def host_rank_fixed_point(
-    spark: SparkSession, sf_dir: str, n_hosts: int = 50
-) -> DataFrame:
-    # n_hosts: probe-only knob (tools/scale_probe.py --graph) that
-    # widens the synthetic host space; the registered entry and its
-    # oracle always use the default 50.
+def host_rank_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % n_hosts).alias("src"),
+        (F.col("doc_id") % 50).alias("src"),
         F.explode(
             F.sequence(F.lit(0), (F.col("doc_id") % 3).cast("int"))
         ).alias("i"),
         "doc_id",
     )
-    # Materialize the host-bounded link table ONCE (r15 optimization
-    # round, the connected_components treatment / guide §5): deg,
+    # Materialize the host-bounded link table ONCE (as
+    # connected_components does with its edges): deg,
     # hosts, and every unrolled iteration's contrib join reference
     # `links`, so without this checkpoint the docs scan + explode +
     # distinct subtree was evaluated ~5x inside one plan. The table is
-    # <= n_hosts * n_hosts rows by construction — tiny at any corpus
+    # <= 50 * 50 rows by construction — tiny at any corpus
     # size (the corpus scan, not the link table, is the scale cost).
     links = docs.select(
         "src",
-        ((F.col("src") * 7 + F.col("i") * 13 + 1) % n_hosts).alias("dst"),
+        ((F.col("src") * 7 + F.col("i") * 13 + 1) % 50).alias("dst"),
     ).distinct().localCheckpoint()
     deg = links.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     hosts = links.select(F.col("src").alias("host")).distinct()
@@ -1073,11 +1068,7 @@ _KCORE_ROUNDS = 6  # fixpoint on this graph at round 4: the pendant
     "co-partitioned reuse); at 100 TB rounds are O(diameter-ish) and "
     "each is a bounded join, the standard distributed peeling shape.",
 )
-def graph_kcore_hosts(
-    spark: SparkSession, sf_dir: str, n_hosts: int = 50
-) -> DataFrame:
-    # n_hosts: probe-only knob (tools/scale_probe.py --graph); the
-    # registered entry and its unrolled SQL oracle always use 50.
+def graph_kcore_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     quad = (
         docs.select(
@@ -1087,10 +1078,10 @@ def graph_kcore_hosts(
             ).alias("i"),
         )
         .select(
-            (F.col("doc_id") % n_hosts).alias("src"),
+            (F.col("doc_id") % 50).alias("src"),
             (
-                ((F.col("doc_id") % n_hosts) * (F.col("doc_id") % n_hosts)
-                 + F.col("i") * 13 + 1) % n_hosts
+                ((F.col("doc_id") % 50) * (F.col("doc_id") % 50)
+                 + F.col("i") * 13 + 1) % 50
             ).alias("dst"),
         )
         .distinct()

@@ -41,6 +41,20 @@ RUNTIME_CONFS: dict[str, str] = {
 _SHIPPED_APP_IDS: set[str] = set()
 
 
+def _package_files(pkg_dir: str) -> list[tuple[str, str]]:
+    """(archive name, path) of every package file, sorted; bytecode
+    caches are left out, since they change without the source."""
+    root = os.path.dirname(pkg_dir)
+    out = []
+    for dirpath, dirnames, filenames in os.walk(pkg_dir):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for name in filenames:
+            if not name.endswith(".pyc"):
+                path = os.path.join(dirpath, name)
+                out.append((os.path.relpath(path, root), path))
+    return sorted(out)
+
+
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to Python workers via ``sc.addPyFile``.
 
@@ -50,27 +64,47 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     When the driver process happens to run from the repo root the cwd
     makes that work by accident; an externally built session running
     anywhere else — and every real multi-node cluster — needs the
-    package shipped. One zip per SparkContext, cached on app id."""
+    package shipped. One zip per SparkContext, cached on app id.
+
+    The zip is named by a digest of the package files' relative paths
+    and bytes, so a zip left by an older package version is never
+    shipped, and an unchanged package is zipped once per temp dir. It
+    is built under a temporary name and moved into place, so
+    concurrent processes never read a half-written zip."""
     sc = spark.sparkContext
     app_id = sc.applicationId
     if app_id in _SHIPPED_APP_IDS:
         return
-    import shutil
+    import hashlib
     import tempfile
+    import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_base = os.path.join(
-        tempfile.gettempdir(), f"ethiopia_legal_etl_spark_pyfiles_{os.getpid()}"
+    files = _package_files(os.path.dirname(os.path.abspath(__file__)))
+    digest = hashlib.sha256()
+    for arcname, path in files:
+        digest.update(arcname.encode() + b"\0")
+        with open(path, "rb") as f:
+            digest.update(f.read())
+        digest.update(b"\0")
+    tmp_dir = tempfile.gettempdir()
+    zip_path = os.path.join(
+        tmp_dir, f"ethiopia_legal_etl_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
     )
-    if not os.path.exists(zip_base + ".zip"):
-        shutil.make_archive(
-            zip_base,
-            "zip",
-            root_dir=os.path.dirname(pkg_dir),
-            base_dir=os.path.basename(pkg_dir),
-        )
+    if not os.path.exists(zip_path):
+        fd, part = tempfile.mkstemp(suffix=".zip.part", dir=tmp_dir)
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(
+                f, "w", zipfile.ZIP_DEFLATED
+            ) as zf:
+                for arcname, path in files:
+                    zf.write(path, arcname)
+            os.chmod(part, 0o644)  # mkstemp's 0600 would hide it from other users
+            os.replace(part, zip_path)
+        except BaseException:
+            os.unlink(part)
+            raise
     try:
-        sc.addPyFile(zip_base + ".zip")
+        sc.addPyFile(zip_path)
     except Exception:
         pass  # e.g. Spark Connect sessions without an sc; cwd fallback applies
     _SHIPPED_APP_IDS.add(app_id)

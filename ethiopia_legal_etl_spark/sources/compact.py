@@ -85,7 +85,7 @@ def compact_parquet_dir(
     # a crashed prior run can leave .__compact_tmp / .__compact_bak
     # behind; a stale bak would make the swap's rename(live, bak)
     # fail — or NEST live inside the old bak on HDFS-like filesystems
-    # (ADVICE r4). Clear both before starting.
+    #. Clear both before starting.
     _cleanup_stale(spark, path)
     laid_out.write.mode("overwrite").parquet(tmp)
     _swap(spark, path, tmp)

@@ -137,7 +137,7 @@ class LegalFeedWriter(DataSourceWriter):
     the same recipe as sources/shards.py). abort() records the
     failure marker instead of half-published data.
 
-    Write modes (ADVICE r7 — the overwrite flag used to be ignored,
+    Write modes (the overwrite flag used to be ignored,
     which left stale part files from a previous write visible to
     glob-based readers and broke the 'manifest names exactly the
     staged parts' invariant on a second write): mode('overwrite')

@@ -39,7 +39,7 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
     actually uses (same `_fs` seam as sources/compact.py), so the
     manifest lands next to the shards on HDFS/S3A — a local
     pathlib write would target a bogus local path for any
-    non-local URI (ADVICE r4)."""
+    non-local URI."""
     fs, p, _ = _fs(spark, path)
     out = fs.create(p, True)
     try:

@@ -537,7 +537,7 @@ def _make_running_totals_processor():
     differential test can drive handleInputRows with a fake ValueState
     even where the TWS protobuf state channel is unavailable — the
     processor LOGIC stays exercised while the channel test skips
-    (VERDICT r5 #6). The base-class import is protobuf-free; only the
+   . The base-class import is protobuf-free; only the
     runtime state server needs the wheel."""
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (

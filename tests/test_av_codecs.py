@@ -194,7 +194,7 @@ def test_compressed_wav_rejects_foreign_payloads():
     with pytest.raises(ValueError, match="mono"):
         decode_compressed_wav(b"RIFF" + struct.pack("<I", len(body2)) + body2)
     # fmt chunk shorter than 16 bytes: must raise ValueError (the
-    # pipeline's isolation contract), not leak struct.error (ADVICE r5)
+    # pipeline's isolation contract), not leak struct.error
     body3 = b"WAVE" + b"fmt " + struct.pack("<I", 8) + b"\x00" * 8
     body3 += b"data" + struct.pack("<I", 2) + b"\xff\xff"
     with pytest.raises(ValueError, match="short fmt"):

@@ -130,7 +130,7 @@ def test_kaplan_meier_survival_properties(spark, sf_dir):
 
 
 def test_theil_sen_trailing_window_bounds_pairs(spark, monkeypatch):
-    """VERDICT r8 #5: trailing_days clips the per-type series BEFORE
+    """trailing_days clips the per-type series BEFORE
     the pair join — a 200-day history at trailing_days=90 must cost
     exactly C(90,2) pairs per type, and the slope must reflect only
     the trailing segment (here: the late-regime slope, not a blend)."""

@@ -1,4 +1,4 @@
-"""Cache-scoping gate (r15, VERDICT r14 #5).
+"""Cache-scoping gate.
 
 Spark's CacheManager matches by logical plan, so a .cache()/.persist()
 with no unpersist outlives its query: the NEXT identically-built run

@@ -97,7 +97,7 @@ def test_compact_sorted_mode_preserves_pruning(spark, sf_dir, tmp_path):
 def test_compact_clears_stale_swap_artifacts(spark, sf_dir, tmp_path):
     """A crashed prior run leaves .__compact_bak/.__compact_tmp behind;
     the next compaction must clear them and still succeed — a stale bak
-    would otherwise fail (or nest) the rename swap (ADVICE r4)."""
+    would otherwise fail (or nest) the rename swap."""
     from pathlib import Path
 
     path = _fragmented(spark, sf_dir, tmp_path, n_files=10)

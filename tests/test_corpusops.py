@@ -497,7 +497,7 @@ def test_entropy_degenerate_doc_is_zero(spark):
     assert abs(cnt["h"]) < 1e-12
 
 
-# ---------- BPE at real-vocab scale (VERDICT r4 #1) ----------
+# ---------- BPE at real-vocab scale ----------
 
 
 def _rich_corpus(spark, tmp_path, n_words=400, n_docs=200):
@@ -898,7 +898,7 @@ def test_span_corruption_mask_density_and_runs(spark, sf_dir):
 
 
 def test_token_entropy_stable_under_shuffle_partition_count(spark, sf_dir):
-    """VERDICT r7 #3 pin: the c*ln(c) term sum is an ordered fold over
+    """Pin: the c*ln(c) term sum is an ordered fold over
     count-of-counts, so the emitted doubles must be BIT-IDENTICAL no
     matter how partial aggregation groups the terms — probed by
     running the same builders under 1, 7 and 200 shuffle partitions.

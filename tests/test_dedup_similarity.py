@@ -807,7 +807,7 @@ def test_mmr_matches_greedy_python_replay(spark, sf_dir):
 def test_reliable_barrier_mode_matches_localcheckpoint(
     spark, sf_dir, tmp_path_factory
 ):
-    """ADVICE r9 / SCALING.md cluster posture: with
+    """SCALING.md checkpoint posture: with
     spark.ethiopia_legal_etl.reliableBarriers=true AND a checkpoint dir
     set, the ml reorder barriers write a RELIABLE checkpoint
     (fault-tolerant storage — survives executor loss) instead of
@@ -832,7 +832,7 @@ def test_reliable_barrier_mode_matches_localcheckpoint(
             for r in similarity_lsh_buckets(spark, sf_dir).collect()
         }
     finally:
-        # restore BOTH pieces of leaked session state (ADVICE r10): the
+        # restore BOTH pieces of leaked session state: the
         # conf flag AND the checkpoint dir — a later test flipping
         # reliableBarriers (or any code reading getCheckpointDir) must
         # see the shared fixture as it found it. Scala's

@@ -1,4 +1,4 @@
-"""Hard CI gate over the FULL registry (ADVICE r3, medium): the
+"""Hard CI gate over the FULL registry: the
 driver's external harness checks only the first 50 entries
 (registry.DRIVER_WINDOW — disclosed in COVERAGE.md and README), which
 means a regression in any of the ~107 entries outside the window would

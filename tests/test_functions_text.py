@@ -181,7 +181,7 @@ class TestCanonicalizeUrl:
     def test_ipv6_and_malformed_port(self):
         from ethiopia_legal_etl_spark.functions.text import canonicalize_url
 
-        # ADVICE r5: hostname strips IPv6 brackets; must re-bracket
+        # hostname strips IPv6 brackets; must re-bracket
         assert canonicalize_url("http://[::1]/x") == "http://[::1]/x"
         assert (
             canonicalize_url("HTTP://[2001:DB8::1]:80/a")

@@ -39,7 +39,7 @@ EMB_UNGUARDED = {"embedding_norms"}
 
 def _expanded_source(fn) -> str:
     """Builder source PLUS one level of intra-module helper functions
-    it references (ADVICE r11 #3: a builder that loads events/
+    it references (a builder that loads events/
     embeddings through a module-local helper — or names the table via
     a module-local string constant — must not silently escape the
     census). Only same-module symbols are expanded: shared
@@ -75,7 +75,7 @@ def test_census_matched_population_is_sane():
     """The two censuses must each keep matching a healthy population —
     if a refactor routes table loads through a path the source scan
     can't see, the matched count collapses and this trips before the
-    guard gates go quietly vacuous (ADVICE r11 #3)."""
+    guard gates go quietly vacuous."""
     value_consumers = emb_consumers = 0
     for _name, src in _builder_sources():
         if '"events"' in src and ('"value"' in src or "'value'" in src):

@@ -90,7 +90,7 @@ def test_real_decode_operator_single_parallelism_shuffle(spark, sf_dir):
 
 def test_wav_rejects_non_byte_aligned_bits():
     """12-bit PCM: bits%8 != 0 would make bytes-per-frame silently
-    wrong; the fmt guard must reject it like bits<8 (ADVICE r4)."""
+    wrong; the fmt guard must reject it like bits<8."""
     import struct
 
     fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * 2, 2, 12)

@@ -79,8 +79,8 @@ def test_money_micro_exhaustive_2dp_domain(spark):
 
 
 def test_money_micro_known_divergences_outside_domain(spark):
-    # ADVICE r14 asked for a directed fuzz around the x.xx5 tie
-    # neighborhoods; the r15 fuzz FOUND divergences there — proof the
+    # A directed fuzz around the x.xx5 tie
+    # neighborhoods FOUND divergences there — proof the
     # docstring's domain restriction is load-bearing, pinned here as
     # documentation instead of asserted away. Neither value is an
     # exact-2dp double, so neither can reach the engine's money
@@ -107,7 +107,7 @@ def test_money_micro_known_divergences_outside_domain(spark):
 
 
 def test_money_micro_large_magnitude_divergence_pinned(spark):
-    # VERDICT r14 #8 asked for a boundary case at the magnitude limit.
+    # A boundary case at the magnitude limit.
     # The r15 sweep near 2**53/scale found the identity does NOT hold
     # for arbitrary doubles there (doubles are spaced ~0.0156 apart at
     # 9e13, so +0.5 stops being a faithful HALF_UP) — pinned as a

@@ -196,7 +196,7 @@ def test_fuzz_arbitrary_bytes_reject_cleanly(payload):
 def test_fuzz_corrupted_valid_frame_rejects_or_parses(noise, cut):
     """Splicing noise into a valid frame must never escape the
     ValueError contract (the negative-Content-Length class of bug the
-    WARC parser shipped — ADVICE r5 — found by exactly this shape of
+    WARC parser once shipped, found by exactly this shape of
     fuzz)."""
     allocations, scf, samples = _synth_frame_inputs(9)
     good = write_layer1_frame(allocations, scf, samples)

@@ -2,7 +2,7 @@
 reference's OWN fixtures (/root/reference/vol01.pdf, vol02.pdf — the
 only reference artifacts the engine processes byte-for-byte).
 
-This closes VERDICT r2 gap #2: with neither pdfplumber nor PyMuPDF in
+With neither pdfplumber nor PyMuPDF in
 the container, default_extractor previously could only run with
 injected fakes; functions/pdftext.py gives it a real third fallback
 able to read the reference corpus (FlateDecode + ObjStm + ToUnicode
@@ -117,7 +117,7 @@ def test_extract_pages_robust_to_corrupt_bytes():
 
 @needs_fixtures
 def test_json_file_sink_byte_parity_with_reference(spark, tmp_path):
-    """A-15 byte parity (VERDICT r3 #5): write_documents_json_files
+    """A-15 byte parity: write_documents_json_files
     must produce files byte-identical to the reference's
     `json.dump(doc, f, ensure_ascii=False, indent=2)`
     (fetch_legal_docs.py:74-89), re-executed here in plain Python on

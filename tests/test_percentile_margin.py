@@ -1,5 +1,4 @@
-"""Scale-bound gate for approx_percentile_price's exactness claim
-(ADVICE r12 #1 / VERDICT r12 #3).
+"""Scale-bound gate for approx_percentile_price's exactness claim.
 
 The entry's DuckDB oracle (percentile_disc) is only value-identical to
 Spark's approx_percentile while every group's sample count stays under

@@ -57,7 +57,7 @@ def test_semi_join_planned_as_semi(spark, sf_dir):
 
 
 def test_pair_scoring_similarity_has_no_exists_scan(spark, sf_dir):
-    """r11 perf pin (VERDICT r10 #1): the pair-scoring cosine entries
+    """r11 perf pin: the pair-scoring cosine entries
     derive encoder-guard finiteness from the precomputed L2-norm
     column (with_norm), NOT a per-element exists(isnan|isinf) HOF
     conjunct — the exists form cost similarity_cosine_topk a measured
@@ -118,8 +118,8 @@ BNLJ_ALLOWED = {
 }
 
 
-# r9 (plan-level successor to the '# bounded:' comment convention —
-# VERDICT r8's "single-partition-window blind spot"): every Exchange
+# Plan-level successor to the '# bounded:' comment convention (the
+# "single-partition-window blind spot"): every Exchange
 # SinglePartition in a registered plan is a one-reducer funnel, so
 # each one is audited and pinned here. Every pinned count below is a
 # BOUNDED input by construction — one of:
@@ -303,7 +303,7 @@ def test_range_frame_window_partitioned(spark, sf_dir):
 
 
 def test_batch_padding_waste_no_corpus_single_partition_window(spark, sf_dir):
-    """VERDICT r8 #2: batch_padding_waste decomposes its global
+    """batch_padding_waste decomposes its global
     (n_tok, doc_id) rank as bounded-prefix + within-length rank, so
     the CORPUS rows must flow through a Window PARTITIONED by n_tok;
     the only SinglePartition exchange allowed is the one feeding the
@@ -434,7 +434,7 @@ SHUFFLE_BUDGET = {
     "corpus_host_cap": 1,
     "chunk_overlap_windows": 0,
     # +1 each in r8: the count-of-counts regroup for the
-    # reassociation-free entropy fold (VERDICT r7 #3) — the extra
+    # reassociation-free entropy fold — the extra
     # exchange carries (doc, c, m) tuples, sqrt(n_tokens) rows/doc,
     # negligible next to the (doc, token) shuffle it follows
     "text_token_entropy": 3,
@@ -486,7 +486,7 @@ SHUFFLE_BUDGET = {
     "event_pattern_funnels": 1,  # single (user, day) aggregate
     "sketch_kmv_cooccurrence": 5,  # mem distinct, sketch window, merge agg, pair window reuse, exact gate
     "aqp_sampled_revenue": 2,  # sampled agg + exact-evidence agg (3-row join)
-    # r9 changed/converted entries (VERDICT r8 #2/#3/#6a)
+    # entries converted to oracle-checked or prefix-offset shapes
     "batch_padding_waste": 4,  # 1 corpus n_tok window + 3 bounded
     #   (map-side per-length counts, SinglePartition prefix, batch agg)
     "dedup_minhash_lsh": 1,  # banded candidate equi-join
@@ -534,7 +534,7 @@ def test_count_single_partition_exchanges_convention(spark, sf_dir):
 
 
 def test_count_single_partition_regex_edge_cases():
-    """Pin the two under-count modes ADVICE r9 named in the SP gate
+    """Pin the two under-count modes of the SP gate
     (both would let a one-reducer funnel pass silently): (a) a detail
     block that terminates the plan string with NO trailing blank
     line; (b) a ReusedExchange whose target is a SinglePartition
@@ -648,7 +648,7 @@ def test_nfc_single_arrow_eval(spark, sf_dir):
     norm_text column feeds len_after/norm_text/changed, and Catalyst's
     Python-UDF extraction must collapse that into a single
     ArrowEvalPython node. Pinned so a plan-extraction change can never
-    silently run the normalizer 3x over the corpus (VERDICT r4 #4)."""
+    silently run the normalizer 3x over the corpus."""
     from ethiopia_legal_etl_spark.operators.registry import all_queries
 
     df = all_queries()["text_unicode_nfc"].builder(spark, sf_dir)

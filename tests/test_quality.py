@@ -27,7 +27,7 @@ _spec.loader.exec_module(_trainer)
 
 
 def test_garbage_scores_below_curated(spark, sf_dir):
-    """The VERDICT r4 #3 acceptance property, on HELD-OUT garbage
+    """The quality model's acceptance property, on HELD-OUT garbage
     (fresh seed, never seen in training): garbage documents must score
     below curated documents, and the is_quality gate must separate
     them with high accuracy."""

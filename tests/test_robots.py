@@ -87,7 +87,7 @@ def test_pattern_matcher_star_and_anchor_semantics():
 
 
 def test_anchored_suffix_repeated_in_path_still_matches():
-    # ADVICE r5 (high): greedy-LEFTMOST placement of the final literal
+    # Greedy-LEFTMOST placement of the final literal once
     # landed on the early '.pdf' and reported these as NON-matching —
     # the crawl gate failed OPEN on disallowed URLs
     assert _pattern_matches("/*.pdf$", "/a.pdf.pdf")

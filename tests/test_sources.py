@@ -146,7 +146,7 @@ def test_legalfeed_custom_writer_roundtrip_with_manifest(spark, sf_dir, tmp_path
 
 
 def test_legalfeed_writer_overwrite_and_append_modes(spark, sf_dir, tmp_path):
-    """ADVICE r7: the writer used to ignore the overwrite flag, so a
+    """The writer used to ignore the overwrite flag, so a
     second write left stale part files that glob readers would mix
     with the new ones. Now overwrite removes pre-existing parts at
     commit, and append into a committed target is rejected."""

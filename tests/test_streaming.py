@@ -285,7 +285,7 @@ def test_streaming_foreach_batch_sink(spark, events_stream_dir, tmp_path):
 
 
 def test_streaming_foreach_batch_restart_exactly_once(spark, sf_dir, tmp_path):
-    """Restart recovery for the foreachBatch sink (VERDICT r3 #7): the
+    """Restart recovery for the foreachBatch sink: the
     query is killed AFTER a batch's output is written but BEFORE its
     checkpoint commit — the worst-case window. On restart from the
     same checkpoint that batch is re-delivered; the batch-id-keyed
@@ -414,8 +414,8 @@ def test_streaming_transform_with_state(spark, events_stream_dir):
 
 
 def test_tws_processor_logic_matches_batch_aggregate(spark, events_stream_dir):
-    """Pure-batch differential for the RunningTotals processor
-    (VERDICT r5 #6): the TWS state CHANNEL needs the absent protobuf
+    """Pure-batch differential for the RunningTotals processor:
+    the TWS state CHANNEL needs the absent protobuf
     wheel, but the processor's handleInputRows logic is plain Python
     over pandas batches — drive it directly with a fake ValueState,
     replaying each user's rows split across multiple micro-batch

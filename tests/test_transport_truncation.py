@@ -1,4 +1,4 @@
-"""Corruption axis 9 (VERDICT r10 #4): binary payloads cut mid-stream.
+"""Corruption axis 9: binary payloads cut mid-stream.
 
 A failed object-store GET / partial multipart upload is as routine at
 100 TB as a failed fetch. Two contracts, each pinned here:

@@ -99,7 +99,7 @@ def test_malformed_rejected_not_misparsed():
         parse_warc(b"WARC/1.0\r\nWARC-Type: response\r\n\r\n")
     with pytest.raises(ValueError, match="gzip"):
         parse_warc(write_warc(_recs(2, 2), compress=True)[:-10])
-    # ADVICE r5: a negative Content-Length moved pos backwards and
+    # A negative Content-Length once moved pos backwards and
     # looped the executor task forever; must reject, not hang
     with pytest.raises(ValueError, match="negative"):
         parse_warc(

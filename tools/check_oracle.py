@@ -43,7 +43,7 @@ def normalize_cell(v) -> str:
 # same way Spark's collect() does.  Everything else — HUGEINT (SUM over
 # BIGINT), UHUGEINT, DECIMAL, unsigned ints — is rendered as float/Decimal
 # by the driver's pandas/arrow fetch and hash-mismatches value-identical
-# integer results (VERDICT r5).
+# integer results.
 _SAFE_TYPE_RE = __import__("re").compile(
     r"^(BIGINT|INTEGER|SMALLINT|TINYINT|DOUBLE|FLOAT|VARCHAR|BOOLEAN"
     r"|DATE|TIMESTAMP(?: WITH TIME ZONE)?|BLOB"

@@ -105,7 +105,7 @@ NORARE_PLANS = dict(
     },
 )
 
-# r14 axis (VERDICT r13 #1): degenerate CLOCK. Every event lands in
+# r14 axis: degenerate CLOCK. Every event lands in
 # ONE microsecond and the whole calendar collapses to one day —
 # time-delta denominators (TWAP gap weights, session gaps, LOCF
 # spines, funnel windows, EWMA/KS orderings, seasonal-naive MASE

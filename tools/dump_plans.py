@@ -7,13 +7,13 @@ running anything.
 
 With --out DIR: write the full `.explain('formatted')` of each query
 (default: bench.py's HEADLINE + SECONDARY) at sf0.1 to
-DIR/<query>_<TAG>.txt — an optimization round's before/after evidence
+DIR/<query>_<TAG>.txt — a change's before/after plan evidence
 (spark_optimization_guide.md §1: capture plan shape — Exchange count,
 join strategy, PushedFilters/ReadSchema, codegen spans, Python-eval
 nodes — before touching anything).
 
 Usage: python tools/dump_plans.py > PLANS.md
-       python tools/dump_plans.py --out plans/rN TAG [query ...]
+       python tools/dump_plans.py --out DIR TAG [query ...]
          TAG = "before" | "after"
 """
 

@@ -11,8 +11,7 @@ exactly how TPC-H itself scales.
 
 `replicate_sf` is the repo's one table replicator (tools/scale_probe.py
 runs registry queries on its output); `write_copies` is the
-union-of-copies writer under it, which scale_probe also uses for its
-probe-specific copies (token prefixes, 97-aligned id shifts).
+union-of-copies writer under it.
 
 Usage: python tools/make_sf_replica.py OUT_DIR [--factor 10] [--src /root/testdata/sf0.1]
 """
@@ -55,37 +54,23 @@ DOMAIN_OWNER = {
 VERBATIM = ("nation", "region")
 
 
-def union_copies(base: DataFrame, factor: int, copy) -> DataFrame:
-    """Union of `factor` copies of `base`; copy i is `copy(base, i)`."""
-    return functools.reduce(
+def write_copies(base: DataFrame, factor: int, copy, path: str) -> None:
+    """Write the union of `factor` copies of `base` (copy i is
+    `copy(base, i)`) to parquet at `path` as max(8, 2×factor) files, so
+    scans of the copy parallelize like a real table's."""
+    functools.reduce(
         DataFrame.unionByName, (copy(base, i) for i in range(factor))
-    )
+    ).repartition(max(8, factor * 2)).write.mode("overwrite").parquet(path)
 
 
-def write_copies(
-    base: DataFrame, factor: int, copy, path: str, n_files: int | None = None
-) -> None:
-    """Write `union_copies(base, factor, copy)` to parquet at `path` as
-    `n_files` files (default max(8, 2×factor)), so scans of the copy
-    parallelize like a real table's."""
-    union_copies(base, factor, copy).repartition(
-        n_files or max(8, factor * 2)
-    ).write.mode("overwrite").parquet(path)
-
-
-def replicate_sf(
-    spark, src: str, out_dir: str, factor: int, tables=None
-) -> str:
-    """Key-consistent `factor`-fold copy of the `tables` (default: all)
-    of sf dir `src` into `out_dir`; returns `out_dir`."""
-    tables = tables or (*VERBATIM, *SHIFTS)
-    domains = {dom for t in tables for dom in SHIFTS.get(t, {}).values()}
+def replicate_sf(spark, src: str, out_dir: str, factor: int) -> str:
+    """Key-consistent `factor`-fold copy of every table of sf dir `src`
+    into `out_dir`; returns `out_dir`."""
     offsets = {
         dom: spark.read.parquet(f"{src}/{t}.parquet").agg(F.max(c)).first()[0] + 1
         for dom, (t, c) in DOMAIN_OWNER.items()
-        if dom in domains
     }
-    for t in tables:
+    for t in (*VERBATIM, *SHIFTS):
         base = spark.read.parquet(f"{src}/{t}.parquet")
         path = f"{out_dir}/{t}.parquet"
         if t in VERBATIM:

@@ -93,7 +93,7 @@ NULLABLE = {
     "embeddings": ["embedding", "label"],
 }
 
-# r10 corruption axis (VERDICT r9 #4): MALFORMED values, not just
+# r10 corruption axis: MALFORMED values, not just
 # NULLs — a partial instrumentation payload (truncated JSON) is as
 # routine as a failed fetch, and the engines genuinely diverge on it:
 # Spark get_json_object/try_parse_json yield NULL where DuckDB's
