@@ -69,29 +69,29 @@ HEADLINE = [
     "pipeline_training_corpus",
 ]
 
-# Secondary (non-headline) section: the r5 Python-stage heavyweights.
+# Secondary (non-headline) section: the Python-stage heavyweights.
 # NOT part of the frozen headline total — the 27-query set predates
 # them and stays comparable across rounds — but timed and reported
 # each round so perf regressions in the mapInPandas codec/archive
-# operators are visible. r6 is their baseline.
+# operators are visible.
 SECONDARY = [
     "warc_to_text_pipeline",
     "multimodal_decode_audio_compressed",
-    # r6: the Layer I decoder is the round's Python-stage heavyweight
+    # the Layer I decoder: a Python-stage heavyweight
     "multimodal_decode_mpeg1",
-    # r6 (late): the two-pass DSIR scorer is the round's heaviest new
+    # the two-pass DSIR scorer: a heavy
     # relational plan (corpus explode x2 + broadcast weight join)
     "dsir_importance_select",
-    # r6 (late): EM train + Viterbi encode in one entry — the
+    # EM train + Viterbi encode in one entry — the
     # mapInPandas E-step/encode heavyweight (operators/unigram.py)
     "unigram_encode_tokens",
-    # r7: the two most expensive r6-late shapes with no
-    # round-over-round tracking — distributed EM over the word table,
-    # and the iterative min-label fixpoint closure. r7 is their baseline.
+    # the two most expensive shapes otherwise untracked —
+    # distributed EM over the word table, and the iterative
+    # min-label fixpoint closure.
     "unigram_train_vocab",
     "dedup_cluster_jaccard",
-    # r7: corpus-wide 8-token-gram count + join back — the heaviest
-    # new shuffle shape this round. r7 is its baseline.
+    # corpus-wide 8-token-gram count + join back — a heavy
+    # shuffle shape.
     "dedup_substring_fraction",
 ]
 
@@ -102,9 +102,9 @@ LOAD_START = os.getloadavg()
 def read_cpu_times() -> tuple[int, int]:
     """(steal_ticks, total_ticks) from /proc/stat's aggregate cpu line.
     Steal only counts hypervisor-withheld time; memory-bandwidth
-    contention is invisible here (r10's confound), which is exactly
+    contention is invisible here (a confound seen before), which is exactly
     why the A/B mode below exists — but an episodic steal burst (like
-    the 49 s dedup_substring_fraction outlier the r10 judge hit) shows
+    a 49 s dedup_substring_fraction outlier seen in review) shows
     up per-run instead of being argued from medians."""
     with open("/proc/stat") as f:
         fields = f.readline().split()
@@ -163,7 +163,7 @@ def main() -> None:
     # keeps only the last ~2000 bytes of stdout, so everything the
     # cross-round comparison needs must fit in that one last line.
     # Per-run steal vectors live HERE, never in the summary: putting
-    # them in the summary line pushed it past 4 KB in r11 and the
+    # them in the summary line pushed it past 4 KB once and the
     # driver's tail cut off the headline value — build_summary()
     # enforces the byte budget.
     print(
@@ -172,7 +172,7 @@ def main() -> None:
                 "detail_runs": all_runs,
                 "spread": spreads,
                 # full per-query per-run steal vectors — this IS the
-                # r11 "steal_pct_runs" attribution, relocated out of
+                # "steal_pct_runs" attribution, relocated out of
                 # the summary line; the >0.5%-filtered duplicate that
                 # briefly sat beside it was dropped
                 "steal_pct": run_steal,
@@ -233,7 +233,7 @@ def run_query(
 
 # Hard budget for the final stdout line. The driver records only the
 # last ~2000 bytes of stdout; BENCH_r11.json came back "parsed": null
-# because the summary line grew past 4 KB. r10's line
+# because the summary line grew past 4 KB. The line before that
 # was 1462 bytes, so 1800 leaves headroom for timing-digit drift while
 # still fitting the 2000-byte tail. tests/test_bench_contract.py
 # builds a worst-case summary and asserts this budget.
@@ -271,14 +271,14 @@ def build_summary(
                 round(sum(all_runs[n][i] for n in HEADLINE), 3)
                 for i in range(4)
             ],
-            # r2 and earlier reported best-of-3; emitted alongside
-            # so cross-round diffs don't read the r3 methodology
+            # earlier versions reported best-of-3; emitted alongside
+            # so cross-version diffs don't read the methodology
             # change as a perf change
             "value_min_of_runs": round(
                 sum(min_timings[n] for n in HEADLINE), 3
             ),
             # non-headline heavyweights (frozen total excludes them);
-            # timed as build+write since r7 (iterative ops compute
+            # timed as build+write (iterative ops compute
             # eagerly inside builder)
             "secondary_stat": "build_plus_write",
             "secondary": {n: timings[n] for n in SECONDARY},
@@ -301,7 +301,7 @@ def build_summary(
     )
     if len(line.encode()) >= SUMMARY_MAX_BYTES:
         # Never let the full summary overflow the driver's tail the
-        # way r11's did: degrade to an ultra-compact core that always
+        # way one did before: degrade to an ultra-compact core that always
         # fits. The unit test treats reaching this branch as a
         # failure, so in-repo growth is caught before the driver runs.
         line = json.dumps(
@@ -349,18 +349,18 @@ def main_ab(ref_dir: str, only: list[str] | None = None) -> None:
     """Interleaved A/B: this tree vs a pinned prior tree, one
     persistent worker subprocess (and SparkSession/JVM) per tree,
     alternating cur/ref runs per query so host drift hits both sides
-    equally. The r10 dispute (a +27% 'regression' that was 90% host)
+    equally. An earlier dispute (a +27% 'regression' that was 90% host)
     needed a judge-side manual worktree A/B; this automates it.
 
     `only` (CLI: --only name1,name2) restricts to a subset — re-checking
-    ONE anomalous entry shouldn't cost the full ~15-minute sweep (the
-    r12 audio-entry artifact chase motivated this). The headline-ratio
+    ONE anomalous entry shouldn't cost the full ~15-minute sweep (an
+    audio-entry artifact chase motivated this). The headline-ratio
     summary value is then computed over the subset's headline members
     and labeled ab_subset_ratio so a partial ratio can't be read as
     the frozen headline number."""
     # validate the subset BEFORE spawning workers — a SystemExit after
     # spawn orphans two JVMs (caught by driving the error path during
-    # the r12 --only smoke test)
+    # an --only smoke test)
     all_names = HEADLINE + SECONDARY
     if only:
         unknown = [n for n in only if n not in all_names]
@@ -406,7 +406,7 @@ def main_ab(ref_dir: str, only: list[str] | None = None) -> None:
 
     # spawn both under a guard: if the ref tree's worker fails (bad
     # path, missing package, hung Spark startup), the already-running
-    # cur worker's JVM must not be orphaned (r11 self-review)
+    # cur worker's JVM must not be orphaned (found in self-review)
     workers: dict[str, subprocess.Popen] = {}
     try:
         workers["cur"] = spawn(REPO)

@@ -1,5 +1,5 @@
 """Dependency-free baseline JPEG codec (grayscale, single component,
-sequential DCT — ITU-T T.81 baseline subset), closing the r4 "JPEG
+sequential DCT — ITU-T T.81 baseline subset), closing the earlier "JPEG
 remains stubbed pending PIL" gap the same way functions/pdftext.py
 closed PDF extraction: a from-scratch byte-level implementation of the
 public spec, exercised end-to-end in-container.
@@ -357,7 +357,7 @@ def decode_jpeg(payload: bytes) -> dict:
                 # decode-bomb guard: SOF0 can declare 65535×65535; cap
                 # materialized pixels (64 MPx) so a hostile header
                 # rejects instead of exhausting executor memory on the
-                # pre-scan image allocation (r7 decoder audit)
+                # pre-scan image allocation (decoder audit)
                 raise ValueError("image too large to decode")
             if ncomp != 1:
                 raise ValueError("only single-component (grayscale) supported")

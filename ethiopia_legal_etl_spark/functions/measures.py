@@ -2,7 +2,7 @@
 
 Instrumentation emits NaN (0/0 rates) and Inf (overflowed counters)
 into metric columns as routinely as failed fetches emit NULL text —
-the null mirror's corruption axis 8 (tools/nulls_mirror.py) plants
+the nulls mirror's corruption axis 8 (tools/mirrors.py) plants
 them in ~10% of `events.value`. The engines diverge hard on them:
 
 - the repo's fixed-point exactness policy multiplies measures into
@@ -16,7 +16,7 @@ them in ~10% of `events.value`. The engines diverge hard on them:
 
 Policy: map non-finite → NULL at the entry's events scan, on both
 engines. Every events entry already proved its NULL-value semantics
-against the r9 null mirror, so "failed reading = NULL reading" reuses
+against the nulls mirror, so "failed reading = NULL reading" reuses
 verified behavior and — unlike a row filter — preserves row topology
 (sessionization, counts, and window frames keep every event; only the
 measure is marked unavailable).
@@ -44,7 +44,7 @@ CIs, ECDFs, folds feeding estimates) must clean: the silent-bias
 class (non-finite sorts greatest on both engines, so `value >= t`
 quietly counts failed readings as successes) was fixed in
 proportion_wilson_ci / drift_ks_two_sample / ewma_user_value
- and join_nullsafe_eq's grade counts (r11 census).
+ and join_nullsafe_eq's grade counts (found by a census of the registry).
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ values on both engines, division last). That is value-correct but
 slow at the aggregate buffer: a Spark SUM over DECIMAL(12,2) carries a
 DECIMAL(22,2) buffer, and any precision above 18 leaves the compact
 long representation — every buffer update serializes a BigDecimal
-(measured r14: the q1 aggregate alone cost ~0.85 s of a 1.1 s query
+(measured: the q1 aggregate alone cost ~0.85 s of a 1.1 s query
 at sf0.1, vs ~0.05 s for the identical sums over longs).
 
 This module respells the SAME values as integer "micro" units
@@ -30,7 +30,7 @@ safe, which this is by construction):
     of magnitude below.
   * ties: for values whose shortest decimal repr runs PAST the target
     scale (x.xx5 and its ulp neighborhood) the two paths can genuinely
-    disagree — the r15 directed fuzz found live
+    disagree — a directed fuzz found live
     counterexamples in both directions (37478.825 floors low on the
     float path; nextafter(56720.035, 0) rounds high), now pinned in
     tests/test_money_micro.py. Such values are NOT exact-2dp doubles,

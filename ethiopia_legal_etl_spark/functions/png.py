@@ -133,7 +133,7 @@ def decode_png(payload: bytes) -> dict:
         # a short IHDR with a VALID CRC would otherwise leak
         # struct.error past the except-ValueError isolation — the
         # fuzzers can't reach this (they can't forge CRCs), so it
-        # needs an explicit guard (r7 decoder audit)
+        # needs an explicit guard (decoder audit)
         raise ValueError("malformed IHDR: wrong length")
     w, h, depth, ctype_n, comp, filt, interlace = struct.unpack(
         ">IIBBBBB", ihdr

@@ -3,8 +3,8 @@
 Corruption axis 9: at 100 TB, binary media arrives
 from an object store, and a failed GET / partial multipart upload
 hands the decoder bytes cut mid-stream as routinely as a failed fetch
-hands the text pipeline a NULL. Axes 1-8 plant corruption in the
-MIRRORED PARQUET (tools/nulls_mirror.py), but this engine's media
+hands the text pipeline a NULL. The other corruption axes live in the
+MIRRORED PARQUET (the nulls mirror in tools/mirrors.py), but this engine's media
 payloads are not table data — they are synthesized executor-side as
 deterministic functions of doc_id (the driver testdata has no binary
 column to corrupt) — so the truncation axis lives at the one place
@@ -64,7 +64,7 @@ def maybe_truncate(
         return payload
     # mille buckets, not deca: (h % 10) >= frac*10 quantized every
     # frac in (0, 0.1] up to 10% — a corruptTransport=0.01 setting
-    # silently over-corrupted 10x (caught in the r11 self-review)
+    # silently over-corrupted 10x (caught in a self-review)
     if (_mix(key, salt) % 1000) >= frac * 1000:
         return payload
     return payload[: _mix(key, salt + 101) % max(1, len(payload))]

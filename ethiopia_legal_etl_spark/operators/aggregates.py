@@ -64,7 +64,7 @@ def agg_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # HLL sketch: estimate is engine-specific -> rows-only
     doc="approx_count_distinct (HyperLogLog) per group — the 100 TB path "
     "where exact distinct would shuffle every key. "
-    "Rows-only verdict (r12): NOT convertible — Spark's HLL++ "
+    "Rows-only verdict: NOT convertible — Spark's HLL++ "
     "register layout and bias correction are implementation-specific; "
     "DuckDB's approx_count_distinct is a different HLL, so estimates "
     "differ legitimately. Ground truth: relative-error envelope vs "
@@ -290,7 +290,7 @@ def percentile_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY o_orderstatus
     """,
     doc="approx_percentile — the 100 TB path (bounded-memory sketch "
-    "instead of a full sort). Oracle-checked since r12: exact at "
+    "instead of a full sort). Oracle-checked: exact at "
     "n_group <= ~accuracy/2 (all test SFs), approximate beyond — see "
     "the register() comment for the convertibility argument. Margin "
     ": max per-group count at sf0.1 is 50,189 orders "
@@ -350,7 +350,7 @@ def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,
     doc="seeded Bernoulli sample (TABLESAMPLE analog); row membership "
     "is engine-specific, size/bounds property-tested. "
-    "Rows-only verdict (r12): NOT convertible — membership comes from "
+    "Rows-only verdict: NOT convertible — membership comes from "
     "Spark's per-partition XORShiftRandom stream, not a re-derivable "
     "hash; deterministic-hash sampling IS oracle-checked via "
     "corpus_stratified_sample. Ground truth: binomial size bounds + "
@@ -405,7 +405,7 @@ def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # `+ 0` canonicalizes IEEE negative zero (-0.0 + 0.0 == +0.0):
     # a rounded covariance of -0.0 must hash identically to 0.0.
-    # corr() zero-variance guard (r13 constant-corpus sweep): Spark's
+    # corr() zero-variance guard (constant-corpus sweep): Spark's
     # Corr final expression is ck/sqrt(xMk*yMk) with NO zero guard, so
     # a constant column makes the built-in THROW under ANSI while
     # DuckDB CORR returns NULL. A CaseWhen over the aggregate does NOT
@@ -425,10 +425,10 @@ def stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stddev_pop(x) also counts rows where the OTHER column is NULL,
     # so under the 10%-nulls mirror the respelled ratio drifted ~7e-5
     # from both engines' true corr (clean data can't see it: the
-    # builds' sweeps all passed, the interrupted r14 build never
-    # re-ran the nulls gate). when(other IS NOT NULL, x) restricts
+    # clean sweeps all passed, and the nulls gate was not re-run
+    # then). when(other IS NOT NULL, x) restricts
     # each stddev to the pairwise-complete set; on null-free data the
-    # expression is bit-identical to the r13 form. Regression test:
+    # expression is bit-identical to the unrestricted form. Regression test:
     # tests/test_degenerate_stats.py::test_corr_pairwise_complete_under_nulls.
     q_pair = F.when(F.col("l_extendedprice").isNotNull(), F.col("l_quantity"))
     p_pair = F.when(F.col("l_quantity").isNotNull(), F.col("l_extendedprice"))
@@ -545,7 +545,7 @@ def listagg_nation_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "date-range distinct-count is a sketch merge, never a re-scan of "
     "raw events. Property-tested against the exact distinct count "
     "(tests/test_relational2.py shape: bounded relative error)."
-    " Rows-only verdict (r12): NOT convertible — DataSketches HLL "
+    " Rows-only verdict: NOT convertible — DataSketches HLL "
     "binary images and union are engine-specific. Ground truth: "
     "bounded relative error vs exact distinct counts (property test).",
 )
@@ -626,7 +626,7 @@ def median_bool_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fixed input layout), then counts per stratum. The train/eval-split "
     "and class-rebalancing primitive; property test bounds each "
     "stratum's count by binomial tails (tests/test_relational7.py)."
-    " Rows-only verdict (r12): NOT convertible — sampleBy membership "
+    " Rows-only verdict: NOT convertible — sampleBy membership "
     "rides the same engine RNG stream as sample_lineitem_fraction. "
     "Ground truth: per-stratum binomial-tail bounds "
     "(tests/test_relational7.py).",
@@ -652,7 +652,7 @@ def stratified_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "associatively, so 100 TB of events reduces to kilobytes before "
     "any frequency question is asked. CMS guarantees est >= true and "
     "est <= true + eps*N w.p. conf (property-tested)."
-    " Rows-only verdict (r12): NOT convertible — "
+    " Rows-only verdict: NOT convertible — "
     "org.apache.spark.util.sketch.CountMinSketch's hash family is "
     "JVM-internal, so collision noise is engine-specific; the Misra- "
     "Gries twin heavy_hitters_mg IS oracle-checked. Ground truth: CMS "
@@ -932,7 +932,7 @@ def mode_any_value_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
              AVG(POW(CAST(l.l_quantity AS DOUBLE) - m.mu, 4)) AS m4
       -- null-SAFE join: a NULL returnflag is a GROUP (Spark's groupBy
       -- keeps it); an equi-join here would silently drop it (caught
-      -- by the r9 full null-mirror sweep)
+      -- by the full null-mirror sweep)
       FROM lineitem l JOIN m ON l.l_returnflag IS NOT DISTINCT FROM m.flag
       GROUP BY 1
     )
@@ -1303,7 +1303,7 @@ def pivot_unpivot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag,
            CAST(n AS BIGINT) AS n_rows,
            -- zero-variance -> NULL (Spark side guarded identically;
-           -- r13 constant-corpus sweep)
+           -- constant-corpus sweep)
            CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
                  AND CAST(n * syy - sy * sy AS DOUBLE) > 0
                 THEN CAST(n * sxy - sx * sy AS DOUBLE)
@@ -1347,7 +1347,7 @@ def stats_corr_exact_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = (n * F.col("sxy") - sx * sy).cast("double")
     vx = (n * F.col("sxx") - sx * sx).cast("double")
     vy = (n * F.col("syy") - sy * sy).cast("double")
-    # Zero-variance / single-row guards (r13 constant-corpus sweep):
+    # Zero-variance / single-row guards (constant-corpus sweep):
     # a constant column makes vx (or vy) exactly 0 and a 1-row group
     # makes n*(n-1) = 0 — both divisions THROW under Spark ANSI.
     # Pearson r is undefined there: NULL, mirrored CASE-for-CASE in
@@ -1535,7 +1535,7 @@ def experiment_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_x = (n * F.col("sxx") - sx * sx).cast("double")
     var_y = (n * F.col("syy") - sy * sy).cast("double")
     # try_divide: a degenerate CLOCK (every event in the post-period —
-    # e.g. the whole shard timestamped in one microsecond, r14
+    # e.g. the whole shard timestamped in one microsecond, the
     # constant_ts sweep) zeroes every user's pre-period covariate, so
     # var(x) = 0 and theta is 0/0 — CUPED is undefined without
     # pre-period signal, so theta / mean_y_cuped / rho2 are NULL

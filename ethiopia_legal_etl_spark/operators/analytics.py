@@ -653,7 +653,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH g AS (
       -- COALESCE: a group whose event_types are ALL NULL must yield
       -- seq = '' like Spark's array_join (which skips null letters),
-      -- not STRING_AGG's NULL (r9 full null-mirror sweep); both
+      -- not STRING_AGG's NULL (full null-mirror sweep); both
       -- engines skip individual null letters identically
       SELECT user_id, CAST(DATE_TRUNC('day', ts) AS DATE) AS day,
              COALESCE(
@@ -753,7 +753,7 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NaN would otherwise flow arithmetic-poison through the rest of
     # the user's fold. The fold's NULL semantics (a NULL observation
     # NULLs the accumulator from that step on — the ewma is marked
-    # unavailable, the r9-mirror-proven behavior) now covers NaN/Inf
+    # unavailable, the null-mirror-proven behavior) now covers NaN/Inf
     # readings identically on both engines.
     ev = clean_measures(load_table(spark, sf_dir, "events"), "value").select(
         "user_id", "ts", "event_id", F.col("value").cast("double").alias("v")

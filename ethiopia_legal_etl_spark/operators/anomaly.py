@@ -592,7 +592,7 @@ def twap_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sharing one ts) makes every gap weight 0 while the rows
         # still survive the nxt-IS-NOT-NULL filter, so sum(wd) = 0 —
         # the TWAP is undefined over a zero-length span and must be
-        # NULL, not a job-killing ANSI DIVIDE_BY_ZERO (r13 verdict,
+        # NULL, not a job-killing ANSI DIVIDE_BY_ZERO (the
         # degenerate-clock class; oracle mirrors with CASE WHEN).
         (
             F.try_divide(

@@ -255,7 +255,7 @@ def abc_classification_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH v AS (
       -- null totalprices are not subjects of a trimmed MEAN, and
       -- leaving them in diverges the trim positions (Spark sorts
-      -- NULLS FIRST, DuckDB NULLS LAST — r9 full null-mirror sweep):
+      -- NULLS FIRST, DuckDB NULLS LAST — full null-mirror sweep):
       -- excluded explicitly on BOTH sides
       SELECT o_orderpriority,
              CAST(o_totalprice AS DECIMAL(14,2)) AS x,

@@ -97,7 +97,7 @@ def paragraph_dedup(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     `carry` names per-doc columns to thread through the regroup (rides
     the grouping key — functionally dependent on doc_id — instead of
     costing a second join against the input)."""
-    # token array aliased BEFORE the per-block lambda (r13): an inline
+    # token array aliased BEFORE the per-block lambda: an inline
     # split referenced inside an interpreted HOF lambda re-splits the
     # text per block — O(tokens^2/_BLK) per doc; as an attribute it is
     # a row-field read and blocking is linear.
@@ -196,7 +196,7 @@ def corpus_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def chunk_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # aliased token array before the per-window lambda (r13; see
+    # aliased token array before the per-window lambda (see
     # paragraph_dedup — same interpreted-HOF re-split hazard)
     tok_docs = docs.select("doc_id", F.split("text", " ").alias("toks"))
     toks = F.col("toks")
@@ -550,9 +550,9 @@ def corpus_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     with INCREMENTAL pair-count maintenance (Sennrich et al. 2016,
 #     arXiv:1508.07909 §3 — only words containing the merged pair are
 #     touched per iteration), so 32k merges = 32k cheap dict updates,
-#     NOT 64k sequential Spark jobs like the r4 design.
+#     NOT 64k sequential Spark jobs like an earlier design.
 # Driver round-trips: exactly ONE collect total, independent of
-# n_merges — the property the r4 design lacked.
+# n_merges — the property an earlier design lacked.
 # ---------------------------------------------------------------------
 
 _EOW = "</w>"  # end-of-word marker (standard BPE)
@@ -718,10 +718,10 @@ register(
     "the merge loop runs driver-side with incremental pair-count "
     "maintenance (Sennrich arXiv:1508.07909 — each merge touches "
     "only words containing the pair). Exactly one collect "
-    "regardless of merge count (job-count pinned in tests); the r4 "
+    "regardless of merge count (job-count pinned in tests); an earlier "
     "design's 2-jobs-per-merge chain is gone. Deterministic "
     "tie-break: count desc, then lexicographic pair."
-    " Rows-only verdict (r12): NOT convertible — each merge round's "
+    " Rows-only verdict: NOT convertible — each merge round's "
     "argmax pair depends on all prior merges (data-dependent "
     "iterative chain); a recursive-CTE oracle would re-implement the "
     "trainer, not independently check it. Ground truth: pure-Python "
@@ -1060,7 +1060,7 @@ register(
     "Broadcast (ranks, vocab) + one Arrow-vectorized pandas UDF with "
     "a distinct-word cache; shuffle-free map-only plan. Unknown "
     "symbols -> -1 (byte-fallback tier placeholder)."
-    " Rows-only verdict (r12): NOT convertible — encoding applies the "
+    " Rows-only verdict: NOT convertible — encoding applies the "
     "TRAINED merge table lowest-rank-first with unbounded passes per "
     "word, and the table itself is the non-SQL-expressible training "
     "artifact. Ground truth: pure-Python sequential-merge encode on "
@@ -1083,7 +1083,7 @@ register(
     "map-only, no-codegen-blowup shape a 32k-merge vocab needs "
     ". Reports per-doc token count under the trained "
     "tokenizer vs the untrained character baseline."
-    " Rows-only verdict (r12): NOT convertible — same trained-merge "
+    " Rows-only verdict: NOT convertible — same trained-merge "
     "dependency and per-word merge loop as bpe_encode_ids. Ground "
     "truth: pure-Python encode differential at 4 merges (regex path) "
     "AND 256 merges (broadcast path).",
@@ -1227,11 +1227,11 @@ register(
     "slot-sorted reassembly, so nothing larger than one pack ever "
     "materializes. 2 shuffles; deterministic (doc_id order) so two "
     "runs produce byte-identical packs."
-    " Rows-only verdict (r12): NOT convertible as composed — inputs "
+    " Rows-only verdict: NOT convertible as composed — inputs "
     "are bpe_encode_ids token arrays (trained-artifact dependency); "
     "the packing ALGEBRA itself IS oracle-checked via "
-    "pack_sequences_offsets (whitespace-token twin, driver-green "
-    "r5-r10). Ground truth: pack-for-pack pure-Python differential + "
+    "pack_sequences_offsets (whitespace-token twin, driver-green). "
+    "Ground truth: pack-for-pack pure-Python differential + "
     "lossless-concatenation property.",
 )(pack_token_sequences)
 
@@ -1319,7 +1319,7 @@ def span_corruption_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS (
       -- docs with NULL text are not batchable subjects: excluded on
       -- BOTH sides (Spark's inner offset-join would drop them while
-      -- an unfiltered oracle ranks them NULLS LAST -- r9 text-null
+      -- an unfiltered oracle ranks them NULLS LAST -- text-null
       -- mirror)
       SELECT doc_id,
              CAST(LEN(list_filter(string_split(text, ' '), x -> x != ''))

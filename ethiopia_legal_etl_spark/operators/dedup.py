@@ -490,7 +490,7 @@ def connected_components(
     - the first `jump_after` rounds are plain 1-hop propagation (one
       join + aggregate per round): near-dup clusters are shallow
       (diameter ~2-3), so the common case converges here at exactly
-      the r13 cost — the r14 A/B showed an unconditional jump join
+      the plain-propagation cost — an A/B showed an unconditional jump join
       costs ~3x on the shallow benched graph (the jump key is
       concentrated on cluster-min ids, a skewed shuffle), pure
       overhead when propagation alone converges in 2-3 rounds.
@@ -502,7 +502,7 @@ def connected_components(
       Jumping halves pointer-chain depth every round, so convergence
       is jump_after + O(log diameter) rounds instead of O(diameter) —
       max_iter=20 covers diameter ~2^16, where the plain propagation
-      of r1-r13 silently STOPPED at a 20-hop radius: a boilerplate
+      alone silently STOPPED at a 20-hop radius: a boilerplate
       chain of sliding near-dups deeper than 20 (plausible for
       templated pages at 100 TB) would have split one cluster into
       several without any error. The skewed jump join only runs on
@@ -512,8 +512,8 @@ def connected_components(
       is pinned by test_connected_components_deep_chain_pointer_jump
       (per-round rates on planted chains: SCALING.md §fixpoint).
     - `localCheckpoint` truncates lineage every round so plan depth
-      stays O(1) instead of O(iterations). Cluster posture (SCALING.md
-      r10): checkpointed blocks are executor-local and lineage-free —
+      stays O(1) instead of O(iterations). Cluster posture (SCALING.md):
+      checkpointed blocks are executor-local and lineage-free —
       at 1000 executors, reliable `checkpoint()` of the (small,
       edge-list-sized) frontier every few rounds survives executor loss
 
@@ -534,7 +534,7 @@ def connected_components(
     edges = edges.localCheckpoint()
     a = edges.selectExpr("src AS node", "dst AS nbr")
     b = edges.selectExpr("dst AS node", "src AS nbr")
-    # No inner distinct on the self-loop branch (r15): the outer
+    # No inner distinct on the self-loop branch: the outer
     # distinct on (node, nbr) already dedupes self-loops, so the extra
     # exchange+aggregate bought nothing — the union feeds 2|E| loop
     # rows (heavily duplicated, collapsed map-side by the partial
@@ -767,7 +767,7 @@ def dedup_cluster_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize=True: this entry is timed build+write (secondary
     # methodology), so computing the token/band tables once inside the
     # builder is inside the timed region — the signature pass ran 2x
-    # and the tokenizer 3x without it (r15; see banded_jaccard_pairs)
+    # and the tokenizer 3x without it (see banded_jaccard_pairs)
     edges = banded_jaccard_pairs(docs, threshold=0.9, materialize=True).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )

@@ -336,7 +336,7 @@ def drift_psi_decile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
            (d.nr - 1) * (d.nc - 1) AS dof,
            ROUND(f.chi2_raw, 6) + 0 AS chi2,
            -- NULL for a 1 x k table (V undefined; Spark side guarded
-           -- identically — r13 constant-corpus sweep)
+           -- identically — constant-corpus sweep)
            CASE WHEN LEAST(d.nr - 1, d.nc - 1) > 0
                 THEN ROUND(SQRT(f.chi2_raw
                            / CAST(f.n * LEAST(d.nr - 1, d.nc - 1)
@@ -421,7 +421,7 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("bin").alias("nc"),
     )
     mindim = F.least(F.col("nr") - 1, F.col("nc") - 1)
-    # Degenerate-table guard (r13 constant-corpus sweep): a 1 x k (or
+    # Degenerate-table guard (constant-corpus sweep): a 1 x k (or
     # k x 1) contingency table makes min(nr-1, nc-1) = 0 and Cramer's
     # V divides by zero — Spark ANSI THROWS for double division (a
     # constant `value` column collapses every row into one bin, so

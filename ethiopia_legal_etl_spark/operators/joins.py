@@ -892,7 +892,7 @@ def asof_merge_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "both sides are post-aggregate (|grades| rows), so the join is a "
     "broadcast; on large sides <=> hashes NULL like any value, no "
     "skew surprise beyond an actual NULL hot key (salt if so). "
-    "Measure hygiene (r11, the proportion_wilson_ci class): a NaN/Inf "
+    "Measure hygiene (the proportion_wilson_ci class): a NaN/Inf "
     "reading passes `value >= 100` on BOTH engines (non-finite sorts "
     "greatest) and would silently grade 'high' — clean_measures maps "
     "it to NULL, i.e. the 'unknown' grade, which is exactly what a "

@@ -225,7 +225,7 @@ register(
     "approx_percentile (one-shot aggregate) cannot give: per-day "
     "sketches answer any-range quantiles without rescanning history. "
     "Deterministic alternating compaction parity -> bit-reproducible."
-    " Rows-only verdict (r12): NOT convertible — KLL compactions are "
+    " Rows-only verdict: NOT convertible — KLL compactions are "
     "sequential and level-structured, so the surviving samples depend "
     "on partition-merge order; no closed-form SQL re-derivation "
     "exists. Ground truth: measured rank-error gate vs exact ranks + "

@@ -149,7 +149,7 @@ def sketch_kmv_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("tok").isin(*_KMV_TOKENS))
         .distinct()
-        # localCheckpoint, not cache (r15 cache-scoping sweep): no
+        # localCheckpoint, not cache (cache-scoping sweep): no
         # plan-matched CacheManager entry may outlive the query run
         .localCheckpoint()  # df-bounded; feeds sketch window + exact gate
     )

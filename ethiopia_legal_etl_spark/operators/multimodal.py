@@ -119,9 +119,9 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # decode is a stub; plumbing checked rows-only + unit tests
     doc="mapInPandas decode stage over binary payloads (STUBBED decode; "
     "real Arrow batch plumbing) + per-media-type aggregate. The stub's "
-    "remaining scope has narrowed every round: WAV/BMP (r4), JPEG/PNG/"
-    "MJPEG-AVI/G.711/IMA (r5), MPEG-1 audio Layer I+II (r6), and MP3 "
-    "Layer III frame syntax + reservoir + scalefactors (r7, "
+    "remaining scope has narrowed over time: WAV/BMP, JPEG/PNG/"
+    "MJPEG-AVI/G.711/IMA, MPEG-1 audio Layer I+II, and MP3 "
+    "Layer III frame syntax + reservoir + scalefactors ("
     "multimodal_mp3_sideinfo) are all REAL decoders now. FINAL scope: "
     "the two remaining decodes — MP3 spectral "
     "Huffman (ISO 11172-3 Table B.7, ~2000 entries) and H.264 — stay "
@@ -134,7 +134,7 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "silently wrong values, which this registry's value-exact "
     "discipline exists to prevent. Frames carrying spectral data "
     "reject with a ValueError naming the table."
-    " Rows-only verdict (r12): NOT convertible — the entry's content "
+    " Rows-only verdict: NOT convertible — the entry's content "
     "is the Arrow batch plumbing around a DOCUMENTED stub tier (MP3 "
     "spectral/H.264); the ten real codecs beside it carry value-exact "
     "oracles. Ground truth: plumbing unit tests + truncation-totality "
@@ -237,7 +237,7 @@ def multimodal_fake_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-entry payload-synthesis formulas, module-level so the axis-9
 # fuzz (tests/test_transport_truncation.py) fuzzes EXACTLY the byte
 # layouts the entries emit — an inline-closure copy in the test would
-# silently drift when a formula changes (r11 self-review). Codec
+# silently drift when a formula changes (self-review). Codec
 # imports stay inside the functions, executor-side, like the entry
 # closures they serve. Each function is deterministic in doc_id.
 # ------------------------------------------------------------------ #
@@ -500,9 +500,9 @@ def _synth_media_fn(frac: float):
     "metadata field from the doc_id formulas, so the hash match proves "
     "the decoder exactly inverts the encoder — including canonical "
     "file sizes (44-byte WAV header; BMP 4-byte row padding). "
-    "Compressed-codec decode: JPEG is REAL as of r5 (from-scratch "
+    "Compressed-codec decode: JPEG is REAL (from-scratch "
     "baseline codec, multimodal_decode_jpeg), and MPEG-1 Audio "
-    "Layer I is REAL as of r6 (multimodal_decode_mpeg1, "
+    "Layer I is REAL (multimodal_decode_mpeg1, "
     "functions/mpeg1.py); MP3 (Layer III) remains stubbed "
     "(multimodal_decode_stub) pending ffmpeg on deployment — a "
     "perceptual Huffman/hybrid-filterbank codec has no in-container "
@@ -557,7 +557,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.
@@ -584,7 +584,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     doc="REAL compressed-codec decode, executed in-container (closes "
-    "the r4 'JPEG stubbed pending PIL' gap the way pdftext.py closed "
+    "the earlier 'JPEG stubbed pending PIL' gap the way pdftext.py closed "
     "PDF extraction): functions/jpeg.py is a from-scratch baseline "
     "JPEG codec — markers, canonical Huffman, entropy decode with "
     "byte unstuffing, DC prediction, AC RLE/ZRL/EOB, dequant, "
@@ -671,7 +671,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.
@@ -712,7 +712,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY d.doc_id
     """,
     doc="REAL compressed-AUDIO decode, executed in-container "
-    "(functions/g711.py; closes the r4 'compressed audio pending "
+    "(functions/g711.py; closes the earlier 'compressed audio pending "
     "ffmpeg' gap for the two exactly-specified public codecs). Each "
     "doc synthesizes TWO genuine compressed WAVs executor-side: a "
     "G.711 mu-law stream whose encoded bytes follow a doc_id formula "
@@ -807,7 +807,7 @@ def multimodal_decode_audio_compressed(
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.
@@ -912,7 +912,7 @@ def multimodal_video_frame_sample(
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.
@@ -1014,7 +1014,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.
@@ -1339,7 +1339,7 @@ def multimodal_decode_mpeg1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.
@@ -1423,7 +1423,7 @@ def multimodal_decode_mpeg1(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id, sb
     """,
     doc="REAL MPEG-1 Audio Layer II decode (ISO/IEC 11172-3) — "
-    "extends the r6 Layer I decoder with Layer II's actual "
+    "extends the Layer I decoder with Layer II's actual "
     "machinery: Table B.2a class-dependent bit allocation (4/4/3/2 "
     "nbal bits across the 27-subband limit), scfsi scalefactor "
     "sharing across the three 12-sample parts (all four patterns "
@@ -1499,7 +1499,7 @@ def multimodal_decode_mpeg1_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.
@@ -1667,7 +1667,7 @@ def multimodal_mp3_sideinfo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused mapInPandas stage: the
     # synthesized payloads are built and decoded inside the same
     # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text r6 precedent — fusion
+    # boundary (guide §4.1; the warc_to_text precedent — fusion
     # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
     # decode path, where payloads genuinely arrive as column bytes,
     # stays exercised by multimodal_decode_stub / binary_meta.

@@ -106,7 +106,7 @@ def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             # try_divide: an EMPTY shard (filter selecting nothing)
             # still produces one global-agg row with count 0, so
             # completeness is 0/0 — undefined -> NULL, never an ANSI
-            # DIVIDE_BY_ZERO job kill (r14 empty-axis sweep find)
+            # DIVIDE_BY_ZERO job kill (found by the empty-axis sweep)
             F.try_divide(
                 F.count(col).cast("double"), F.count(F.lit(1))
             ).alias("completeness"),

@@ -146,7 +146,7 @@ _WLIST_SQL = "[" + ", ".join(WEIGHTS) + "]::DECIMAL(10,6)[]"
     "bag-of-words, scored entirely as a column expression — literal "
     "64-weight DECIMAL array indexed per token by an md5-derived "
     "bucket (the engine-portable instr-on-hex construction from "
-    "dedup.py), ZERO shuffles (the r5 stateless row-expression path: "
+    "dedup.py), ZERO shuffles (the stateless row-expression path: "
     "transform/aggregate over the token array with exact-decimal "
     "sums, proven bit-equal to the explode+groupBy formulation in "
     "tests/test_quality.py), zero Python, zero joins. The is_quality "
@@ -261,7 +261,7 @@ def _curation_oracle() -> str:
     "gate (exact-decimal sum_w + bias*n > 0, flip-proof between "
     "engines) -> per-language accounting. ONE plan, FIVE necessary "
     "shuffles (host window; block window; doc regroup; lang agg — "
-    "the r5 stateless scorer removed the (doc,token) shuffle: "
+    "the stateless scorer removed the (doc,token) shuffle: "
     "scoring is now a zero-shuffle row expression over clean_text) — "
     "the corpus streams through once; the 64-weight model is a "
     "literal array, zero Python, zero joins. Float policy: the gate "

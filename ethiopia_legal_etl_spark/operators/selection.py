@@ -314,9 +314,10 @@ _PQ_QUERIES = 5
 def train_pq_codebooks(spark: SparkSession, emb: DataFrame):
     """Train per-subspace k-means codebooks (seeded, deterministic).
     Returns a list of _PQ_M codebooks, each _PQ_K centroids of
-    _PQ_SUBDIM doubles.  At 100 TB the fit runs on a bounded sample
-    (k-means centroids converge on a sample; the full corpus is only
-    ever ENCODED, never iterated)."""
+    _PQ_SUBDIM doubles.  Each of the _PQ_M subspaces is one Spark ML
+    KMeans fit over EVERY non-null embedding, so training runs _PQ_M
+    full-table fits one after another (no sampling; at 100 TB a
+    bounded sample would be needed)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -539,7 +540,7 @@ def pq_adc_scores(spark: SparkSession, emb: DataFrame, books) -> DataFrame:
     "re-rank join fetches 50 raw vectors per query. "
     "Differential-tested against a NumPy PQ model and a recall floor "
     "vs exact L2 (tests/test_selection.py)."
-    " Rows-only verdict (r12): NOT convertible — per-subspace "
+    " Rows-only verdict: NOT convertible — per-subspace "
     "codebooks are seeded-k-means artifacts (same class as "
     "similarity_ivf_kmeans). Ground truth: shortlist-recall + exact- "
     "re-rank properties.",
@@ -716,7 +717,7 @@ def corpus_dsir_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deterministic rank-pairing scheme that yields maximally-"
     "separated, non-overlapping pairs without an O(n^2) candidate "
     "join. Quality is the corpus quality score (length + lexical "
-    "diversity, round-4 — the pipeline_training_corpus formula), "
+    "diversity — the pipeline_training_corpus formula), "
     "ranks tie-break on doc_id, and the margin is one subtraction of "
     "two exactly-agreed rounded doubles. Plan: one lang-hash shuffle "
     "shared by both window ranks and the self-join (co-partitioned — "

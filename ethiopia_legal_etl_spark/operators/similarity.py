@@ -29,13 +29,13 @@ EMB_DIM = 64
 # array<float>, 64-dim — the dim a deployment pins from its encoder
 # config). A row with a DIFFERENT length is failed/partial encoder
 # output — as routine at corpus scale as a failed fetch — and the
-# engines genuinely diverge on it (null-mirror corruption axis 6,
-# tools/nulls_mirror.py, truncates ~10% of rows to 32 dims): Spark
+# engines genuinely diverge on it (nulls-mirror corruption axis 6 in
+# tools/mirrors.py truncates ~10% of rows to 32 dims): Spark
 # zip_with silently NULL-pads the shorter array (NULL products -> NULL
 # sums), element_at(i>len) RAISES, DuckDB LIST_COSINE_SIMILARITY raises
 # "list dimensions must be equal", and pyspark.ml vectors must be fixed
 # size. A NON-FINITE coordinate (fp16 overflow -> Inf, 0/0 -> NaN —
-# axis 7 of the mirror plants one per corrupted row) is just as
+# axis 7 of the nulls mirror plants one per corrupted row) is just as
 # divergent: Spark's cosine fold yields NaN (which sorts GREATEST in a
 # DESC rank) where DuckDB LIST_COSINE_SIMILARITY returns -1.0 (sorts
 # last), and the silhouette lattice floor(NaN*1e6)::BIGINT is silently
@@ -103,7 +103,7 @@ def norm_finite(col: str = "nrm") -> Column:
     The norm column is then REUSED as the cosine
     denominator, so pair scoring is one dot fold instead of three
     (dot + both norms) — the guard costs less than zero (measured
-    1.37x faster than the r9 exists-guard code in an
+    1.37x faster than the earlier exists-guard code in an
     interleaved same-process A/B at sf0.1, identical output)."""
     c = F.col(col)
     return c.isNotNull() & (c < F.lit(float("inf")))
@@ -251,7 +251,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "column (norm_finite) that doubles as the cosine denominator, so "
     "pair scoring is ONE dot fold instead of three and the corpus "
     "scan carries no per-element exists() conjunct — "
-    "this is 1.37x FASTER than the r9 exists-guard code (interleaved "
+    "this is 1.37x FASTER than the earlier exists-guard code (interleaved "
     "same-process A/B at sf0.1, bit-identical output).",
 )
 def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,7 +404,7 @@ def near_dup_cosine_pairs(
     doc="BucketedRandomProjectionLSH ANN: bucketed candidates then exact "
     "cosine re-rank — the scale path (equi-join on bucket keys only). "
     "Recall vs brute force asserted in property tests."
-    " Rows-only verdict (r12): NOT convertible — hyperplane draws come "
+    " Rows-only verdict: NOT convertible — hyperplane draws come "
     "from Spark ML's seeded RNG (engine-specific bucket ids). Ground "
     "truth: recall-vs-brute-force property gates.",
 )
@@ -424,7 +424,7 @@ def similarity_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluation on null-free rows. (In the materialization job itself
     # the UDF appears once — no hoisted duplicate — so the scan filter
     # protects it.)
-    # Cluster posture (SCALING.md r10): localCheckpoint blocks are
+    # Cluster posture (SCALING.md): localCheckpoint blocks are
     # executor-local and lineage-free — at 1000 executors set
     # spark.ethiopia_legal_etl.reliableBarriers=true + a checkpoint dir
     # (reorder_barrier upgrades to reliable checkpoint()), or use the
@@ -465,10 +465,10 @@ def similarity_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "nearest centroids; exact cosine re-rank within probed cells. "
     "At 100 TB: centroids train on a sample, the corpus is written "
     "partitioned by cell id, probing prunes partitions at the scan."
-    " Rows-only verdict (r12): NOT convertible — learned centroids "
+    " Rows-only verdict: NOT convertible — learned centroids "
     "depend on pyspark.ml KMeans init/iteration internals; the label- "
     "partitioned twin similarity_ivf_by_label IS oracle-checked "
-    "(driver-green r11). Ground truth: recall property gates.",
+    "(driver-green). Ground truth: recall property gates.",
 )
 def similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
@@ -821,7 +821,7 @@ _CAL_SAMPLE = 2000  # tuned-LSH calibration sample target (vectors);
     "(~10k vectors -> ~50M sample pairs, one exact percentile), the "
     "calibration is one tiny job, and the join itself stays a "
     "bucket-key equi-join."
-    " Rows-only verdict (r12): NOT convertible — same ML-RNG bucket "
+    " Rows-only verdict: NOT convertible — same ML-RNG bucket "
     "dependency as similarity_lsh_buckets, plus a measured-quantile "
     "radius. Ground truth: recall + candidate-fraction gates "
     "(tests/test_dedup_similarity.py).",
@@ -870,7 +870,7 @@ def similarity_lsh_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"percentile(dist, {target})").alias("r")
     ).first()  # bounded: exact percentile of the sample pairs, 1 row
     radius = float(row["r"]) if row["r"] is not None else 3.0
-    # Degenerate-corpus floor (r13 constant-corpus sweep): if every
+    # Degenerate-corpus floor (constant-corpus sweep): if every
     # sampled pair is identical the calibrated radius is 0.0, which
     # BucketedRandomProjectionLSH rejects as a bucketLength. An
     # epsilon radius keeps the fit valid and still returns the
@@ -879,7 +879,7 @@ def similarity_lsh_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius = max(radius, 1e-6)
     # reorder barrier: see similarity_lsh_buckets — the approx join's
     # hoisted ScalaUDF conjuncts NPE on NULL arrays despite the
-    # upstream filter. Cluster posture (SCALING.md r10): flip
+    # upstream filter. Cluster posture (SCALING.md): flip
     # reliableBarriers + checkpoint dir at 1000 executors, or take the
     # pure-SQL twins.
     feats = reorder_barrier(

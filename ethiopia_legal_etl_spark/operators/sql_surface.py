@@ -145,7 +145,7 @@ def scalar_math_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- json_valid guard: DuckDB's json_extract RAISES on malformed
     -- JSON where Spark's get_json_object returns NULL; a truncated
     -- instrumentation payload must degrade to NULL on both sides
-    -- (null-mirror corruption axis, r10)
+    -- (null-mirror corruption axis)
     WITH e AS (
       SELECT event_type,
              CASE WHEN json_valid(props)
@@ -260,7 +260,7 @@ def array_ops_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sql_udf_year_extract",
     oracle="""
     -- COALESCE mirrors the UDF's (t or '') null handling: a null
-    -- text yields year = '', not NULL (r9 text-null mirror)
+    -- text yields year = '', not NULL (text-null mirror)
     SELECT doc_id,
            REGEXP_EXTRACT(SUBSTRING(COALESCE(text, ''), 1, 1000),
                           '\\b(19[5-9]\\d|20\\d{2})\\b', 1) AS year
@@ -448,7 +448,7 @@ def applyinpandas_user_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, UNNEST(hits) AS token FROM d WHERE LEN(hits) > 0
     UNION ALL
     -- explode_outer also emits a null row for a NULL array (null
-    -- text), not just an empty one (r9 text-null mirror)
+    -- text), not just an empty one (text-null mirror)
     SELECT doc_id, NULL AS token FROM d
     WHERE LEN(hits) = 0 OR hits IS NULL
     """,
@@ -546,7 +546,7 @@ def scalar_bitwise_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="CSV + JSONL + ORC + text + XML (Spark 4 native) source/sink "
     "round-trip: documents subset written and re-read in each format "
     "with explicit schemas, counts reconciled (SURVEY §2.B scans/sinks "
-    "row). Oracle-checked since r12: the oracle recomputes the "
+    "row). Oracle-checked: the oracle recomputes the "
     "expected count externally, so a row-dropping format sink/source "
     "fails the hash instead of passing a rows-only check",
 )
@@ -691,7 +691,7 @@ def html_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     "variant_event_props",
     oracle="""
     -- json_valid guard: DuckDB json_extract RAISES on malformed JSON;
-    -- Spark's try_parse_json yields a NULL variant (r10 corruption axis)
+    -- Spark's try_parse_json yields a NULL variant (corruption axis)
     WITH e AS (
       SELECT event_id,
              CASE WHEN json_valid(props)
@@ -713,7 +713,7 @@ def variant_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # try_parse_json, not parse_json: a truncated/partial telemetry
     # payload must become a NULL variant, not a MALFORMED_RECORD error
-    # that kills the job at corpus scale (r10 corruption axis)
+    # that kills the job at corpus scale (corruption axis)
     v = F.try_parse_json(F.col("props"))
     k = F.try_variant_get(v, "$.k", "int")
     return (
@@ -771,7 +771,7 @@ def hof_token_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "prunes BOTH (~6-8/16). At 100 TB this is the difference between "
     "a two-dimension filter reading ~6% of files and reading all of "
     "them when the predicate misses the sort column."
-    " Rows-only verdict (r12): NOT convertible — the entry reads "
+    " Rows-only verdict: NOT convertible — the entry reads "
     "parquet footer min/max of files written to a scratch dir; oracle "
     "views are the pre-registered testdata tables only and DuckDB "
     "never sees the scratch layouts. Ground truth: layout-ordering "
@@ -1243,7 +1243,7 @@ def scalar_date_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH per AS (
       -- null map keys are illegal in Spark (map_ops_user_stats
       -- precedent): null event types excluded on BOTH sides (caught
-      -- by the r9 full null-mirror sweep)
+      -- by the full null-mirror sweep)
       SELECT user_id, event_type, COUNT(*) AS cnt,
              SUM(CAST(value AS DECIMAL(14,2))) AS sumv
       FROM {EVENTS_FINITE_SQL} WHERE event_type IS NOT NULL

@@ -204,7 +204,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # token array aliased before _ngrams (r13): its per-gram lambda
+    # token array aliased before _ngrams: its per-gram lambda
     # would otherwise re-split the text per trigram (interpreted HOF,
     # O(tokens^2) per doc); the doc_frequent_bigrams caller at
     # :155 already passes an attribute.
@@ -303,7 +303,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_chunk_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # aliased token array before the per-chunk lambda (r13; same
+    # aliased token array before the per-chunk lambda (same
     # interpreted-HOF re-split hazard as dedup_substring_fraction)
     tok_docs = docs.select("doc_id", F.split("text", " ").alias("toks"))
     toks = F.col("toks")
@@ -470,8 +470,8 @@ _MOJIBAKE_SUFFIX = " café Ωmega 中文"
     "text_mojibake_repair",
     oracle="""
     -- NULL text is a no-op passthrough (nothing to corrupt or
-    -- repair): corruption set = every 3rd doc WITH text (r9
-    -- text-null mirror)
+    -- repair): corruption set = every 3rd doc WITH text
+    -- (text-null mirror)
     SELECT doc_id,
            doc_id % 3 = 0 AND text IS NOT NULL AS was_corrupted,
            doc_id % 3 = 0 AND text IS NOT NULL AS detected,
@@ -659,7 +659,7 @@ def lm_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         tr.select(F.explode("toks").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        # localCheckpoint, not cache (r15 cache-scoping sweep): no
+        # localCheckpoint, not cache (cache-scoping sweep): no
         # plan-matched CacheManager entry may outlive the query run
         .localCheckpoint()  # feeds tot + both context/backoff joins
     )
@@ -727,7 +727,7 @@ def lm_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "table N_c = #types seen exactly c times and the adjusted count "
     "c* = (c+1) N_{c+1} / N_c, the classical smoothing that "
     "reallocates mass to unseen events (P0 = N_1/N follows from row "
-    "c=1); the same count-of-counts shape the r8 entropy fold uses. "
+    "c=1); the same count-of-counts shape the entropy fold uses. "
     "c* is one IEEE division of exact BIGINTs (raw-double "
     "identical); rows where N_{c+1} = 0 (a GAP in the count "
     "spectrum, where vanilla GT is undefined and Gale-Sampson "
@@ -868,7 +868,7 @@ def lm_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     cont = bi.groupBy("b").agg(F.count(F.lit(1)).alias("n1m_b"))
     # D = n1/(n1+2*n2), repeated inline so the op tree matches the
     # oracle's exactly (no CTE-level rounding point exists).
-    # Degenerate-corpus guard (r13): a corpus where NO bigram type
+    # Degenerate-corpus guard: a corpus where NO bigram type
     # occurs exactly once or twice (observed on the real sf0.1
     # documents table — min type count is 3) makes the denominator 0,
     # and Spark ANSI throws DIVIDE_BY_ZERO even for double division

@@ -357,7 +357,7 @@ def dedup_keep_first_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     -- CASE mirrors Spark exactly: aggregate() over a NULL token
     -- array is NULL, while LIST_PREPEND(0, NULL) would fold to 0
-    -- (r9 text-null mirror)
+    -- (text-null mirror)
     SELECT doc_id,
            CASE WHEN text IS NULL THEN NULL ELSE
            LIST_REDUCE(
@@ -442,8 +442,8 @@ def cooccurrence_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint, not cache: Spark's CacheManager matches plans,
     # so a cached table left
     # behind is silently REUSED by the next identically-built run — a
-    # cross-run intermediate in any repeated-run harness (the unigram
-    # r14 finding). Checkpointed blocks die with the DataFrame ref and
+    # cross-run intermediate in any repeated-run harness (found in
+    # unigram). Checkpointed blocks die with the DataFrame ref and
     # never plan-match; intra-query compute-once reuse is identical.
     dd = dd.localCheckpoint()  # both aggregates read it; one corpus scan each
     # materialize the two Zipf-bounded vocab tables: each is referenced
@@ -602,7 +602,7 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # cache dl: it feeds both the avgdl global AND the per-doc join —
     # uncached, the corpus scan + doc-length aggregate runs twice
-    # localCheckpoint, not cache (r15 cache-scoping sweep): no
+    # localCheckpoint, not cache (cache-scoping sweep): no
     # plan-matched CacheManager entry may outlive the query run
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).localCheckpoint()
     df = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
@@ -717,7 +717,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     K, W = 3, 4
     docs = load_table(spark, sf_dir, "documents")
     # token array materialized under an alias BEFORE the k-gram lambda
-    # (r13): HOF lambdas evaluate interpreted, so an inline tokens()
+    #: HOF lambdas evaluate interpreted, so an inline tokens()
     # referenced inside the lambda re-tokenizes per gram — O(tokens^2)
     # per doc. As an attribute it's a row-field read; the hs/pick pass
     # below already used this shape.
@@ -760,7 +760,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fp_pos/fp_hash as comma-joined STRINGS, not arrays: the driver's
     # canonicalizer (pandas sort_values) crashes on array-typed cells
     # (unhashable ndarray), so driver-window entries must be scalar-
-    # only (r10 rotation prep; same fix as dedup_cluster_jaccard r7).
+    # only (same fix as dedup_cluster_jaccard).
     return sel.select(
         "doc_id",
         F.col("m").cast("long").alias("n_grams"),

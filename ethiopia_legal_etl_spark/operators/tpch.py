@@ -102,7 +102,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Money sums aggregate EXACT integer micros of the 2-dp decimals
     # (products are exact ≤6-dp micros — no fp summation-order drift,
     # no round-tie mismatches vs the oracle), then one decimal→double
-    # conversion per output cell. Identical values to the r13 decimal
+    # conversion per output cell. Identical values to the DECIMAL-sum
     # formulation (probed cell-exact at sf0.1 and partition-count
     # invariant), ~2.5x faster: a SUM over DECIMAL(12,2) carries a
     # precision-22 buffer that leaves the compact-long path and
@@ -576,7 +576,7 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority") == "1-URGENT"
     )
     # exact 2-dp micro gross, two-level over spark_partition_id()
-    # (r15): the URGENT filter keeps ~1/5 of the fact rows, enough for
+    #: the URGENT filter keeps ~1/5 of the fact rows, enough for
     # the DECIMAL(22,2) buffer to show; groups (3 returnflags) are
     # unbounded per group so level 1 long sums stay partition-bounded
     # and level 2 re-sums in DECIMAL(38,0). Interleaved same-session
@@ -652,12 +652,12 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
         )
     )
-    # Micro respell tried and REVERTED (r15, measured): the two-level
+    # Micro respell tried and REVERTED (measured): the two-level
     # long-micro pattern (q8's) read 1.3-1.46x SLOWER here across two
     # interleaved cur-vs-ref microbench rounds at sf0.1 (0.86/0.83 s
     # vs 0.65/0.57 s medians) — the nation-pair predicate is selective
     # enough that the surviving rows' decimal cost is below one extra
-    # aggregation stage, the same shape that rejected q6/q19 in r14.
+    # aggregation stage, the same shape that rejected q6/q19.
     # Groups are unbounded per group, so a single-level long sum is
     # not provably overflow-safe and two-level is the only micro
     # option. Decimal kept.
@@ -872,7 +872,7 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q17_small_quantity_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#23")
-    # Per-part quantity sums as exact 2-dp micros (r15): the avg
+    # Per-part quantity sums as exact 2-dp micros: the avg
     # subquery scans ALL of lineitem, so its DECIMAL(22,2) buffer was
     # this query's q1-class cost. Single-level long sum, overflow-safe
     # by structure: quantity <= ~1e2 -> micro <= ~1e4, bound ~9e14
@@ -1148,7 +1148,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "AFRICA")
-    # Per-part price sums as exact 2-dp micro longs (r15): the
+    # Per-part price sums as exact 2-dp micro longs: the
     # per-part aggregate runs over the region-filtered bulk of
     # lineitem, so the DECIMAL(22,2) buffer was the dominant per-row
     # cost. Single-level is overflow-safe by structure: price micro

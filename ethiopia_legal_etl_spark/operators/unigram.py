@@ -339,7 +339,7 @@ register(
     "only the V-bounded vocabulary (contrast: the BPE trainer "
     "collects the word table). Kudo arXiv:1804.10959; count-based "
     "prune simplification documented in the module docstring."
-    " Rows-only verdict (r12): NOT convertible — iterative EM "
+    " Rows-only verdict: NOT convertible — iterative EM "
     "fixpoint; a SQL oracle would re-implement EM rather than check "
     "it. Ground truth: brute-force segmentation-enumeration "
     "differential + bit-identical rerun determinism across partition "
@@ -412,7 +412,7 @@ register(
     "EM-trained vocabulary via broadcast table + Arrow pandas UDF "
     "with per-batch word cache — map-only, shuffle-free; emits "
     "per-document subword count vs whitespace-word baseline."
-    " Rows-only verdict (r12): NOT convertible — Viterbi under the EM- "
+    " Rows-only verdict: NOT convertible — Viterbi under the EM- "
     "trained vocabulary (training-artifact dependency). Ground truth: "
     "Viterbi vs brute-force best-segmentation per distinct word + "
     "concatenation round-trip.",

@@ -123,7 +123,7 @@ def warc_ingest_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # exists to kill, so the record count is checked
                     # against the manifest (here: the synthesis
                     # formula; in production: the crawl manifest /
-                    # WARC-Segment headers). Caught in the r11
+                    # WARC-Segment headers). Caught in a
                     # self-review before any SF happened to land a
                     # cut on a boundary.
                     if len(recs) != 2 + int(doc_id) % 4:
@@ -247,7 +247,7 @@ def warc_ingest_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
              '<html><head><style>.a{color:red}</style></head><body>'
              || '<script>var x=' || t.i || ';</script><h1>Page ' || t.i
              -- COALESCE mirrors the builder: NULL text renders as an
-             -- empty page body (r9 text-null mirror)
+             -- empty page body (text-null mirror)
              || '</h1><p>' || COALESCE(d.text, '') || ' &amp; more</p></body></html>'
                AS html
       FROM documents d
@@ -315,7 +315,7 @@ def warc_to_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ONE mapInPandas stage: build the per-record-gzipped archive
         # and immediately re-parse it in the same Python worker, so the
         # compressed container bytes never cross the Arrow boundary.
-        # (Measured r6: two stages with a transient binary column cost
+        # (Measured: two stages with a transient binary column cost
         # ~0.9 s steady-state at sf0.1 vs ~0.57 s merged — the archive
         # crossed JVM<->Python twice for no reason. The FILE-based WARC
         # read path, where archives genuinely arrive as bytes, stays
@@ -326,7 +326,7 @@ def warc_to_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             for d, text in zip(pdf["doc_id"], pdf["text"]):
                 # a NULL text (failed extraction) renders as an EMPTY
                 # page body — an f-string would otherwise embed the
-                # literal "None" (r9 text-null mirror)
+                # literal "None" (text-null mirror)
                 if not isinstance(text, str):
                     text = ""
                 recs = [
@@ -732,12 +732,12 @@ def bloom_probe_frontier(
     positions = [
         F.pmod(F.xxhash64(F.lit(i), F.col("url")), F.lit(m)) for i in range(k)
     ]
-    # localCheckpoint, not persist (r15 cache-scoping sweep): the
+    # localCheckpoint, not persist (cache-scoping sweep): the
     # <= m-row bit table (KBs) is the build side of all k broadcast
     # joins — without materialization each join re-runs the distinct
     # shuffle (measured: 6 exchanges -> 2). Checkpointed blocks never
     # plan-match, so nothing outlives the query in a repeated-run
-    # harness (the unigram r14 finding).
+    # harness (the unigram finding).
     bits = (
         urls.where(F.col("prior"))
         .select(F.explode(F.array(*positions)).alias("bit"))
@@ -778,7 +778,7 @@ def bloom_probe_frontier(
     "n_false_negatives is structurally 0 (a Bloom filter never "
     "forgets), false positives are counted against the exact "
     "anti-join truth the filter replaces at scale."
-    " Rows-only verdict (r12): NOT convertible — DuckDB has no XXH64 "
+    " Rows-only verdict: NOT convertible — DuckDB has no XXH64 "
     "and re-deriving k=5 xxhash64 positions over variable-length URLs "
     "would need a per-byte recursive loop (unlike SimHash's FNV fold "
     "over a bounded token list); swapping the production hash to "
@@ -956,7 +956,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        # localCheckpoint, not cache (r15 cache-scoping sweep): no
+        # localCheckpoint, not cache (cache-scoping sweep): no
         # plan-matched CacheManager entry may outlive the query run
         .localCheckpoint()  # host-bounded edge list; feeds e1/e2/e3 + deg
     )
@@ -1106,7 +1106,7 @@ def graph_kcore_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `sym` once — without truncation the lineage tree doubles per
     # round (2^rounds plan copies; measured 24 s at sf0.1 vs 2 s
     # truncated). Same discipline as dedup_cluster_jaccard. Cluster
-    # posture (SCALING.md r10): reliable checkpoint() of the frontier
+    # posture (SCALING.md): reliable checkpoint() of the frontier
     # every few rounds at 1000 executors (localCheckpoint blocks die
     # with their executor).
     sym = sym.localCheckpoint()

@@ -572,8 +572,7 @@ def streaming_user_state_tws(events_stream: DataFrame) -> DataFrame:
     """Same running totals via transformWithStateInPandas — Spark 4's
     next-gen arbitrary-state API (typed state handles, timers, TTL).
     Requires the RocksDB state store provider (set in the test) and
-    the protobuf wheel (absent in this container — re-checked every
-    round through r14, still absent; test skips; the
+    the protobuf wheel (absent in this container; the test skips; the
     API itself is standard Spark 4 and runs on any cluster image); at
     cluster scale RocksDB keeps per-key state off-heap and incrementally
     checkpoints, so state size is bounded by disk, not executor heap —

@@ -1,5 +1,5 @@
-"""Regression tests for the r13 constant-corpus sweep findings
-(tools/degenerate_mirror.py): statistics whose denominators collapse
+"""Regression tests for the constant-mirror sweep findings
+(the ``constant`` axis of tools/mirrors.py): statistics whose denominators collapse
 to zero on a zero-variance / one-bin input must yield NULL for the
 undefined quantity — never a Spark-ANSI DIVIDE_BY_ZERO that kills the
 whole job. Each fixture is the minimal degenerate shape; assertions

@@ -1,34 +1,25 @@
 """Hard CI gate over the FULL registry: the
 driver's external harness checks only the first 50 entries
 (registry.DRIVER_WINDOW — disclosed in COVERAGE.md and README), which
-means a regression in any of the ~107 entries outside the window would
+means a regression in any of the 232 entries outside the window would
 be invisible to the driver. This test closes that hole: every
 registered query runs against its DuckDB oracle at sf0.001 on every
-pytest run, so the unchecked remainder cannot silently regress.
+pytest run, so the unchecked remainder cannot silently regress. The
+same sweep runs on the nulls, constant and constant_ts mirrors of
+sf0.001 (tools/mirrors.py); the empty axis, with its pinned
+divergences, is in test_empty_inputs.py.
 
-sf0.001 keeps the wall cost ~2 min; the sf0.01 replica
-(tools/check_oracle.py) remains the pre-commit / pre-round deep check.
+sf0.001 keeps each sweep near 1.5 min (86-96 s measured at local[4],
+with check_oracle.run collecting four entries at once); the sf0.01
+replica (tools/check_oracle.py) remains the pre-commit deep check.
 """
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
+import pytest
 
 
-def _load_tool(name: str):
-    spec = importlib.util.spec_from_file_location(
-        name, Path(__file__).resolve().parent.parent / "tools" / f"{name}.py"
-    )
-    module = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(module)
-    return module
-
-
-check_oracle = _load_tool("check_oracle")
-
-
-def test_checker_rejects_driver_unsafe_oracle_types():
+def test_checker_rejects_driver_unsafe_oracle_types(check_oracle):
     """Round-5 postmortem: 5 driver hash failures on value-correct
     results because DuckDB promoted SUM(BIGINT) to HUGEINT and the
     driver's fetch rendered it as float. The checker now hard-fails
@@ -53,7 +44,7 @@ def test_checker_rejects_driver_unsafe_oracle_types():
     assert check_oracle.unsafe_oracle_types(rel) == []
 
 
-def test_checker_rejects_nonscalar_window_output(spark):
+def test_checker_rejects_nonscalar_window_output(spark, check_oracle):
     """r7 postmortem: dedup_cluster_jaccard emitted an array<bigint>
     column and the DRIVER's pandas canonicalizer crashed
     (TypeError: unhashable numpy.ndarray) while our replica's
@@ -75,7 +66,7 @@ def test_checker_rejects_nonscalar_window_output(spark):
     assert check_oracle.nonscalar_spark_columns(ok.schema) == []
 
 
-def test_driver_window_entries_emit_scalar_columns_only(spark, sf_dir):
+def test_driver_window_entries_emit_scalar_columns_only(spark, sf_dir, check_oracle):
     """Static sweep of every DRIVER_WINDOW entry's output schema —
     cheap at sf0.001 and closes the class independently of whether
     the full oracle run reaches the entry."""
@@ -98,7 +89,7 @@ def test_driver_window_entries_emit_scalar_columns_only(spark, sf_dir):
     )
 
 
-def test_full_registry_matches_oracles(spark, sf_dir):
+def test_full_registry_matches_oracles(oracle_gate):
     from ethiopia_legal_etl_spark.operators.registry import DRIVER_WINDOW, all_queries
 
     ordered = list(all_queries())
@@ -113,8 +104,8 @@ def test_full_registry_matches_oracles(spark, sf_dir):
     # only in CORRECTNESS_r{N})
     assert ordered[: len(DRIVER_WINDOW)] == list(DRIVER_WINDOW)
 
-    failures, warns = check_oracle.run(sf_dir, [], spark=spark, count_warns=True)
-    assert failures == 0, f"{failures} registry entries diverged from their oracles"
+    failures, warns = oracle_gate()
+    assert not failures, f"registry entries diverged from their oracles: {failures}"
     # Strict raw-repr parity reached 0 warnings in r6 (after the BIGINT
     # casts): every oracle result is identical BEFORE normalization, so
     # correctness no longer depends on the driver normalizing the way
@@ -123,18 +114,25 @@ def test_full_registry_matches_oracles(spark, sf_dir):
     assert warns == 0, f"{warns} entries rely on normalization (raw reprs differ)"
 
 
-def test_full_registry_matches_oracles_on_nulls_mirror(spark, sf_dir, tmp_path):
-    """The same gate over tools/nulls_mirror.py's copy of the tables:
-    ~10% NULLs in nullable non-key columns, truncated JSON, short and
+def test_full_registry_matches_oracles_on_nulls_mirror(oracle_gate):
+    """The same gate over the nulls mirror (tools/mirrors.py): ~10%
+    NULLs in nullable non-key columns, truncated JSON, short and
     non-finite embeddings, non-finite measures. Every divergence this
     mirror has caught was a null-semantics difference between the
     engines (see the mirror's docstring); running it on every pytest
     run keeps the fixes from regressing silently."""
-    nulls_mirror = _load_tool("nulls_mirror")
-    nulls_mirror.build(str(tmp_path), src=sf_dir)
-
-    failures, warns = check_oracle.run(
-        str(tmp_path), [], spark=spark, count_warns=True
-    )
-    assert failures == 0, f"{failures} registry entries diverged on the nulls mirror"
+    failures, warns = oracle_gate("nulls")
+    assert not failures, f"entries diverged on the nulls mirror: {failures}"
     assert warns == 0, f"{warns} entries rely on normalization on the nulls mirror"
+
+
+@pytest.mark.parametrize("axis", ["constant", "constant_ts"])
+def test_full_registry_matches_oracles_on_degenerate_mirror(oracle_gate, axis):
+    """The same gate over a degenerate-distribution mirror: every value
+    valid, the distribution not. ``constant``: zero variance, one
+    histogram bin, equal embeddings, no rare bigram. ``constant_ts``:
+    one event microsecond, one order day. A collapsed denominator must
+    yield the oracle's NULL, not an ANSI DIVIDE_BY_ZERO throw."""
+    failures, warns = oracle_gate(axis)
+    assert not failures, f"entries diverged on the {axis} mirror: {failures}"
+    assert warns == 0, f"{warns} entries rely on normalization on the {axis} mirror"

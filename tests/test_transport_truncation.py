@@ -8,7 +8,7 @@ A failed object-store GET / partial multipart upload is as routine at
    decode-error contract) or returns a complete parse of the bytes
    that are actually there; never IndexError / struct.error /
    KeyError / a hang / silently-wrong metadata. Sentinels pin the
-   r11 hardening (decode_bmp used to report declared-size metadata
+   decoder hardening (decode_bmp used to report declared-size metadata
    for missing pixel bytes).
 
 2. ENTRY-LEVEL ERROR ISOLATION — with the conf-gated transport model
@@ -21,7 +21,7 @@ A failed object-store GET / partial multipart upload is as routine at
    to a never-confed run (the clean path carries no behavior change,
    which is why the driver's oracle gate is untouched by this axis).
 
-Why the mirror (tools/nulls_mirror.py) doesn't carry this axis: the
+Why the nulls mirror (tools/mirrors.py) doesn't carry this axis: the
 engine's media payloads are synthesized executor-side as deterministic
 functions of doc_id — the driver testdata has no binary column to
 corrupt — so the cut is applied at the one place the bytes cross a

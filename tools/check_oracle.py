@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import duckdb
@@ -20,7 +21,13 @@ from ethiopia_legal_etl_spark.operators.registry import (  # noqa: E402
     all_queries,
 )
 from ethiopia_legal_etl_spark.schemas import TABLE_NAMES  # noqa: E402
-from ethiopia_legal_etl_spark.session import get_spark  # noqa: E402
+from ethiopia_legal_etl_spark.session import (  # noqa: E402
+    ensure_session_confs,
+    get_spark,
+)
+
+# Entries whose Spark side runs concurrently in ``run``.
+COLLECT_THREADS = 4
 
 
 def normalize_cell(v) -> str:
@@ -66,7 +73,7 @@ def nonscalar_spark_columns(schema) -> list[tuple[str, str]]:
     cannot handle.  The driver sorts the collected result with pandas
     ``sort_values`` over object columns, which raises
     ``TypeError: unhashable type: 'numpy.ndarray'`` on array cells
-    (r7 postmortem: dedup_cluster_jaccard recorded ``err`` on a
+    (postmortem: dedup_cluster_jaccard recorded ``err`` on a
     value-correct result).  Our own normalize_cell() stringifies
     anything, i.e. the replica is LAXER than the driver — so window
     entries must be gated on SCHEMA, not on whether the replica's
@@ -89,41 +96,62 @@ def frame_hash(cols: list[str], rows: list[tuple]) -> tuple[int, str]:
     return len(rows), h
 
 
-def run(sf_dir: str, only: list[str], spark=None, count_warns: bool = False):
-    # an existing session (e.g. the pytest fixture) can be passed in so
-    # the full-registry gate test reuses it instead of building its own
+def run(sf_dir: str, only: list[str], spark=None) -> tuple[dict[str, str], int]:
+    """Check ``only`` (or every registry entry) at ``sf_dir``. Returns
+    the FAIL reason of each failing entry, keyed by name, and the count
+    of raw-repr warnings.
+
+    An existing session (e.g. the pytest fixture) can be passed in so
+    the gate tests reuse it instead of building their own."""
     spark = spark if spark is not None else get_spark()
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir.rstrip('/')}/{t}.parquet'"
         )
-    failures = 0
+    failures: dict[str, str] = {}
+
+    def fail(name: str, reason: str) -> None:
+        print(f"FAIL {name}: {reason}")
+        failures[name] = reason
+
     warns = 0
     qs = all_queries()
     names = only or sorted(qs)
-    for name in names:
-        q = qs[name]
+
+    def collect(name: str):
         try:
-            sdf = q.builder(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
+            sdf = qs[name].builder(spark, sf_dir)
+            return sdf.columns, [tuple(r) for r in sdf.collect()], sdf.schema
         except Exception as exc:
-            print(f"FAIL {name}: spark error: {exc}")
-            failures += 1
+            return exc
+
+    # At test scale an entry's Spark side is mostly single-threaded
+    # driver work (analysis, optimization, code generation), so several
+    # entries collect at once to use the cores; the DuckDB side and the
+    # comparison stay sequential, in name order. The confs and package
+    # zip are applied once up front, not by racing builders.
+    ensure_session_confs(spark)
+    with ThreadPoolExecutor(max_workers=COLLECT_THREADS) as pool:
+        results = list(pool.map(collect, names))
+    for name, collected in zip(names, results):
+        q = qs[name]
+        if isinstance(collected, Exception):
+            fail(name, f"spark error: {collected}")
             continue
+        s_cols, s_rows, s_schema = collected
         if name in DRIVER_WINDOW:
             # driver-canon gate: the external harness pandas-sorts the
             # collected frame, which crashes on array/map/struct cells
-            # even when the values are correct (r7: dedup_cluster_jaccard)
-            bad_cols = nonscalar_spark_columns(sdf.schema)
+            # even when the values are correct (dedup_cluster_jaccard)
+            bad_cols = nonscalar_spark_columns(s_schema)
             if bad_cols:
-                print(
-                    f"FAIL {name}: DRIVER_WINDOW entry emits non-scalar "
+                fail(
+                    name,
+                    f"DRIVER_WINDOW entry emits non-scalar "
                     f"columns {bad_cols} (stringify with array_join/"
-                    f"concat_ws; oracle mirrors with array_to_string)"
+                    f"concat_ws; oracle mirrors with array_to_string)",
                 )
-                failures += 1
                 continue
         if q.oracle is None:
             print(f"rows-only {name}: {len(s_rows)} rows")
@@ -134,30 +162,26 @@ def run(sf_dir: str, only: list[str], spark=None, count_warns: bool = False):
             bad_types = unsafe_oracle_types(rel)
             d_rows = rel.fetchall()
         except Exception as exc:
-            print(f"FAIL {name}: duckdb error: {exc}")
-            failures += 1
+            fail(name, f"duckdb error: {exc}")
             continue
         if bad_types:
             # Hard gate, not a warning: the driver's fetch path renders
             # HUGEINT/DECIMAL as float (10 -> 10.0), so a value-identical
             # result hash-mismatches.  fetchall() here yields Python ints
-            # and would green-light the bug (round-5 postmortem: 5 driver
+            # and would green-light the bug (postmortem: 5 driver
             # hash failures on value-correct results).  Driver-unsafe
             # result types must be impossible to register, not unlikely.
-            print(f"FAIL {name}: driver-unsafe oracle column types {bad_types} "
-                  f"(cast to BIGINT/DOUBLE in the oracle SQL)")
-            failures += 1
+            fail(name, f"driver-unsafe oracle column types {bad_types} "
+                       f"(cast to BIGINT/DOUBLE in the oracle SQL)")
             continue
         s_cnt, s_hash = frame_hash([c.lower() for c in s_cols], s_rows)
         d_cnt, d_hash = frame_hash(d_cols, d_rows)
         if sorted(c.lower() for c in s_cols) != sorted(d_cols):
-            print(f"FAIL {name}: columns spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
-            failures += 1
+            fail(name, f"columns spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
         elif s_cnt != d_cnt:
-            print(f"FAIL {name}: rowcount spark={s_cnt} duckdb={d_cnt}")
-            failures += 1
+            fail(name, f"rowcount spark={s_cnt} duckdb={d_cnt}")
         elif s_hash != d_hash:
-            print(f"FAIL {name}: value hash mismatch ({s_cnt} rows)")
+            fail(name, f"value hash mismatch ({s_cnt} rows)")
             # print a tiny diff sample
             s_set = {
                 "\x1f".join(
@@ -177,7 +201,6 @@ def run(sf_dir: str, only: list[str], spark=None, count_warns: bool = False):
                 print(f"  spark-only: {line!r}")
             for line in list(d_set - s_set)[:3]:
                 print(f"  duck-only:  {line!r}")
-            failures += 1
         else:
             # strict secondary check: raw (unnormalized) reprs. A WARN
             # here means correctness depends on the driver normalizing
@@ -194,12 +217,13 @@ def run(sf_dir: str, only: list[str], spark=None, count_warns: bool = False):
             if strict:
                 warns += 1
             print(f"OK   {name}: {s_cnt} rows hash={s_hash}{strict}")
-    print(f"\n{len(names) - failures}/{len(names)} passed, {warns} raw-repr warnings")
-    return failures if not count_warns else (failures, warns)
+    print(f"\n{len(names) - len(failures)}/{len(names)} passed, {warns} raw-repr warnings")
+    return failures, warns
 
 
 if __name__ == "__main__":
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = args[1:] if args and "/" in args[0] else args
-    sys.exit(1 if run(sf_dir, only) else 0)
+    failures, _ = run(sf_dir, only)
+    sys.exit(1 if failures else 0)

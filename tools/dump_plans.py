@@ -109,7 +109,7 @@ SHOWCASE = [
     "event_pattern_funnels",
     "sketch_kmv_cooccurrence",
     "aqp_sampled_revenue",
-    # r7 additions
+    # later additions
     "multimodal_mp3_sideinfo",
     "dedup_substring_fraction",
     "embedding_mutual_nn",
@@ -126,7 +126,7 @@ SHOWCASE = [
     "graph_kcore_hosts",
     "drift_ks_two_sample",
     "drift_psi_decile_bins",
-    # r9: restructured / rows-only→oracle conversions + rotated-in stats
+    # restructured / rows-only→oracle conversions + rotated-in stats
     "batch_padding_waste",
     "dedup_minhash_lsh",
     "dedup_simhash_band",
@@ -140,7 +140,7 @@ SHOWCASE = [
     "stats_chi2_independence",
     "experiment_welch_effect",
     "attribution_linear_credit",
-    # r12: newly driver-windowed entries not already above, so the
+    # driver-windowed entries not already above, so the
     # in-window plan audit has evidence for every fresh entry
     "experiment_proportion_ztest",
     "anomaly_rolling_zscore",
@@ -148,13 +148,13 @@ SHOWCASE = [
     "aqp_stratified_revenue",
     "dedup_semantic_keep",
     "corpus_stratified_sample",
-    # r13: newly driver-windowed entries not already above
+    # more driver-windowed entries not already above
     "approx_percentile_price",
     "source_roundtrip_formats",
     "stream_sliding_window",
     "privacy_k_anonymity",
     "hypertable_rollup",
-    # r14: newly driver-windowed entries not already above
+    # more driver-windowed entries not already above
     "q7_nation_volume",
     "skew_salted_aggregate",
     "bloom_pruned_join",
