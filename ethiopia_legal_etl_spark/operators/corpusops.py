@@ -152,12 +152,16 @@ def paragraph_dedup(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     "host at K rows so output is bounded by K·|hosts|.",
 )
 def corpus_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+    return host_capped(load_table(spark, sf_dir, "documents"), "doc_id", "source")
+
+
+def host_capped(docs: DataFrame, *cols: str) -> DataFrame:
+    """`cols` plus `host_rank` of the first _HOST_CAP documents of each
+    source in Knuth-hash order (ties by doc_id)."""
     bucket = (F.col("doc_id") % 1000000007) * F.lit(_KNUTH) % 1000000
     w = Window.partitionBy("source").orderBy(bucket.asc(), F.col("doc_id"))
-    return (
-        docs.select("doc_id", "source", F.row_number().over(w).alias("host_rank"))
-        .where(F.col("host_rank") <= _HOST_CAP)
+    return docs.select(*cols, F.row_number().over(w).alias("host_rank")).where(
+        F.col("host_rank") <= _HOST_CAP
     )
 
 
@@ -313,15 +317,7 @@ def chunk_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (F.col("doc_id") % 1000000007) * F.lit(_KNUTH) % 1000000
-    w = Window.partitionBy("source").orderBy(bucket.asc(), F.col("doc_id"))
-    capped = (
-        docs.select(
-            "doc_id", "lang", "text", F.row_number().over(w).alias("host_rank")
-        )
-        .where(F.col("host_rank") <= _HOST_CAP)
-        .drop("host_rank")
-    )
+    capped = host_capped(docs, "doc_id", "lang", "text").drop("host_rank")
     cleaned = paragraph_dedup(capped, carry=("lang",))
     kept = cleaned.where(F.col("kept_blocks") > 0)
     cnt = (
@@ -735,40 +731,6 @@ _BPE_COMPILE_THRESHOLD = 64  # merges; above this, regex-chain codegen
 # switches to the broadcast-merge-table vectorized path
 
 
-def _bpe_word_len(word: str, ranks: dict, cache: dict) -> int:
-    """Token count of one word under the trained merges: repeatedly
-    merge the lowest-rank adjacent pair present (the GPT-2 encode
-    loop). Equivalent to applying merges sequentially in rank order —
-    merging rank k only creates pairs involving the new symbol, whose
-    merges necessarily have rank > k, so no earlier merge can become
-    applicable. Per-batch `cache` encodes each distinct word once."""
-    hit = cache.get(word)
-    if hit is not None:
-        return hit
-    syms = list(word) + [_EOW]
-    while len(syms) > 1:
-        best_rank, best_pair = None, None
-        for p in zip(syms, syms[1:]):
-            r = ranks.get(p)
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best_pair = r, p
-        if best_pair is None:
-            break
-        left, right = best_pair
-        merged = left + right
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                out.append(merged)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    cache[word] = len(syms)
-    return len(syms)
-
-
 def bpe_encode_tokens(
     spark: SparkSession,
     sf_dir: str,
@@ -846,7 +808,7 @@ def bpe_encode_tokens(
                 if t is None:
                     return None
                 return sum(
-                    _bpe_word_len(w, ranks, cache)
+                    len(_bpe_word_syms(w, ranks, cache))
                     for w in t.split(" ")
                     if w
                 )
@@ -881,8 +843,12 @@ def bpe_vocab(
 
 
 def _bpe_word_syms(word: str, ranks: dict, cache: dict) -> list:
-    """Symbol sequence of one word under the trained merges (same
-    lowest-rank-first loop as _bpe_word_len, returning the symbols)."""
+    """Symbol sequence of one word under the trained merges: repeatedly
+    merge the lowest-rank adjacent pair present (the GPT-2 encode
+    loop). Equivalent to applying merges sequentially in rank order —
+    merging rank k only creates pairs involving the new symbol, whose
+    merges necessarily have rank > k, so no earlier merge can become
+    applicable. Per-batch `cache` encodes each distinct word once."""
     hit = cache.get(word)
     if hit is not None:
         return hit
@@ -994,6 +960,12 @@ def bpe_encode_ids(
     return _encode_ids_df(spark, docs, ranks, vocab)
 
 
+BPE_MERGES_SCHEMA = (
+    "rank int, left string, right string, merged string, pair_count long"
+)
+BPE_ALPHABET_SCHEMA = "ch string"
+
+
 def save_bpe_tokenizer(
     spark: SparkSession, sf_dir: str, path: str, n_merges: int = 32
 ) -> dict:
@@ -1004,14 +976,13 @@ def save_bpe_tokenizer(
     session's filesystem, so it lands on HDFS/S3A like any other
     table. Returns {n_merges, vocab_size}."""
     merges = bpe_train_list(spark, sf_dir, n_merges)
-    spark.createDataFrame(
-        merges,
-        "rank int, left string, right string, merged string, pair_count long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/merges.parquet")
+    spark.createDataFrame(merges, BPE_MERGES_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/merges.parquet")
     docs = load_table(spark, sf_dir, "documents")
     alphabet = _corpus_alphabet(docs)
     spark.createDataFrame(
-        [(c,) for c in sorted(alphabet)], "ch string"
+        [(c,) for c in sorted(alphabet)], BPE_ALPHABET_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{path}/alphabet.parquet"
     )
@@ -1022,16 +993,20 @@ def save_bpe_tokenizer(
 def load_bpe_tokenizer(spark: SparkSession, path: str) -> tuple:
     """Load a persisted tokenizer artifact -> (ranks, vocab), ready
     for `_encode_ids_df`. Bounded collects: merges + alphabet are
-    artifact-sized, never corpus-sized."""
+    artifact-sized, never corpus-sized. Both reads use the schemas
+    `save_bpe_tokenizer` writes with, so neither infers one."""
     mrows = (
-        spark.read.parquet(f"{path}/merges.parquet")
+        spark.read.schema(BPE_MERGES_SCHEMA)
+        .parquet(f"{path}/merges.parquet")
         .orderBy("rank")
         .collect()
     )
     merges3 = [(r["left"], r["right"], r["merged"]) for r in mrows]
     alphabet = [
         r["ch"]
-        for r in spark.read.parquet(f"{path}/alphabet.parquet").collect()
+        for r in spark.read.schema(BPE_ALPHABET_SCHEMA)
+        .parquet(f"{path}/alphabet.parquet")
+        .collect()
     ]
     ranks = {(lf, rt): i for i, (lf, rt, _m) in enumerate(merges3)}
     return ranks, bpe_vocab(merges3, alphabet)

@@ -87,7 +87,6 @@ def dedup_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1-(1-s^2)^4 ~ 0.68 by construction — the banding trade-off,
 # identically applied; an independent precision/recall gate vs exact
 # all-pairs lives in tests/test_dedup_similarity.py).
-_MINHASH_SEEDS = 8
 _MINHASH_BANDS = 4  # r = 2 signatures per band
 
 

@@ -64,7 +64,12 @@ from ethiopia_legal_etl_spark.sources.tables import load_table
     "the single shuffle, keyed on a uniform crypto digest.",
 )
 def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+    return training_corpus(load_table(spark, sf_dir, "documents"))
+
+
+def training_corpus(docs: DataFrame) -> DataFrame:
+    """The pipeline over a `documents` frame: (doc_id, n_tokens,
+    quality, digest) of each kept document."""
 
     def marker_count(marker: str):
         return (
@@ -215,42 +220,10 @@ def observed_training_corpus(spark: SparkSession, sf_dir: str):
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.length("text") == 0, 1).otherwise(0)).alias("n_empty"),
     )
-
-    def marker_count(marker: str):
-        return (
-            F.length("text") - F.length(F.regexp_replace("text", marker, ""))
-        ) / len(marker)
-
-    lang_gated = observed.where(F.length("text") > 0).where(
-        (marker_count("the") >= 1) | (marker_count("and") >= 1)
-    )
-    digest = F.sha2(F.col("text"), 256)
-    w = Window.partitionBy(digest).orderBy("doc_id")
-    deduped = (
-        lang_gated.withColumn("digest", digest)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-    )
-    toks = F.split(F.col("text"), " ")
-    n_tokens = F.size(toks)
-    quality = F.round(
-        0.5 * F.least(n_tokens.cast("double") / 50, F.lit(1.0))
-        + 0.5 * (F.size(F.array_distinct(toks)).cast("double") / n_tokens),
-        4,
-    )
-    result = (
-        deduped.select(
-            "doc_id",
-            n_tokens.alias("n_tokens"),
-            quality.alias("quality"),
-            "digest",
-        )
-        .where(F.col("quality") >= 0.5)
-        .observe(
-            obs_out,
-            F.count(F.lit(1)).alias("n_survivors"),
-            F.sum("n_tokens").alias("total_tokens"),
-        )
+    result = training_corpus(observed).observe(
+        obs_out,
+        F.count(F.lit(1)).alias("n_survivors"),
+        F.sum("n_tokens").alias("total_tokens"),
     )
     return result, obs_in, obs_out
 

@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 from ethiopia_legal_etl_spark.operators.registry import register
 from ethiopia_legal_etl_spark.sources.tables import load_table
 
-_PROFILE_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
-
 
 @register(
     "profile_table_stats",

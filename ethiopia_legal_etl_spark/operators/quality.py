@@ -271,22 +271,12 @@ def _curation_oracle() -> str:
 )
 def corpus_quality_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ethiopia_legal_etl_spark.operators.corpusops import (
-        _HOST_CAP,
-        _KNUTH,
+        host_capped,
         paragraph_dedup,
     )
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (F.col("doc_id") % 1000000007) * F.lit(_KNUTH) % 1000000
-    w = Window.partitionBy("source").orderBy(bucket.asc(), F.col("doc_id"))
-    capped = (
-        docs.select(
-            "doc_id", "lang", "text", F.row_number().over(w).alias("host_rank")
-        )
-        .where(F.col("host_rank") <= _HOST_CAP)
-        .drop("host_rank")
-    )
+    capped = host_capped(docs, "doc_id", "lang", "text").drop("host_rank")
     cleaned = paragraph_dedup(capped, carry=("lang",))
     kept = cleaned.where(F.col("kept_blocks") > 0)
     # stateless row-expression scorer over the reconstructed text —

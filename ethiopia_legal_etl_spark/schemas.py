@@ -11,7 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -65,16 +64,6 @@ DOCUMENT_SCHEMA = StructType(
 # --- Layer A secondary shapes ------------------------------------------
 # scrape_pdf_links.py:17-18 / fetch_legal_docs.py:14-19 hand-off file.
 PDF_LINKS_SCHEMA = StructType([StructField("url", StringType())])
-
-# Offline test double for the HTTP fetch stage (A-7/A-8); see FIXTURES.md §2.3.
-FETCH_RESPONSE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("status", IntegerType()),
-        StructField("content_type", StringType()),
-        StructField("body", BinaryType()),
-    ]
-)
 
 # --- Layer B: driver synthetic tables (TESTDATA.md / FIXTURES.md §1) ----
 # The tables store tz-naive parquet timestamps, which Spark reads as

@@ -5,9 +5,13 @@ The reference's only stream is the append-only, 50-line-capped
 status.log (deploy-gh-pages.yml:19-20; SURVEY.md §1.1) — here
 generalized to event-time windowing over `events`.
 
-Batch window()/session_window() share semantics with their streaming
-twins, so the DuckDB oracle validates the windowing logic once; the
-streaming functions reuse the same transformations over readStream
+Each windowed shape is ONE DataFrame -> DataFrame transform
+(tumbling_counts, sliding_counts, session_counts, enriched_counts,
+purchase_click_join, drift_bin_counts). The registered `stream_*`
+batch entry runs it over load_table and projects the window start as
+the oracle's formatted string; its `streaming_*` twin runs it over
+as_event_time(...).withWatermark(...) and keeps the start a timestamp.
+So the DuckDB oracle checks the very transform the streams run
 (tested with file sources + availableNow trigger in tests/).
 
 Timestamp precision: events.ts is ns in parquet; Spark truncates to
@@ -22,7 +26,9 @@ use Spark's native session_window (state merges server-side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ethiopia_legal_etl_spark.operators.registry import register
@@ -30,6 +36,32 @@ from ethiopia_legal_etl_spark.functions.measures import clean_measures
 from ethiopia_legal_etl_spark.sources.tables import load_table
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
+
+# How a shared transform projects a window start: the batch twins
+# format it as the oracle's string, the streaming twins keep the
+# timestamp.
+Start = Callable[[Column], Column]
+
+
+def _formatted(start: Column) -> Column:
+    return F.date_format(start, TS_FMT)
+
+
+def _unformatted(start: Column) -> Column:
+    return start
+
+
+def tumbling_counts(events: DataFrame, key: str, start: Start) -> DataFrame:
+    """Tumbling 10-min event-time window counts and value sums per
+    `key`; `start` projects the window start."""
+    return (
+        events.groupBy(F.window("ts", "10 minutes").alias("w"), key)
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+        .select(start(F.col("w.start")).alias("window_start"), key, "cnt", "sum_value")
+    )
 
 
 @register(
@@ -43,23 +75,32 @@ TS_FMT = "yyyy-MM-dd HH:mm:ss"
     FROM events
     GROUP BY time_bucket(INTERVAL 10 MINUTE, ts), event_type
     """,
-    doc="tumbling 10-min event-time window (batch twin of the streaming "
-    "groupBy(window(ts,'10 minutes')))",
+    doc="tumbling 10-min event-time window per event_type: "
+    "tumbling_counts, the transform streaming_tumbling_counts runs",
 )
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
+    return tumbling_counts(
+        load_table(spark, sf_dir, "events"), "event_type", _formatted
+    )
+
+
+def sliding_counts(events: DataFrame, start: Start) -> DataFrame:
+    """Sliding 10-min window, 5-min hop (each event lands in 2
+    windows): count and average value; `start` projects the window
+    start."""
     return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
+        # avg via exact decimal sum / count: both engines divide the
+        # SAME double by the same int — bitwise-identical result, no
+        # round-tie risk (value is a 2-dp quantity)
+        events.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
+            (
+                F.sum(F.col("value").cast("decimal(14,2)")).cast("double")
+                / F.count(F.lit(1))
+            ).alias("avg_value"),
         )
-        .select(
-            F.date_format("w.start", TS_FMT).alias("window_start"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
+        .select(start(F.col("w.start")).alias("window_start"), "cnt", "avg_value")
     )
 
 
@@ -77,26 +118,30 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM assigned
     GROUP BY window_start
     """,
-    doc="sliding window 10-min / hop 5-min (each event lands in 2 windows)",
+    doc="sliding window 10-min / hop 5-min (each event lands in 2 "
+    "windows): sliding_counts, the transform streaming_sliding_counts runs",
 )
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = clean_measures(load_table(spark, sf_dir, "events"), "value")
+    return sliding_counts(
+        clean_measures(load_table(spark, sf_dir, "events"), "value"), _formatted
+    )
+
+
+def session_counts(events: DataFrame, start: Start) -> DataFrame:
+    """Per-user session windows (native session_window, 5-min gap):
+    event count and value sum; `start` projects the second-truncated
+    session start."""
     return (
-        # avg via exact decimal sum / count: both engines divide the
-        # SAME double by the same int — bitwise-identical result, no
-        # round-tie risk (value is a 2-dp quantity)
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
+        events.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            (
-                F.sum(F.col("value").cast("decimal(14,2)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_value"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
-            F.date_format("w.start", TS_FMT).alias("window_start"),
-            "cnt",
-            "avg_value",
+            "user_id",
+            start(F.date_trunc("second", "w.start")).alias("session_start"),
+            "n_events",
+            "sum_value",
         )
     )
 
@@ -126,26 +171,12 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions
     GROUP BY user_id, session_no
     """,
-    doc="session windows, 5-min gap, per user (session_window; oracle = "
-    "gaps-and-islands SQL)",
+    doc="session windows, 5-min gap, per user: session_counts, the "
+    "transform streaming_session_counts runs (oracle = gaps-and-islands "
+    "SQL)",
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format(F.date_trunc("second", "w.start"), TS_FMT).alias(
-                "session_start"
-            ),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return session_counts(load_table(spark, sf_dir, "events"), _formatted)
 
 
 @register(
@@ -223,28 +254,22 @@ def hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="stream-static enrichment join, batch twin: events joined to a "
     "static per-user tier dimension (derived once from history), then "
-    "tumbling 10-min counts per tier. The streaming variant "
-    "(streaming_enriched_counts) broadcast-joins the SAME dim to each "
-    "micro-batch — the standard enrichment pattern where only the "
-    "stream shuffles (on the window/tier agg key) and the dim never "
-    "does.",
+    "tumbling 10-min counts per tier (enriched_counts). The streaming "
+    "variant (streaming_enriched_counts) runs enriched_counts too, "
+    "broadcast-joining the SAME dim to each micro-batch — the standard "
+    "enrichment pattern where only the stream shuffles (on the "
+    "window/tier agg key) and the dim never does.",
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    dim = user_tier_dim(ev)
-    return (
-        ev.join(F.broadcast(dim), "user_id")
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "tier")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", TS_FMT).alias("window_start"),
-            "tier",
-            "cnt",
-            "sum_value",
-        )
+    return enriched_counts(ev, user_tier_dim(ev), _formatted)
+
+
+def enriched_counts(events: DataFrame, user_dim: DataFrame, start: Start) -> DataFrame:
+    """Stream-static enrichment: broadcast-join the per-user tier dim,
+    then tumbling_counts per tier."""
+    return tumbling_counts(
+        events.join(F.broadcast(user_dim), "user_id"), "tier", start
     )
 
 
@@ -297,7 +322,8 @@ def stream_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     "to the same user's clicks in the preceding hour (click-to-buy "
     "attribution), LEFT so zero-click purchases stay visible. The true "
     "stream-stream variant (streaming_purchase_click_join) runs the "
-    "SAME condition as a watermarked Structured Streaming join: both "
+    "SAME join (purchase_click_join) as a watermarked Structured "
+    "Streaming join: both "
     "sides keyed on user_id, and the time-range predicate lets Spark "
     "bound join state — a purchase is evicted once the watermark "
     "passes its ts (no future click can precede it), a click once the "
@@ -310,21 +336,9 @@ def stream_dedup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    joined = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
+    joined = purchase_click_join(
+        ev.filter(F.col("event_type") == "purchase"),
+        ev.filter(F.col("event_type") == "click"),
         "left",
     )
     return joined.groupBy("purchase_id").agg(
@@ -332,6 +346,32 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("click_id"), F.lit(0))
         .cast("bigint")
         .alias("click_id_sum"),
+    )
+
+
+def purchase_click_join(
+    purchases: DataFrame, clicks: DataFrame, how: str
+) -> DataFrame:
+    """Each purchase joined to the same user's clicks in the preceding
+    hour: (purchase_id, p_user, p_ts, click_id, c_user, c_ts). A
+    streaming caller watermarks `ts` on each input first; the p_ts /
+    c_ts aliases keep the event-time mark."""
+    p = purchases.select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+    )
+    c = clicks.select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("c_ts"),
+    )
+    return p.join(
+        c,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("c_ts") <= F.col("p_ts")),
+        how,
     )
 
 
@@ -364,95 +404,55 @@ def as_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     return df.withColumn(col, F.col(col).cast("timestamp_ltz"))
 
 
+def _watermarked(events_stream: DataFrame, delay: str) -> DataFrame:
+    """The streaming source: event time as TIMESTAMP, watermarked."""
+    return as_event_time(events_stream).withWatermark("ts", delay)
+
+
 def streaming_tumbling_counts(events_stream: DataFrame) -> DataFrame:
-    """readStream twin of stream_tumbling_window with a 10-min
-    watermark: late events beyond the watermark are dropped, state is
-    bounded. Append-mode compatible (aggregation keyed on the window)."""
-    return (
-        as_event_time(events_stream).withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "cnt", "sum_value"
-        )
+    """readStream twin of stream_tumbling_window (tumbling_counts) with
+    a 10-min watermark: late events beyond the watermark are dropped,
+    state is bounded. Append-mode compatible (aggregation keyed on the
+    window)."""
+    return tumbling_counts(
+        _watermarked(events_stream, "10 minutes"), "event_type", _unformatted
     )
 
 
 def streaming_enriched_counts(
     events_stream: DataFrame, user_dim: DataFrame
 ) -> DataFrame:
-    """readStream twin of stream_static_enrich: stream-STATIC join —
-    each micro-batch broadcast-joins the static per-user dim (no
-    watermark needed on the static side, no join state kept; the only
-    stateful op is the windowed agg). The dim is re-resolved per
-    micro-batch, so a dim refresh (rewritten table) is picked up
-    without restarting the query."""
-    return (
-        as_event_time(events_stream)
-        .withWatermark("ts", "10 minutes")
-        .join(F.broadcast(user_dim), "user_id")
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "tier")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "tier", "cnt", "sum_value"
-        )
+    """readStream twin of stream_static_enrich (enriched_counts):
+    stream-STATIC join — each micro-batch broadcast-joins the static
+    per-user dim (no watermark needed on the static side, no join state
+    kept; the only stateful op is the windowed agg). The dim is
+    re-resolved per micro-batch, so a dim refresh (rewritten table) is
+    picked up without restarting the query."""
+    return enriched_counts(
+        _watermarked(events_stream, "10 minutes"), user_dim, _unformatted
     )
 
 
 def streaming_sliding_counts(events_stream: DataFrame) -> DataFrame:
-    """readStream twin of stream_sliding_window (10-min window, 5-min
-    hop — each event lands in 2 windows) with a 10-min watermark."""
-    return (
-        as_event_time(events_stream)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            (
-                F.sum(F.col("value").cast("decimal(14,2)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "cnt", "avg_value")
-    )
+    """readStream twin of stream_sliding_window (sliding_counts) with a
+    10-min watermark."""
+    return sliding_counts(_watermarked(events_stream, "10 minutes"), _unformatted)
 
 
 def streaming_session_counts(events_stream: DataFrame) -> DataFrame:
-    """readStream twin of stream_session_window: native session_window
-    with a 10-min watermark — state merges sessions server-side and
-    closes them once the watermark passes the gap, so state is bounded
-    by |open sessions|, not history. Append-mode compatible."""
-    return (
-        as_event_time(events_stream)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.date_trunc("second", "w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    """readStream twin of stream_session_window (session_counts) with a
+    10-min watermark — state merges sessions server-side and closes
+    them once the watermark passes the gap, so state is bounded by
+    |open sessions|, not history. Append-mode compatible."""
+    return session_counts(_watermarked(events_stream, "10 minutes"), _unformatted)
 
 
 def streaming_dedup_within_watermark(events_stream: DataFrame) -> DataFrame:
     """Stateful streaming dedup: drop duplicate event_ids arriving
     within the watermark horizon (exactly-once-per-event_id analog of
     the reference's incremental skip, A-6)."""
-    return (
-        as_event_time(events_stream)
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["event_id"])
+    return _watermarked(events_stream, "10 minutes").dropDuplicatesWithinWatermark(
+        ["event_id"]
     )
 
 
@@ -461,40 +461,19 @@ def streaming_purchase_click_join(
     clicks_stream: DataFrame,
     join_type: str = "inner",
 ) -> DataFrame:
-    """True stream-stream join twin of stream_stream_interval_join:
-    purchases x clicks on user_id within a 1-hour lookback, both sides
-    watermarked (10 min) so Spark derives state-eviction bounds from
-    the range condition — purchase state drops once the watermark
-    passes p_ts, click state once it passes c_ts + 1h. Inner matches
-    emit eagerly; with join_type='leftouter' the null-augmented rows
-    for never-matched purchases emit only after their state is evicted
-    (the watermark-delayed outer-join semantics Structured Streaming
-    documents). State is bounded by the 1-hour horizon per side."""
-    p = (
-        as_event_time(purchases_stream)
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    c = (
-        as_event_time(clicks_stream)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    return p.join(
-        c,
-        F.expr(
-            "p_user = c_user"
-            " AND c_ts >= p_ts - INTERVAL 1 HOUR"
-            " AND c_ts <= p_ts"
-        ),
+    """True stream-stream join twin of stream_stream_interval_join
+    (purchase_click_join): purchases x clicks on user_id within a
+    1-hour lookback, both sides watermarked (10 min) so Spark derives
+    state-eviction bounds from the range condition — purchase state
+    drops once the watermark passes p_ts, click state once it passes
+    c_ts + 1h. Inner matches emit eagerly; with join_type='leftouter'
+    the null-augmented rows for never-matched purchases emit only after
+    their state is evicted (the watermark-delayed outer-join semantics
+    Structured Streaming documents). State is bounded by the 1-hour
+    horizon per side."""
+    return purchase_click_join(
+        _watermarked(purchases_stream, "10 minutes"),
+        _watermarked(clicks_stream, "10 minutes"),
         join_type,
     ).select("purchase_id", "click_id", "p_ts", "c_ts")
 
@@ -720,20 +699,24 @@ def reference_bin_distribution(events: DataFrame) -> DataFrame:
     )
 
 
+def drift_bin_counts(events: DataFrame) -> DataFrame:
+    """Per-day tumbling event-time window x fixed-edge bin counts of
+    events with a non-null value: (w, bin, cur_c), the `cur` input of
+    psi_from_bin_counts."""
+    return events.groupBy(
+        F.window("ts", "1 day").alias("w"), drift_bin().alias("bin")
+    ).agg(F.count(F.lit(1)).alias("cur_c"))
+
+
 def streaming_drift_bin_counts(events_stream: DataFrame) -> DataFrame:
-    """Stateful half of the streaming drift monitor: per-day tumbling
-    event-time window x fixed-edge bin counts, watermark-bounded
-    state. The PSI fold itself is stateless per closed window and
-    runs downstream (psi_from_bin_counts over the sink — the
-    gold-table pattern), keeping the streaming query a single
-    windowed aggregation in append mode."""
-    return (
-        as_event_time(events_stream)
-        .where(F.col("value").isNotNull())
-        .withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "1 day").alias("w"), drift_bin().alias("bin"))
-        .agg(F.count(F.lit(1)).alias("cur_c"))
-    )
+    """Stateful half of the streaming drift monitor: drift_bin_counts
+    over a 1-day watermark, so state is bounded. The PSI fold itself is
+    stateless per closed window and runs downstream (psi_from_bin_counts
+    over the sink — the gold-table pattern), keeping the streaming
+    query a single windowed aggregation in append mode. Null values are
+    dropped before the watermark, so they do not advance it."""
+    valued = events_stream.where(F.col("value").isNotNull())
+    return drift_bin_counts(_watermarked(valued, "1 day"))
 
 
 @register(
@@ -783,7 +766,8 @@ def streaming_drift_bin_counts(events_stream: DataFrame) -> DataFrame:
     "deploy, fixed bin edges because a stream can't see a global "
     "min/max, per-window PSI as each watermark closes a day). "
     "Composition: the stateful half is ONE windowed aggregation "
-    "(streaming_drift_bin_counts — append-mode, watermark-bounded "
+    "(drift_bin_counts, which streaming_drift_bin_counts runs "
+    "append-mode with watermark-bounded "
     "state of |open windows| x 10 bins); the PSI fold is stateless "
     "per closed window (psi_from_bin_counts, shared verbatim between "
     "this batch twin and the true-stream test) with the "
@@ -802,10 +786,5 @@ def stream_drift_psi_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "value",
     )
-    ref = reference_bin_distribution(ev)
-    cur = (
-        ev.where(F.col("value").isNotNull())
-        .groupBy(F.window("ts", "1 day").alias("w"), drift_bin().alias("bin"))
-        .agg(F.count(F.lit(1)).alias("cur_c"))
-    )
-    return psi_from_bin_counts(cur, ref)
+    cur = drift_bin_counts(ev.where(F.col("value").isNotNull()))
+    return psi_from_bin_counts(cur, reference_bin_distribution(ev))

@@ -797,6 +797,40 @@ def test_bpe_tokenizer_artifact_roundtrip(spark, tmp_path):
     assert loaded == fresh
 
 
+def test_bpe_tokenizer_load_runs_no_schema_inference_job(spark, tmp_path):
+    """load_bpe_tokenizer reads both artifact files with their declared
+    schemas: it runs exactly the jobs of its two collects, and no
+    footer-inference job on top."""
+    from ethiopia_legal_etl_spark.operators.corpusops import (
+        load_bpe_tokenizer,
+        save_bpe_tokenizer,
+    )
+
+    d = _rich_corpus(spark, tmp_path, n_words=40, n_docs=20)
+    tk = str(tmp_path / "tokenizer")
+    save_bpe_tokenizer(spark, d, tk, n_merges=8)
+    sc = spark.sparkContext
+
+    def jobs_of(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # built (and, for a bare read, inferred) outside the group
+    merges = spark.read.parquet(f"{tk}/merges.parquet").orderBy("rank")
+    alphabet = spark.read.parquet(f"{tk}/alphabet.parquet")
+    collects = jobs_of(
+        "bpe_artifact_collects", lambda: (merges.collect(), alphabet.collect())
+    )
+    load = jobs_of("bpe_artifact_load", lambda: load_bpe_tokenizer(spark, tk))
+    assert collects > 0
+    assert load == collects
+
+
 def test_bpe_incremental_trainer_matches_naive_on_random_tables():
     """Property: the incremental pair-count trainer (driver loop in
     corpusops) agrees merge-for-merge with the naive recount-from-

@@ -10,11 +10,13 @@ sf0.001 (tools/mirrors.py); the empty axis, with its pinned
 divergences, is in test_empty_inputs.py.
 
 sf0.001 keeps each sweep near 1.5 min (86-96 s measured at local[4],
-with check_oracle.run collecting four entries at once); the sf0.01
-replica (tools/check_oracle.py) remains the pre-commit deep check.
+with check_oracle.run collecting four entries at once). One more sweep
+runs the clean registry at sf0.01 (about 4 min).
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 
@@ -112,6 +114,18 @@ def test_full_registry_matches_oracles(oracle_gate):
     # the replica does. Lock that in — a new entry that only passes
     # via normalization (int-vs-float, -0.0) must be fixed, not shipped.
     assert warns == 0, f"{warns} entries rely on normalization (raw reprs differ)"
+
+
+def test_full_registry_matches_oracles_at_sf0_01(spark, sf_dir, check_oracle):
+    """The same gate at sf0.01: ten times the rows of sf0.001, so ties,
+    groups and windows the small scale never forms get compared too.
+    Skips only where no sf0.01 directory sits next to the test scale."""
+    sf = Path(sf_dir).with_name("sf0.01")
+    if not sf.is_dir():
+        pytest.skip(f"{sf} is absent")
+    failures, warns = check_oracle.run(str(sf), [], spark=spark)
+    assert not failures, f"registry entries diverged from their oracles at sf0.01: {failures}"
+    assert warns == 0, f"{warns} entries rely on normalization (raw reprs differ) at sf0.01"
 
 
 def test_full_registry_matches_oracles_on_nulls_mirror(oracle_gate):

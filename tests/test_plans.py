@@ -166,7 +166,7 @@ SP_BUDGET = {
     "gini_revenue_concentration": 1,   # Lorenz prefix over customer agg
     "abc_classification_parts": 2,     # cumulative share over part agg
     "monthly_revenue_mom": 1,          # |months| rows
-    "window_ntile_percent_rank": 1,    # customer-aggregate frame
+    "window_ntile_percent_rank": 1,    # orders of o_custkey < 50 (~500)
     "timeseries_gapfill_locf": 1,      # day-spine sequence
     "batch_padding_waste": 1,          # per-length count table prefix
     "retention_kaplan_meier": 8,       # distinct-duration frames (prefix
