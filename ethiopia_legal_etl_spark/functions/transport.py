@@ -19,6 +19,11 @@ When on, rows whose mixed-hash bucket falls under frac*10 have their
 payload cut at a second-hash-derived offset — mid-magic, mid-header,
 mid-frame, anywhere — and the decode stages must account them as
 error rows (doc_id + all-NULL metadata), never crash an executor.
+For the ten synthesized-media entries both happen in one place,
+operators/multimodal.synth_decode: it applies the cut to each
+payload its synths build and turns the decoder's ValueError into the
+error row. warc_ingest_extract, which models archives at rest, cuts
+in its own synth stage and isolates with row_or_nulls.
 tests/test_transport_truncation.py flips the conf and sweeps every
 media entry end-to-end, and fuzzes every decoder over EVERY cut
 offset directly (the decoder contract: any truncation raises

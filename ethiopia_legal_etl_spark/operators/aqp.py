@@ -32,10 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ethiopia_legal_etl_spark.operators.corpusops import _KNUTH, knuth_bucket
 from ethiopia_legal_etl_spark.operators.registry import register
 from ethiopia_legal_etl_spark.sources.tables import load_table
 
-_KNUTH = 2654435761  # same multiplicative constant as corpusops
 _F_PCT = 100000  # bucket cutoff of 1,000,000 -> f = 0.1
 
 # stratified tiers (BlinkDB columnsets): rare strata keep MORE of their
@@ -110,9 +110,9 @@ def aqp_sampled_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("decimal(12,2)")
         * (F.lit(1) - F.col("l_discount").cast("decimal(12,2)"))
     ).cast("decimal(18,4)")
-    bucket = (
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")) % 1000000007
-    ) * F.lit(_KNUTH) % 1000000
+    bucket = knuth_bucket(
+        F.col("l_orderkey") * 10 + F.col("l_linenumber"), 1000000
+    )
     base = li.select(
         "l_returnflag", rev.alias("rev"), bucket.alias("bucket")
     )
@@ -220,9 +220,9 @@ def aqp_stratified_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("decimal(12,2)")
         * (F.lit(1) - F.col("l_discount").cast("decimal(12,2)"))
     ).cast("decimal(18,4)")
-    bucket = (
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")) % 1000000007
-    ) * F.lit(_KNUTH) % 1000000
+    bucket = knuth_bucket(
+        F.col("l_orderkey") * 10 + F.col("l_linenumber"), 1000000
+    )
     base = li.select(*strata, rev.alias("rev"), bucket.alias("bucket"))
     sizes = base.groupBy(*strata).agg(
         F.count(F.lit(1)).alias("n_g"),

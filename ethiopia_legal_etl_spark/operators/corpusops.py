@@ -34,7 +34,7 @@ Scale notes (100 TB):
   and partial aggregation collapses per-partition duplicates.
 """
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ethiopia_legal_etl_spark.operators.registry import register
@@ -155,10 +155,17 @@ def corpus_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_capped(load_table(spark, sf_dir, "documents"), "doc_id", "source")
 
 
+def knuth_bucket(key: Column, m: int) -> Column:
+    """Knuth multiplicative hash of an integer key into [0, m):
+    `(key % 1000000007) * _KNUTH % m`, exact in int64, so a DuckDB
+    oracle evaluates the same expression in SQL."""
+    return (key % 1000000007) * F.lit(_KNUTH) % m
+
+
 def host_capped(docs: DataFrame, *cols: str) -> DataFrame:
     """`cols` plus `host_rank` of the first _HOST_CAP documents of each
     source in Knuth-hash order (ties by doc_id)."""
-    bucket = (F.col("doc_id") % 1000000007) * F.lit(_KNUTH) % 1000000
+    bucket = knuth_bucket(F.col("doc_id"), 1000000)
     w = Window.partitionBy("source").orderBy(bucket.asc(), F.col("doc_id"))
     return docs.select(*cols, F.row_number().over(w).alias("host_rank")).where(
         F.col("host_rank") <= _HOST_CAP

@@ -11,7 +11,6 @@ as column expressions / DataFrame ops over a `documents`-shaped table:
   A-17 resource-type routing       -> functions.text.resource_type
   A-6  incremental skip anti-join  -> incremental_skip query
   A-12 empty-document filter       -> non_empty filter + rejects split
-  A-19 per-record error isolation  -> split_rejects()
 
 The registered queries run these semantics over the driver's
 `documents`/`events` tables so the DuckDB oracle can check them.
@@ -24,7 +23,7 @@ whole-stage codegen, no shuffle except where noted, trivially valid at
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ethiopia_legal_etl_spark.functions.text import (
@@ -83,17 +82,6 @@ def build_document_record(
             F.array().cast("array<string>").alias("placeholders")
         ).alias("templateFields"),
     )
-
-
-def split_rejects(df: DataFrame, ok_predicate: Column) -> tuple[DataFrame, DataFrame]:
-    """A-19: per-record error isolation. The reference try/excepts each
-    record and silently drops failures from outputs
-    (fetch_legal_docs.py:93-96); the engine routes them to a rejects
-    DataFrame instead (side-effect-free PERMISSIVE-mode analog)."""
-    flagged = df.withColumn("_ok", ok_predicate)
-    ok = flagged.where(F.col("_ok")).drop("_ok")
-    rejects = flagged.where(~F.col("_ok") | F.col("_ok").isNull()).drop("_ok")
-    return ok, rejects
 
 
 # ---------------------------------------------------------------------

@@ -20,7 +20,7 @@ partitions; mapInPandas streams Arrow batches (maxRecordsPerBatch
 bounds executor memory per batch regardless of payload count).
 """
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -400,11 +400,17 @@ def synth_flat_jpeg(i: int) -> bytes:
     return encode_baseline_jpeg([[i % 256] * 8 for _ in range(8)], quant=1)
 
 
+def synth_media(i: int) -> bytes:
+    """The decode_real object: a PCM WAV for an even doc_id, a 24-bit
+    BMP for an odd one (functions/media.py's dependency-free
+    encoders)."""
+    from ethiopia_legal_etl_spark.functions.media import synth_bmp, synth_wav
+
+    return synth_wav(i) if i % 2 == 0 else synth_bmp(i)
+
+
 def _media_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared input pipeline for the synth-media entries
-    (multimodal_decode_real used to re-implement this inline, so a
-    partitioning/filtering change here could silently diverge from
-    the fused path — now both consume the same helper).
+    """Shared input pipeline for the synth-media and WARC-ingest entries.
 
     One shuffle of bare 8-byte doc_id rows buys full decode
     parallelism: without it a single-file documents scan yields ONE
@@ -420,53 +426,61 @@ def _media_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synth_media_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media payloads, synthesized distributed: even doc_ids get a
-    genuine PCM WAV, odd doc_ids a genuine 24-bit BMP (functions/
-    media.py — dependency-free encoders). mapInPandas so the bytes are
-    built executor-side, never on the driver."""
-    from ethiopia_legal_etl_spark.functions.transport import trunc_fraction
+def synth_decode(
+    spark: SparkSession,
+    sf_dir: str,
+    synths: list[Callable[[int], bytes]],
+    decode: Callable[..., list[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The stage every synthesized-media entry runs: one mapInPandas
+    over _media_doc_ids that, for each doc_id i, builds payload k as
+    maybe_truncate(synths[k](i), i, frac, salt=k) (the axis-9
+    transport cut, functions/transport.py; the salt lets a doc's
+    payloads fail independently) and emits (i, *row) for each row of
+    decode(i, *payloads). A ValueError from decode, the decoder
+    contract for a corrupt or truncated payload, becomes ONE error
+    row of doc_id plus all NULLs, so a multi-row decode never leaves
+    partial rows behind and one bad object never kills the job. Any
+    other exception is a decoder bug and fails the job.
 
-    docs = _media_doc_ids(spark, sf_dir)
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    # model object-store partial reads; 0 (default) = byte-identical
-    frac = trunc_fraction(spark)
-    return docs.mapInPandas(
-        _synth_media_fn(frac),
-        schema="doc_id long, media_type string, payload binary",
+    Synth and decode are fused: the payloads are built and decoded
+    inside the same Python worker, so the binary bytes never cross
+    the Arrow boundary (the warc_to_text precedent; fusion measured
+    1.06→0.71 s on decode_mpeg1 at sf0.1). The
+    FILE-based decode path, where payloads genuinely arrive as column
+    bytes, stays exercised by multimodal_decode_stub / binary_meta."""
+    import pandas as pd
+    from pyspark.sql.types import DataType
+
+    from ethiopia_legal_etl_spark.functions.transport import (
+        maybe_truncate,
+        trunc_fraction,
     )
 
+    frac = trunc_fraction(spark)
+    columns = DataType.fromDDL(schema).names
+    nulls = (None,) * (len(columns) - 1)
 
-def _synth_media_fn(frac: float):
-    """The WAV/BMP synth batch generator behind synth_media_real,
-    exposed so multimodal_decode_real can FUSE it with its decode
-    stage in one mapInPandas."""
-    import pandas as pd
-
-    from ethiopia_legal_etl_spark.functions.media import synth_bmp, synth_wav
-    from ethiopia_legal_etl_spark.functions.transport import maybe_truncate
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def synth_then_decode(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": [
-                        "audio" if i % 2 == 0 else "image" for i in ids
-                    ],
-                    "payload": [
-                        maybe_truncate(
-                            synth_wav(i) if i % 2 == 0 else synth_bmp(i),
-                            i,
-                            frac,
-                        )
-                        for i in ids
-                    ],
-                }
-            )
+            rows = []
+            for i in pdf["doc_id"].tolist():
+                payloads = [
+                    maybe_truncate(synth(i), i, frac, salt=k)
+                    for k, synth in enumerate(synths)
+                ]
+                try:
+                    rows += [(i, *r) for r in decode(i, *payloads)]
+                except ValueError:
+                    rows.append((i, *nulls))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return synth
+    return _media_doc_ids(spark, sf_dir).mapInPandas(
+        synth_then_decode, schema=schema
+    )
 
 
 @register(
@@ -508,66 +522,26 @@ def _synth_media_fn(frac: float):
     "perceptual Huffman/hybrid-filterbank codec has no in-container "
     "exact ground truth, but its frame/header family is now "
     "exercised for real by the Layer I decoder. "
-    "One deliberate parallelism shuffle (doc_id repartition; see the "
-    "comment at the scan), then synth -> decode in back-to-back "
-    "Arrow-batched mapInPandas stages.",
+    "One deliberate parallelism shuffle (doc_id repartition; see "
+    "_media_doc_ids), then synth -> decode in ONE fused Arrow-batched "
+    "mapInPandas stage (synth_decode).",
 )
 def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.media import decode_bmp, decode_wav
-    from ethiopia_legal_etl_spark.functions.transport import (
-        row_or_nulls,
-        trunc_fraction,
-    )
 
-    # same input pipeline + synth generator as synth_media_real
-    # (shared helpers); decode is fused below
-    docs = _media_doc_ids(spark, sf_dir)
-    synth = _synth_media_fn(trunc_fraction(spark))
+    def decode(i: int, payload: bytes) -> list[tuple]:
+        if i % 2 == 0:
+            m = decode_wav(payload)
+            return [("audio", m["byte_len"], m["sample_rate"], m["n_samples"],
+                     m["duration_us"], None, None)]
+        m = decode_bmp(payload)
+        return [("image", m["byte_len"], None, None, None, m["width"],
+                 m["height"])]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, mt, payload in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["payload"]
-            ):
-                b = bytes(payload)
-
-                def one() -> tuple:
-                    if mt == "audio":
-                        m = decode_wav(b)
-                        return (mt, m["byte_len"], m["sample_rate"],
-                                m["n_samples"], m["duration_us"], None,
-                                None)
-                    m = decode_bmp(b)
-                    return (mt, m["byte_len"], None, None, None,
-                            m["width"], m["height"])
-
-                # truncated payload (axis 9) -> error row, never a crash
-                rows.append(row_or_nulls(doc_id, 7, one))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_type", "byte_len", "sample_rate",
-                    "n_samples", "duration_us", "width", "height",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, media_type string, byte_len long, "
-            "sample_rate long, n_samples long, duration_us long, "
-            "width long, height long"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_media], decode,
+        "doc_id long, media_type string, byte_len long, sample_rate long, "
+        "n_samples long, duration_us long, width long, height long",
     )
 
 
@@ -602,85 +576,17 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decode mapInPandas pipeline.",
 )
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    from ethiopia_legal_etl_spark.functions.jpeg import decode_jpeg, synth_jpeg
 
-    from ethiopia_legal_etl_spark.functions.jpeg import (
-        decode_jpeg,
-        synth_jpeg,
-    )
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        row_or_nulls,
-        trunc_fraction,
-    )
+    def decode(i: int, grad: bytes, flat: bytes) -> list[tuple]:
+        g, f = decode_jpeg(grad), decode_jpeg(flat)
+        return [("image/jpeg", g["width"], g["height"], g["width"] * g["height"],
+                 g["n_components"], f["pixels"][0][0])]
 
-    # shared input pipeline (parallelism shuffle rationale at the
-    # helper's docstring)
-    docs = _media_doc_ids(spark, sf_dir)
-
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts;
-    # the two payload columns fail independently (distinct salts)
-    frac = trunc_fraction(spark)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "grad": [
-                        maybe_truncate(synth_jpeg(i), i, frac) for i in ids
-                    ],
-                    "flat": [
-                        maybe_truncate(synth_flat_jpeg(i), i, frac, salt=1)
-                        for i in ids
-                    ],
-                }
-            )
-
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, grad, flat in zip(
-                pdf["doc_id"], pdf["grad"], pdf["flat"]
-            ):
-
-                def one(grad=grad, flat=flat) -> tuple:
-                    g = decode_jpeg(bytes(grad))
-                    f = decode_jpeg(bytes(flat))
-                    return (
-                        "image/jpeg",
-                        g["width"],
-                        g["height"],
-                        g["width"] * g["height"],
-                        g["n_components"],
-                        f["pixels"][0][0],
-                    )
-
-                # truncated payload (axis 9) -> error row, never a crash
-                rows.append(row_or_nulls(doc_id, 6, one))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_type", "width", "height",
-                    "n_pixels", "n_components", "flat_val",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, media_type string, width long, height long, "
-            "n_pixels long, n_components int, flat_val long"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_jpeg, synth_flat_jpeg], decode,
+        "doc_id long, media_type string, width long, height long, "
+        "n_pixels long, n_components int, flat_val long",
     )
 
 
@@ -740,84 +646,18 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decode_audio_compressed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.g711 import decode_compressed_wav
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        row_or_nulls,
-        trunc_fraction,
-    )
 
-    # shared input pipeline (parallelism shuffle rationale at the
-    # helper's docstring)
-    docs = _media_doc_ids(spark, sf_dir)
+    def decode(i: int, mu: bytes, ima: bytes) -> list[tuple]:
+        m, a = decode_compressed_wav(mu), decode_compressed_wav(ima)
+        return [(m["codec"], m["sample_rate"], m["n_samples"], sum(m["samples"]),
+                 m["samples"][0], a["codec"], a["n_samples"], sum(a["samples"]))]
 
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts;
-    # the two audio objects fail independently (distinct salts)
-    frac = trunc_fraction(spark)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "mu": [
-                        maybe_truncate(synth_mu_wav(i), i, frac)
-                        for i in ids
-                    ],
-                    "ima": [
-                        maybe_truncate(synth_ima_wav(i), i, frac, salt=1)
-                        for i in ids
-                    ],
-                }
-            )
-
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, mu, ima in zip(pdf["doc_id"], pdf["mu"], pdf["ima"]):
-
-                def one(mu=mu, ima=ima) -> tuple:
-                    m = decode_compressed_wav(bytes(mu))
-                    a = decode_compressed_wav(bytes(ima))
-                    return (
-                        m["codec"],
-                        m["sample_rate"],
-                        m["n_samples"],
-                        sum(m["samples"]),
-                        m["samples"][0],
-                        a["codec"],
-                        a["n_samples"],
-                        sum(a["samples"]),
-                    )
-
-                # truncated payload (axis 9) -> error row, never a crash
-                rows.append(row_or_nulls(doc_id, 8, one))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mu_codec", "mu_rate", "mu_n", "mu_sum",
-                    "mu_first", "ima_codec", "ima_n", "ima_sum",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, mu_codec string, mu_rate long, mu_n long, "
-            "mu_sum long, mu_first long, ima_codec string, ima_n long, "
-            "ima_sum long"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_mu_wav, synth_ima_wav], decode,
+        "doc_id long, mu_codec string, mu_rate long, mu_n long, "
+        "mu_sum long, mu_first long, ima_codec string, ima_n long, "
+        "ima_sum long",
     )
 
 
@@ -857,71 +697,20 @@ def multimodal_decode_audio_compressed(
 def multimodal_video_frame_sample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.avi import parse_avi, sample_frames
     from ethiopia_legal_etl_spark.functions.jpeg import decode_jpeg
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        row_or_nulls,
-        trunc_fraction,
-    )
 
-    # shared input pipeline (parallelism shuffle rationale at the
-    # helper's docstring)
-    docs = _media_doc_ids(spark, sf_dir)
+    def decode(i: int, avi: bytes) -> list[tuple]:
+        m = parse_avi(avi)
+        sampled = sample_frames(m["frames"], 2)
+        val_sum = sum(decode_jpeg(f)["pixels"][0][0] for f in sampled)
+        return [(m["n_frames"], m["width"], m["height"], m["fps"],
+                 len(sampled), val_sum)]
 
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    frac = trunc_fraction(spark)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            avis = [
-                maybe_truncate(synth_mjpeg_avi(i), i, frac) for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "avi": avis})
-
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, avi in zip(pdf["doc_id"], pdf["avi"]):
-
-                def one(avi=avi) -> tuple:
-                    m = parse_avi(bytes(avi))
-                    sampled = sample_frames(m["frames"], 2)
-                    val_sum = sum(
-                        decode_jpeg(f)["pixels"][0][0] for f in sampled
-                    )
-                    return (
-                        m["n_frames"], m["width"], m["height"],
-                        m["fps"], len(sampled), val_sum,
-                    )
-
-                # truncated payload (axis 9) -> error row, never a crash
-                rows.append(row_or_nulls(doc_id, 6, one))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "width", "height", "fps",
-                    "n_sampled", "sampled_val_sum",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, n_frames long, width long, height long, "
-            "fps long, n_sampled long, sampled_val_sum long"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_mjpeg_avi], decode,
+        "doc_id long, n_frames long, width long, height long, "
+        "fps long, n_sampled long, sampled_val_sum long",
     )
 
 
@@ -958,72 +747,18 @@ def multimodal_video_frame_sample(
     "decode mapInPandas pipeline.",
 )
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.png import decode_png
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        row_or_nulls,
-        trunc_fraction,
-    )
 
-    # shared input pipeline (parallelism shuffle rationale at the
-    # helper's docstring)
-    docs = _media_doc_ids(spark, sf_dir)
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    frac = trunc_fraction(spark)
+    def decode(i: int, png: bytes) -> list[tuple]:
+        m = decode_png(png)
+        sums = [sum(px[c] for row in m["pixels"] for px in row) for c in range(3)]
+        return [(m["width"], m["height"], m["width"] * m["height"],
+                 m["n_channels"], *sums)]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            pngs = [
-                maybe_truncate(synth_png_rgb(i), i, frac) for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "png": pngs})
-
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-
-                def one(png=png) -> tuple:
-                    m = decode_png(bytes(png))
-                    sums = [0, 0, 0]
-                    for row in m["pixels"]:
-                        for px in row:
-                            sums[0] += px[0]
-                            sums[1] += px[1]
-                            sums[2] += px[2]
-                    return (
-                        m["width"], m["height"],
-                        m["width"] * m["height"], m["n_channels"],
-                        sums[0], sums[1], sums[2],
-                    )
-
-                # truncated payload (axis 9) -> error row, never a crash
-                rows.append(row_or_nulls(doc_id, 7, one))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "n_channels", "r_sum", "g_sum", "b_sum",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, width long, height long, n_pixels long, "
-            "n_channels long, r_sum long, g_sum long, b_sum long"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_png_rgb], decode,
+        "doc_id long, width long, height long, n_pixels long, "
+        "n_channels long, r_sum long, g_sum long, b_sum long",
     )
 
 
@@ -1057,71 +792,25 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parallelism shuffle, then synth -> decode+resize mapInPandas.",
 )
 def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.imageops import (
         resize_bilinear,
         resize_nearest,
     )
     from ethiopia_legal_etl_spark.functions.png import decode_png
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        row_or_nulls,
-        trunc_fraction,
-    )
 
-    docs = _media_doc_ids(spark, sf_dir)
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    frac = trunc_fraction(spark)
+    def decode(i: int, png: bytes) -> list[tuple]:
+        m = decode_png(png)
+        near = resize_nearest(m["pixels"], 8, 8)
+        # bilinear runs on the same real pixels (tested vs an
+        # independent numpy model); only nearest is emitted because
+        # only it is integer-exact for the oracle
+        resize_bilinear(m["pixels"], 8, 8)
+        return [(m["width"], m["height"], 8, 8, sum(v for row in near for v in row))]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            pngs = [
-                maybe_truncate(synth_png_gray(i), i, frac) for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "png": pngs})
-
-
-    def decode_resize(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-
-                def one(png=png) -> tuple:
-                    m = decode_png(bytes(png))
-                    near = resize_nearest(m["pixels"], 8, 8)
-                    # bilinear runs on the same real pixels (tested vs
-                    # an independent numpy model); only nearest is
-                    # emitted because only it is integer-exact for the
-                    # oracle
-                    resize_bilinear(m["pixels"], 8, 8)
-                    return (
-                        m["width"], m["height"], 8, 8,
-                        sum(v for row in near for v in row),
-                    )
-
-                # truncated payload (axis 9) -> error row, never a crash
-                rows.append(row_or_nulls(doc_id, 5, one))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "in_w", "in_h", "out_w", "out_h",
-                    "resized_sum",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: payloads
-    # built and decoded in the same Python worker — no Arrow round
-    # trip of the PNG bytes (guide §4.1).
-    return docs.mapInPandas(
-        lambda it: decode_resize(synth(it)),
-        schema=(
-            "doc_id long, in_w long, in_h long, out_w long, out_h long, "
-            "resized_sum long"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_png_gray], decode,
+        "doc_id long, in_w long, in_h long, out_w long, out_h long, "
+        "resized_sum long",
     )
 
 
@@ -1166,61 +855,20 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "One parallelism shuffle, then synth -> decode mapInPandas.",
 )
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.g711 import decode_compressed_wav
     from ethiopia_legal_etl_spark.functions.imageops import audio_features
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        row_or_nulls,
-        trunc_fraction,
-    )
 
-    docs = _media_doc_ids(spark, sf_dir)
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    frac = trunc_fraction(spark)
+    def decode(i: int, wav: bytes) -> list[tuple]:
+        m = decode_compressed_wav(wav)
+        f = audio_features(m["samples"])
+        return [(m["n_samples"], f["energy"], f["zero_crossings"], f["peak"])]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            # same mu-law object formula as audio_compressed — shared
-            # module-level synth, so the fuzz covers both entries
-            wavs = [maybe_truncate(synth_mu_wav(i), i, frac) for i in ids]
-            yield pd.DataFrame({"doc_id": ids, "wav": wavs})
-
-
-    def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf["doc_id"], pdf["wav"]):
-
-                def one(wav=wav) -> tuple:
-                    m = decode_compressed_wav(bytes(wav))
-                    f = audio_features(m["samples"])
-                    return (
-                        m["n_samples"], f["energy"],
-                        f["zero_crossings"], f["peak"],
-                    )
-
-                # truncated payload (axis 9) -> error row, never a crash
-                rows.append(row_or_nulls(doc_id, 4, one))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "energy",
-                    "zero_crossings", "peak",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: payloads
-    # built and decoded in the same Python worker — no Arrow round
-    # trip of the WAV bytes (guide §4.1).
-    return docs.mapInPandas(
-        lambda it: features(synth(it)),
-        schema=(
-            "doc_id long, n_samples long, energy long, "
-            "zero_crossings long, peak long"
-        ),
+    # same mu-law object formula as audio_compressed: one module-level
+    # synth, so the fuzz covers both entries
+    return synth_decode(
+        spark, sf_dir, [synth_mu_wav], decode,
+        "doc_id long, n_samples long, energy long, "
+        "zero_crossings long, peak long",
     )
 
 
@@ -1282,73 +930,20 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Python-side within the already-grouped frame).",
 )
 def multimodal_decode_mpeg1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.mpeg1 import parse_layer1
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        trunc_fraction,
-    )
 
-    docs = _media_doc_ids(spark, sf_dir)
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    frac = trunc_fraction(spark)
+    def decode(i: int, frame: bytes) -> list[tuple]:
+        (f,) = parse_layer1(frame)
+        return [
+            (s["subband"], s["nb"], s["scf_index"], sum(s["codes"]),
+             s["values"][0], min(s["values"]), max(s["values"]))
+            for s in f["subbands"]
+        ]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            frames = [
-                maybe_truncate(synth_l1_frame(i), i, frac) for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "frame": frames})
-
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, frame in zip(pdf["doc_id"], pdf["frame"]):
-                # truncated frame (axis 9) -> ONE error row for the
-                # whole object (its subband rows are unrecoverable),
-                # never an executor crash
-                try:
-                    (f,) = parse_layer1(bytes(frame))
-                except ValueError:
-                    rows.append((doc_id,) + (None,) * 7)
-                    continue
-                for s in f["subbands"]:
-                    rows.append(
-                        (
-                            doc_id,
-                            s["subband"],
-                            s["nb"],
-                            s["scf_index"],
-                            sum(s["codes"]),
-                            s["values"][0],
-                            min(s["values"]),
-                            max(s["values"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "subband", "nb", "scf_index",
-                    "code_sum", "v_first", "v_min", "v_max",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, subband long, nb long, scf_index long, "
-            "code_sum long, v_first double, v_min double, v_max double"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_l1_frame], decode,
+        "doc_id long, subband long, nb long, scf_index long, "
+        "code_sum long, v_first double, v_min double, v_max double",
     )
 
 
@@ -1443,72 +1038,20 @@ def multimodal_decode_mpeg1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repartition of bare doc_ids, then synth -> parse mapInPandas.",
 )
 def multimodal_decode_mpeg1_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.mpeg1 import parse_layer2
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        trunc_fraction,
-    )
 
-    docs = _media_doc_ids(spark, sf_dir)
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    frac = trunc_fraction(spark)
+    def decode(i: int, frame: bytes) -> list[tuple]:
+        (f,) = parse_layer2(frame)
+        return [
+            (s["subband"], s["levels"], s["scfsi"], sum(s["codes"]),
+             s["values"][0], min(s["values"]), max(s["values"]))
+            for s in f["subbands"]
+        ]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            frames = [
-                maybe_truncate(synth_l2_frame(i), i, frac) for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "frame": frames})
-
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, frame in zip(pdf["doc_id"], pdf["frame"]):
-                # truncated frame (axis 9) -> ONE error row for the
-                # whole object, never an executor crash
-                try:
-                    (f,) = parse_layer2(bytes(frame))
-                except ValueError:
-                    rows.append((doc_id,) + (None,) * 7)
-                    continue
-                for s in f["subbands"]:
-                    rows.append(
-                        (
-                            doc_id,
-                            s["subband"],
-                            s["levels"],
-                            s["scfsi"],
-                            sum(s["codes"]),
-                            s["values"][0],
-                            min(s["values"]),
-                            max(s["values"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "subband", "levels", "scfsi",
-                    "code_sum", "v_first", "v_min", "v_max",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, subband long, levels long, scfsi long, "
-            "code_sum long, v_first double, v_min double, v_max double"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_l2_frame], decode,
+        "doc_id long, subband long, levels long, scfsi long, "
+        "code_sum long, v_first double, v_min double, v_max double",
     )
 
 
@@ -1613,70 +1156,22 @@ def multimodal_decode_mpeg1_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mapInPandas; two rows per doc, no further shuffle.",
 )
 def multimodal_mp3_sideinfo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ethiopia_legal_etl_spark.functions.mp3 import parse_layer3
-    from ethiopia_legal_etl_spark.functions.transport import (
-        maybe_truncate,
-        trunc_fraction,
-    )
 
-    docs = _media_doc_ids(spark, sf_dir)
-    # axis 9 (functions/transport.py): conf-gated deterministic cuts
-    frac = trunc_fraction(spark)
+    def decode(i: int, mp3: bytes) -> list[tuple]:
+        (f,) = parse_layer3(mp3)
+        return [
+            (gr, g["global_gain"], g["scalefac_compress"], g["slen1"],
+             g["slen2"], g["part2_3_length"], g["preflag"],
+             g["scalefac_scale"], sum(g["scalefactors"]),
+             min(g["scalefactors"]), max(g["scalefactors"]))
+            for gr, g in enumerate(f["granules"])
+        ]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            streams = [
-                maybe_truncate(synth_mp3_stream(i), i, frac) for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "mp3": streams})
-
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, mp3 in zip(pdf["doc_id"], pdf["mp3"]):
-                # truncated stream (axis 9) -> ONE error row for the
-                # whole object, never an executor crash
-                try:
-                    (f,) = parse_layer3(bytes(mp3))
-                except ValueError:
-                    rows.append((doc_id,) + (None,) * 11)
-                    continue
-                for gr, g in enumerate(f["granules"]):
-                    sfs = g["scalefactors"]
-                    rows.append(
-                        (
-                            doc_id, gr, g["global_gain"],
-                            g["scalefac_compress"], g["slen1"], g["slen2"],
-                            g["part2_3_length"], g["preflag"],
-                            g["scalefac_scale"], sum(sfs), min(sfs), max(sfs),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "gr", "global_gain", "scalefac_compress",
-                    "slen1", "slen2", "part2_3_length", "preflag",
-                    "scalefac_scale", "sf_sum", "sf_min", "sf_max",
-                ],
-            )
-
-    # ONE fused mapInPandas stage: the
-    # synthesized payloads are built and decoded inside the same
-    # Python worker, so the binary bytes never cross the Arrow
-    # boundary (guide §4.1; the warc_to_text precedent — fusion
-    # measured 1.06→0.71 s on decode_mpeg1 at sf0.1). The FILE-based
-    # decode path, where payloads genuinely arrive as column bytes,
-    # stays exercised by multimodal_decode_stub / binary_meta.
-    return docs.mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=(
-            "doc_id long, gr long, global_gain long, "
-            "scalefac_compress long, slen1 long, slen2 long, "
-            "part2_3_length long, preflag long, scalefac_scale long, "
-            "sf_sum long, sf_min long, sf_max long"
-        ),
+    return synth_decode(
+        spark, sf_dir, [synth_mp3_stream], decode,
+        "doc_id long, gr long, global_gain long, "
+        "scalefac_compress long, slen1 long, slen2 long, "
+        "part2_3_length long, preflag long, scalefac_scale long, "
+        "sf_sum long, sf_min long, sf_max long",
     )

@@ -19,6 +19,7 @@ by lang without a second shuffle (lang is constant per row).
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ethiopia_legal_etl_spark.operators.corpusops import _KNUTH, knuth_bucket
 from ethiopia_legal_etl_spark.operators.registry import register
 from ethiopia_legal_etl_spark.sources.tables import load_table
 
@@ -168,15 +169,14 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the corpus -> downsampled hardest; zh kept whole)
 _STRATA_RATES = {"en": 0.25, "zh": 1.0}
 _STRATA_DEFAULT = 0.5
-_KNUTH = 2654435761  # multiplicative hash constant, exact in int64
 
 
 @register(
     "corpus_stratified_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang, source
     FROM documents
-    WHERE (doc_id % 1000000007) * 2654435761 % 1000000
+    WHERE (doc_id % 1000000007) * {_KNUTH} % 1000000
           < CAST(1000000 * (CASE WHEN lang = 'en' THEN 0.25
                                  WHEN lang = 'zh' THEN 1.0
                                  ELSE 0.5 END) AS BIGINT)
@@ -193,7 +193,7 @@ _KNUTH = 2654435761  # multiplicative hash constant, exact in int64
 )
 def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (F.col("doc_id") % 1000000007) * F.lit(_KNUTH) % 1000000
+    bucket = knuth_bucket(F.col("doc_id"), 1000000)
     rate = F.when(F.col("lang") == "en", F.lit(_STRATA_RATES["en"]))
     for lang, r in _STRATA_RATES.items():
         if lang != "en":

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ethiopia_legal_etl_spark.operators.corpusops import _KNUTH, knuth_bucket
 from ethiopia_legal_etl_spark.operators.registry import register
 from ethiopia_legal_etl_spark.operators.similarity import (
     EMB_OK_SQL,
@@ -234,7 +235,6 @@ def dedup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 _N_SHARDS = 8
-_KNUTH = 2654435761  # multiplicative hash constant, exact in int64
 
 
 @register(
@@ -274,7 +274,7 @@ _KNUTH = 2654435761  # multiplicative hash constant, exact in int64
 )
 def shard_export_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    shard = (F.col("doc_id") % 1000000007) * F.lit(_KNUTH) % _N_SHARDS
+    shard = knuth_bucket(F.col("doc_id"), _N_SHARDS)
     sized = docs.select(
         shard.alias("shard"),
         F.size(F.split("text", " ")).alias("n_tokens"),
@@ -671,7 +671,7 @@ def corpus_dsir_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = dsir_doc_scores(deduped)
     kept = scored.where(F.expr("score DIV n_toks") > F.col("thresh"))
-    shard = (F.col("doc_id") % 1000000007) * F.lit(_KNUTH) % _N_SHARDS
+    shard = knuth_bucket(F.col("doc_id"), _N_SHARDS)
     return kept.groupBy(shard.alias("shard")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_toks").alias("n_tokens_kept"),

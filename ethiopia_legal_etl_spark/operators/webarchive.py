@@ -20,6 +20,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ethiopia_legal_etl_spark.operators.multimodal import _media_doc_ids
 from ethiopia_legal_etl_spark.operators.registry import register
 from ethiopia_legal_etl_spark.sources.tables import load_table
 
@@ -85,11 +86,7 @@ def warc_ingest_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ethiopia_legal_etl_spark.sources.warc import parse_warc
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _media_doc_ids(spark, sf_dir)
     # axis 9 (functions/transport.py): conf-gated deterministic cuts —
     # THIS is the entry that models archives at rest (the bytes cross
     # the Arrow boundary between stages); warc_to_text_pipeline's
@@ -181,33 +178,16 @@ def warc_ingest_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def warc_ingest_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from ethiopia_legal_etl_spark.sources.warc import parse_warc, write_warc
+    from ethiopia_legal_etl_spark.sources.warc import parse_warc
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _media_doc_ids(spark, sf_dir)
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf["doc_id"].tolist()
             archives = []
             for d in ids:
-                recs = [
-                    {
-                        "type": "response",
-                        "uri": f"http://site{d % 10}.example/{i}",
-                        "date": "2026-01-01T00:00:00Z",
-                        "payload": bytes(
-                            (d * 7 + j) % 256
-                            for j in range(20 + (d + i) % 30)
-                        ),
-                        "record_id": f"{d}-{i}",
-                    }
-                    for i in range(2 + d % 4)
-                ]
-                raw = write_warc(recs, compress=True)
+                raw = synth_warc_archive(d)
                 if d % 7 == 0:
                     raw = raw[: len(raw) - 15]  # truncate mid-member
                 archives.append(raw)
@@ -232,8 +212,6 @@ def warc_ingest_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract,
         schema="doc_id long, ok boolean, n_records long, error string",
     )
-    from pyspark.sql import functions as F
-
     return parsed.select(
         "doc_id", "ok", "n_records", F.col("error").isNotNull().alias("has_error")
     )

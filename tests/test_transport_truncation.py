@@ -32,6 +32,7 @@ defaults off.
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import pytest
 
@@ -216,6 +217,61 @@ def test_row_or_nulls_contract():
         row_or_nulls(7, 3, lambda: {}["missing"])
 
 
+def _stub_synth(i: int) -> bytes:
+    return bytes([i % 256]) * (1 + i % 3)
+
+
+def _stub_decode(i: int, a: bytes, b: bytes):
+    """One row per payload byte; a doc_id divisible by 5 yields its
+    rows and THEN raises, like a frame that is corrupt past its first
+    subbands."""
+    for k in range(len(a)):
+        yield (k, a[k] + b[k])
+    if i % 5 == 0:
+        raise ValueError("corrupt past the first rows")
+
+
+def _buggy_decode(i: int, a: bytes) -> list[tuple]:
+    return [({}["missing"],)]
+
+
+def test_synth_decode_error_rule(spark, sf_dir):
+    """synth_decode's contract: rows carry doc_id first, a ValueError
+    from a multi-row decode leaves exactly ONE all-NULL row for that
+    doc (no partial rows), and any other exception fails the job."""
+    from collections import defaultdict
+
+    from ethiopia_legal_etl_spark.operators.multimodal import synth_decode
+    from ethiopia_legal_etl_spark.sources.tables import load_table
+
+    rows = synth_decode(
+        spark, sf_dir, [_stub_synth, _stub_synth], _stub_decode,
+        "doc_id long, k long, v long",
+    ).collect()
+    assert list(rows[0].asDict()) == ["doc_id", "k", "v"]
+    by_doc = defaultdict(list)
+    for r in rows:
+        by_doc[r["doc_id"]].append(tuple(r))
+    ids = {
+        r["doc_id"]
+        for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
+    }
+    assert set(by_doc) == ids
+    assert any(d % 5 == 0 for d in ids) and any(d % 5 for d in ids)
+    for d, got in by_doc.items():
+        if d % 5 == 0:
+            assert got == [(d, None, None)]
+        else:
+            assert sorted(got) == [
+                (d, k, 2 * (d % 256)) for k in range(1 + d % 3)
+            ]
+
+    with pytest.raises(Exception, match="KeyError"):
+        synth_decode(
+            spark, sf_dir, [_stub_synth], _buggy_decode, "doc_id long, x long"
+        ).collect()
+
+
 # ---------------------------------------------------------------- #
 # Contract 2: entry-level sweep
 # ---------------------------------------------------------------- #
@@ -274,6 +330,12 @@ def test_media_entry_survives_truncated_payloads(spark, sf_dir, name):
     )
     # every doc_id still accounted for
     assert {r["doc_id"] for r in rows} == {r["doc_id"] for r in clean}
+    # a corrupt object is exactly ONE row: no partial subband or
+    # granule rows survive a corrupt frame
+    n_rows = Counter(r["doc_id"] for r in rows)
+    assert all(n_rows[d] == 1 for d in err_ids), (
+        f"{name}: error docs with extra rows"
+    )
     # healthy rows are byte-identical to the clean run's rows
     clean_ok = sorted(
         tuple(r) for r in clean if r["doc_id"] not in err_ids
