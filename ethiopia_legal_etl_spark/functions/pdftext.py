@@ -21,10 +21,15 @@ subset those files need, from the public PDF 1.7 spec (ISO 32000-1):
 
 Not a general PDF library: no encryption, no LZW/ASCII filters, no
 predictors on content streams, no Type3 fonts — none of which the
-reference corpus uses. Scale note: runs inside the ingest pipeline's
-Arrow-batched per-URL pass (mapInPandas), one document per row, so the
-cost model is identical to the injected-extractor path; nothing here
-touches the driver.
+reference corpus uses.
+
+Cost model: it runs inside the ingest pipeline's per-URL mapInPandas
+pass, one document per call, and never touches the driver. Time is
+linear in the file size: every tokenizer regex matches at an offset
+into the one buffer, never on a copy of its tail. Each font object's
+ToUnicode CMap is parsed once per document, not once per page that
+uses it, and a 1-byte font decodes a string through a 256-entry table
+in one call, not one codec call per byte.
 """
 
 from __future__ import annotations
@@ -36,8 +41,15 @@ import zlib
 # low-level object parsing
 # ---------------------------------------------------------------------
 
-_WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
+_WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*")
+_NUM_RE = re.compile(rb"[+-]?\d*\.?\d+")
+_REF_RE = re.compile(rb"\s+(\d+)\s+R\b")
+_NAME_RE = re.compile(rb"/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)")
+_NAME_ESC_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
+_HEX_WS_RE = re.compile(rb"\s")
+# a run of literal-string bytes that need no escape or depth handling
+_LITERAL_RUN_RE = re.compile(rb"[^()\\]+")
+_ESCAPES = {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}
 
 
 class _Ref:
@@ -51,17 +63,18 @@ class _Ref:
 
 
 def _skip_ws(data: bytes, i: int) -> int:
-    n = len(data)
-    while i < n:
-        c = data[i]
-        if c in _WS:
-            i += 1
-        elif c == 0x25:  # % comment to EOL
-            while i < n and data[i] not in b"\r\n":
-                i += 1
-        else:
-            break
-    return i
+    """Offset of the first byte at or after i that is neither white
+    space nor inside a % comment (which runs to the end of its line)."""
+    return _WS_RE.match(data, i).end()
+
+
+def _parse_hex_string(data: bytes, i: int):
+    """The <...> hex string at offset i; an odd digit count pads a 0."""
+    j = data.index(b">", i)
+    hexs = _HEX_WS_RE.sub(b"", data[i + 1 : j])
+    if len(hexs) % 2:
+        hexs += b"0"
+    return bytes.fromhex(hexs.decode("ascii")), j + 1
 
 
 def _parse_value(data: bytes, i: int):
@@ -71,11 +84,7 @@ def _parse_value(data: bytes, i: int):
     if c == b"<":
         if data[i : i + 2] == b"<<":
             return _parse_dict(data, i)
-        j = data.index(b">", i)
-        hexs = re.sub(rb"\s", b"", data[i + 1 : j])
-        if len(hexs) % 2:
-            hexs += b"0"
-        return bytes.fromhex(hexs.decode("ascii")), j + 1
+        return _parse_hex_string(data, i)
     if c == b"[":
         out = []
         i += 1
@@ -86,15 +95,11 @@ def _parse_value(data: bytes, i: int):
             v, i = _parse_value(data, i)
             out.append(v)
     if c == b"/":
-        j = i + 1
-        while j < len(data) and data[j] not in _WS and data[j] not in _DELIM:
-            j += 1
-        name = data[i + 1 : j]
-        # #xx hex escapes in names
-        name = re.sub(
-            rb"#([0-9A-Fa-f]{2})", lambda m: bytes.fromhex(m.group(1).decode()), name
-        )
-        return ("/", name.decode("latin-1")), j
+        m = _NAME_RE.match(data, i)
+        name = m.group(1)
+        if b"#" in name:  # #xx hex escapes in names
+            name = _NAME_ESC_RE.sub(lambda e: bytes.fromhex(e.group(1).decode()), name)
+        return ("/", name.decode("latin-1")), m.end()
     if c == b"(":
         return _parse_literal_string(data, i)
     if data[i : i + 4] == b"true":
@@ -104,15 +109,16 @@ def _parse_value(data: bytes, i: int):
     if data[i : i + 4] == b"null":
         return None, i + 4
     # number, possibly an `N G R` indirect reference
-    m = re.match(rb"[+-]?\d*\.?\d+", data[i:])
+    m = _NUM_RE.match(data, i)
     if not m:
         raise ValueError(f"pdf parse error at {i}: {data[i:i+20]!r}")
     tok = m.group(0)
-    j = i + len(tok)
+    j = m.end()
     if b"." not in tok:
-        r = re.match(rb"\s+(\d+)\s+R\b", data[j : j + 16])
+        # the generation and R must follow within 16 bytes
+        r = _REF_RE.match(data, j, j + 16)
         if r:
-            return _Ref(int(tok)), j + r.end()
+            return _Ref(int(tok)), r.end()
         return int(tok), j
     return float(tok), j
 
@@ -138,11 +144,16 @@ def _parse_literal_string(data: bytes, i: int):
     i += 1
     n = len(data)
     while i < n:
+        run = _LITERAL_RUN_RE.match(data, i)
+        if run:
+            out += run.group()
+            i = run.end()
+            continue
         c = data[i]
         if c == 0x5C:  # backslash
             nxt = data[i + 1]
             if nxt in b"nrtbf":
-                out.append({0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}[nxt])
+                out.append(_ESCAPES[nxt])
                 i += 2
             elif nxt in b"()\\":
                 out.append(nxt)
@@ -162,17 +173,10 @@ def _parse_literal_string(data: bytes, i: int):
             else:
                 out.append(nxt)
                 i += 2
-        elif c == 0x28:
-            depth += 1
-            out.append(c)
-            i += 1
-        elif c == 0x29:
-            depth -= 1
+        else:
+            depth += 1 if c == 0x28 else -1
             if depth == 0:
                 return bytes(out), i + 1
-            out.append(c)
-            i += 1
-        else:
             out.append(c)
             i += 1
     raise ValueError("unterminated string")
@@ -248,6 +252,7 @@ def _scan_objects(data: bytes) -> dict[int, tuple[dict | object, bytes | None]]:
 class _Doc:
     def __init__(self, data: bytes):
         self.objects = _scan_objects(data)
+        self.font_maps: dict[int, _FontMap] = {}  # font object number -> map
 
     def resolve(self, v):
         seen = 0
@@ -317,26 +322,43 @@ class _Doc:
 # ---------------------------------------------------------------------
 
 _BF_HEX = re.compile(rb"<([0-9A-Fa-f]+)>")
+# WinAnsi text of each byte; an undefined byte (0x81, ...) reads U+FFFD
+_CP1252 = bytes(range(256)).decode("cp1252", "replace")
 
 
 class _FontMap:
-    """code(int) -> str mapping plus the code width in bytes."""
+    """Decodes a font's string operands: ToUnicode text per code, else
+    WinAnsi for a simple font's low byte; an unmapped CID is dropped (no
+    glyph-name fallback in scope).
+
+    1-byte codes decode through a 256-entry table built here; wider
+    codes look up ``cmap`` one code at a time."""
 
     def __init__(self, code_bytes: int, cmap: dict[int, str] | None, simple: bool):
         self.code_bytes = code_bytes
-        self.cmap = cmap
+        self.cmap = cmap or {}
         self.simple = simple
+        if code_bytes == 1:
+            table = list(_CP1252) if simple else [""] * 256
+            for code, text in self.cmap.items():
+                if code < 256:
+                    table[code] = text
+            self.table = table
 
     def decode(self, raw: bytes) -> str:
-        out: list[str] = []
         w = self.code_bytes
+        if w == 1:
+            # latin-1 maps byte b to code point b, the table's index
+            return raw.decode("latin-1").translate(self.table)
+        cmap = self.cmap
+        out: list[str] = []
         for k in range(0, len(raw) - (len(raw) % w), w):
             code = int.from_bytes(raw[k : k + w], "big")
-            if self.cmap is not None and code in self.cmap:
-                out.append(self.cmap[code])
+            text = cmap.get(code)
+            if text is not None:
+                out.append(text)
             elif self.simple:
-                out.append(bytes([code & 0xFF]).decode("cp1252", "replace"))
-            # unmapped CID: drop (no glyph-name fallback in scope)
+                out.append(_CP1252[code & 0xFF])
         return "".join(out)
 
 
@@ -381,23 +403,31 @@ def _parse_tounicode(cmap_bytes: bytes) -> tuple[int, dict[int, str]]:
     return code_bytes, table
 
 
+def _font_map(doc: _Doc, fdict: dict) -> _FontMap:
+    is_type0 = fdict.get("Subtype") == ("/", "Type0")
+    tounicode = fdict.get("ToUnicode")
+    if tounicode is None:
+        return _FontMap(2 if is_type0 else 1, None, simple=not is_type0)
+    code_bytes, table = _parse_tounicode(doc.stream_bytes(tounicode))
+    return _FontMap(code_bytes, table, simple=not is_type0)
+
+
 def _font_maps(doc: _Doc, page: dict) -> dict[str, _FontMap]:
+    """The page's font resources by name. A font object's map is built
+    once per document and shared by every page that uses it."""
     res = doc.resolve(page.get("Resources")) or {}
     fonts = doc.resolve(res.get("Font")) or {}
     out: dict[str, _FontMap] = {}
     for name, fref in fonts.items():
+        if isinstance(fref, _Ref) and fref.num in doc.font_maps:
+            out[name] = doc.font_maps[fref.num]
+            continue
         fdict = doc.resolve(fref)
         if not isinstance(fdict, dict):
             continue
-        subtype = fdict.get("Subtype")
-        is_type0 = subtype == ("/", "Type0")
-        tounicode = fdict.get("ToUnicode")
-        if tounicode is not None:
-            raw = doc.stream_bytes(tounicode)
-            code_bytes, table = _parse_tounicode(raw)
-            out[name] = _FontMap(code_bytes, table, simple=not is_type0)
-        else:
-            out[name] = _FontMap(2 if is_type0 else 1, None, simple=not is_type0)
+        out[name] = _font_map(doc, fdict)
+        if isinstance(fref, _Ref):
+            doc.font_maps[fref.num] = out[name]
     return out
 
 
@@ -405,7 +435,9 @@ def _font_maps(doc: _Doc, page: dict) -> dict[str, _FontMap]:
 # content-stream text extraction
 # ---------------------------------------------------------------------
 
-_OP_RE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
+# a number operand (group 1), else an operator
+_TOKEN_RE = re.compile(rb"([+-]?\d*\.?\d+)|[A-Za-z'\"][A-Za-z0-9*'\"]*")
+_BLANK_LINES_RE = re.compile(r"\n{2,}")
 
 
 def _page_text(doc: _Doc, page: dict, fonts: dict[str, _FontMap]) -> str:
@@ -436,29 +468,23 @@ def _page_text(doc: _Doc, page: dict, fonts: dict[str, _FontMap]) -> str:
             stack.append(s)
             continue
         if c == b"<" and data[i : i + 2] != b"<<":
-            j = data.index(b">", i)
-            hexs = re.sub(rb"\s", b"", data[i + 1 : j])
-            if len(hexs) % 2:
-                hexs += b"0"
-            stack.append(bytes.fromhex(hexs.decode("ascii")))
-            i = j + 1
+            s, i = _parse_hex_string(data, i)
+            stack.append(s)
             continue
         if c == b"<" or c == b"[" or c == b"/":
             v, i = _parse_value(data, i)
             stack.append(v)
             continue
-        m = re.match(rb"[+-]?\d*\.?\d+", data[i:])
-        if m:
-            tok = m.group(0)
-            stack.append(float(tok) if b"." in tok else int(tok))
-            i += len(tok)
-            continue
-        m = _OP_RE.match(data, i)
+        m = _TOKEN_RE.match(data, i)
         if not m:
             i += 1
             continue
-        op = m.group(0)
         i = m.end()
+        num = m.group(1)
+        if num is not None:
+            stack.append(float(num) if b"." in num else int(num))
+            continue
+        op = m.group(0)
         if op == b"BT":
             in_text = True
         elif op == b"ET":
@@ -494,8 +520,7 @@ def _page_text(doc: _Doc, page: dict, fonts: dict[str, _FontMap]) -> str:
             i = n if end < 0 else end + 2
         stack.clear()
     # collapse the newline-per-Td artifacts: runs of blank lines -> one
-    text = "".join(out)
-    text = re.sub(r"\n{2,}", "\n", text)
+    text = _BLANK_LINES_RE.sub("\n", "".join(out))
     return text.strip("\n")
 
 
@@ -506,8 +531,6 @@ def extract_pages(body: bytes) -> list[str]:
     Raises ValueError if the bytes are not a parseable PDF (per-record
     error isolation upstream turns that into an `error` column, A-19).
     """
-    import zlib
-
     if not body.lstrip()[:5].startswith(b"%PDF-"):
         raise ValueError("not a PDF: missing %PDF- header")
     # malformed structures surface as IndexError (e.g. a trailing

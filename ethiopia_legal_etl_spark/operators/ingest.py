@@ -22,6 +22,7 @@ requirements.txt, may be absent here — SURVEY.md §7 hard-part (a)).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, Observation
@@ -51,31 +52,47 @@ def default_fetcher(url: str) -> tuple[int, str, bytes]:
     return resp.status_code, resp.headers.get("Content-Type", ""), resp.content
 
 
-def default_extractor(body: bytes) -> list[str]:
-    """pdfplumber first, PyMuPDF second (reference requirements.txt has
-    both), then the engine's dependency-free pure-Python extractor
-    (functions/pdftext.py — FlateDecode text objects + ToUnicode CMaps,
-    sufficient for the reference's own fixtures vol01/vol02.pdf and
-    golden-tested against them)."""
+@functools.cache
+def _extractor_backend() -> Extractor:
+    """The first importable of pdfplumber, PyMuPDF (the reference's
+    requirements.txt has both) and the engine's dependency-free
+    pure-Python extractor (functions/pdftext.py — FlateDecode text
+    objects + ToUnicode CMaps, enough for the reference's own fixtures
+    vol01/vol02.pdf and golden-tested against them). Chosen once per
+    process: Python does not cache a failed import, so trying the
+    imports per PDF would search sys.path again for each one."""
     try:
+        import pdfplumber
+    except ImportError:
+        pass
+    else:
         import io
 
-        import pdfplumber
+        def plumber_pages(body: bytes) -> list[str]:
+            with pdfplumber.open(io.BytesIO(body)) as pdf:
+                return [p.extract_text() or "" for p in pdf.pages]
 
-        with pdfplumber.open(io.BytesIO(body)) as pdf:
-            return [p.extract_text() or "" for p in pdf.pages]
-    except ImportError:
-        pass
+        return plumber_pages
     try:
         import fitz  # PyMuPDF
-
-        with fitz.open(stream=body, filetype="pdf") as doc:
-            return [page.get_text() for page in doc]
     except ImportError:
         pass
+    else:
+
+        def fitz_pages(body: bytes) -> list[str]:
+            with fitz.open(stream=body, filetype="pdf") as doc:
+                return [page.get_text() for page in doc]
+
+        return fitz_pages
     from ethiopia_legal_etl_spark.functions.pdftext import extract_pages
 
-    return extract_pages(body)
+    return extract_pages
+
+
+def default_extractor(body: bytes) -> list[str]:
+    """Page texts of one PDF through the process's extractor backend:
+    pdfplumber, else PyMuPDF, else the pure-Python extractor."""
+    return _extractor_backend()(body)
 
 
 def incremental_skip(links: DataFrame, done_base_names: DataFrame) -> DataFrame:

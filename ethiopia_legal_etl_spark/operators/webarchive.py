@@ -397,11 +397,7 @@ def robots_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "/docs/file.pdf", "/data/set1",
     ]
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _media_doc_ids(spark, sf_dir)
 
     def gate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -453,11 +449,7 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ethiopia_legal_etl_spark.functions.text import canonicalize_url
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _media_doc_ids(spark, sf_dir)
 
     def canon(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
